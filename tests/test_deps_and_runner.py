@@ -132,6 +132,48 @@ def test_run_task_writes_xcom(spark, tmp_path, engine_src):
     assert payload["monitoring"]["slot_millis"] > 0  # status store reachable
 
 
+def test_xcom_counts_each_tasks_own_jobs(spark, tmp_path, engine_src):
+    """Two tasks in one session: each xcom reports the jobs that task
+    ran, not the session's running total, and a task's job group
+    (set for labels) is cleared when it returns."""
+    from transformers_spark.runner import run_task
+
+    eng, src_fqn = engine_src
+    dest = "g-project.playground.runner_jobs_dest"
+    eng.catalog.create_table(dest, [("event_date", "date"), ("n", "bigint")])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None)) | set(
+            tracker.getJobIdsForGroup("transformers-spark")
+        )
+
+    for i, labels in enumerate(({}, {"team": "data"})):
+        cfg = TaskConfig(
+            "g-project", "playground", "runner_jobs_dest", LoadMethod.REPLACE,
+            labels=labels,
+        )
+        xcom = tmp_path / f"xcom{i}.json"
+        before = job_ids()
+        run_task(
+            spark,
+            cfg,
+            f"select date(ts) as event_date, count(1) as n from `{src_fqn}` "
+            "where ts >= '__dstart__' and ts < '__dend__' group by date(ts)",
+            "2024-01-01",
+            "2024-01-03",
+            "2024-02-01T00:00:00Z",
+            xcom_path=str(xcom),
+            engine=eng,
+        )
+        own = job_ids() - before
+        reported = json.loads(xcom.read_text())["monitoring"]["spark_jobs"]
+        assert reported == len(own) > 0, (reported, sorted(own))
+        assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
 def test_runner_udf_registry_federated_sample(spark, engine_src):
     """The federated_table sample: CREATE TEMP FUNCTION LANGUAGE js →
     engine maps the name to the registered Python impl."""

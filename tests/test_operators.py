@@ -1086,6 +1086,30 @@ def test_temperature_sample_excludes_null_strata(spark):
     assert kept.filter(F.col("source").isNull()).count() == 0
 
 
+def test_token_budget_rates_exact_beyond_int64(spark):
+    """budget x weight above 2^63: each stratum's keep-rate must equal
+    the Python-int rate; bigint arithmetic would wrap."""
+    from transformers_spark.operators.curation import _salted_bucket, token_budget_sample
+
+    rows = [(i, "a" if i % 2 else "b", 2**56 if i % 2 else 3) for i in range(200)]
+    df = spark.createDataFrame(rows, "doc_id bigint, src string, n_tokens bigint")
+    weights, budget = {"a": 3, "b": 1}, 2**61
+    assert 10000 * budget * weights["a"] > 2**63
+    tok = {s: sum(n for _, t, n in rows if t == s) for s in weights}
+    rate = {
+        s: min(10000, 10000 * budget * w // (sum(weights.values()) * tok[s]))
+        for s, w in weights.items()
+    }
+    assert 0 < rate["a"] < 10000 and rate["b"] == 10000
+    bucket = {
+        r["doc_id"]: r["b"]
+        for r in df.select("doc_id", _salted_bucket("budget:", "doc_id").alias("b")).collect()
+    }
+    want = sorted(d for d, s, _ in rows if bucket[d] < rate[s])
+    got = sorted(r["doc_id"] for r in token_budget_sample(df, "src", weights, budget).collect())
+    assert got == want
+
+
 def test_token_budget_rejects_nonpositive_weights():
     import pytest as _pytest
 

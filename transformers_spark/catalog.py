@@ -225,17 +225,7 @@ class Catalog:
             return self._meta[fqn]
         name = self.spark_name(fqn)
         if not self.spark.catalog.tableExists(name):
-            # a rename-swap killed between its two renames leaves the
-            # name absent but the original table intact under
-            # <name>__old_<hex8> — adopt it (zero-copy rename back)
-            # before declaring the table missing (loaders.py crash
-            # contract; the import is lazy to avoid a module cycle)
-            from .loaders import adopt_interrupted_swap
-
-            if not adopt_interrupted_swap(self.spark, name):
-                raise ValueError(
-                    f"table not found: {fqn} (spark name {name})"
-                )
+            raise ValueError(f"table not found: {fqn} (spark name {name})")
         props = {
             row["key"]: row["value"]
             for row in self._run_ddl(f"SHOW TBLPROPERTIES {_q(name)}").collect()

@@ -1,7 +1,7 @@
 """DML emulation: MERGE / DELETE over plain Parquet tables.
 
 Vanilla Spark has no MERGE/DELETE for Parquet; the engine emulates
-them with join rewrites + staged overwrite. Grammar covers the
+them with join rewrites + a whole-result rewrite. Grammar covers the
 reference corpus (reference: executor/samples/tasks/dml/query.sql,
 samples/tasks/delete/query.sql, and the generated delete+insert
 templates in executor/bumblebee/query.py:6-62):
@@ -20,7 +20,7 @@ Execution keys every target row with a row id, resolves matched
 when one target row would be updated/deleted by multiple source rows
 (BigQuery parity), and re-emits untouched rows via one anti-join on
 the compact row-id set; the final result replaces the target through
-a staging table.
+the writer's version-directory commit (loaders.py).
 """
 
 from __future__ import annotations
@@ -471,10 +471,9 @@ def execute_merge(
 
     meta = catalog.get_table(fqn)
     with table_write_lock(meta.spark_name):
-        # re-run detection BEFORE the plan captures the destination's
-        # file listing: a surviving __bak_ snapshot means a previous
-        # load died mid-swap and the destination needs restoring first
-        writer._restore_pending_backup(meta)
+        # finish an interrupted commit BEFORE the plan captures the
+        # destination's file listing
+        writer.prepare(fqn)
         result = build_merge_plan(spark, catalog, writer, stmt, fqn)
         writer.overwrite_from_plan_reading_destination(fqn, result)
     return -1  # affected-row accounting not tracked in round 1

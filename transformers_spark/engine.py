@@ -168,6 +168,10 @@ class Engine:
         method = task_config.load_method
         result = TransformResult(load_method=method, destination=dest, dry_run=dry_run)
         self.writer.reset_rows_written()
+        if method is not LoadMethod.MERGE and not dry_run:
+            # finish the destination's interrupted commit before any
+            # plan below reads it (MERGE scripts' DML does its own)
+            self.writer.prepare(dest)
 
         if method is LoadMethod.MERGE:
             window = CustomWindow(l_dstart, l_dend)
@@ -227,16 +231,15 @@ class Engine:
                 )
 
             # Plan all per-day sub-queries, then write them as ONE
-            # dynamic-partition-overwrite job (the reference fans out N
+            # write job (the reference fans out N
             # concurrent per-partition BQ jobs; in Spark a single union
             # job scans the source once and parallelizes internally, so
             # CONCURRENCY maps to executor parallelism, not driver
             # threads). Orchestrator-level concurrency (a scheduler
-            # running N transforms at once against one table) requires
-            # engine-per-spark.newSession(): the loaders toggle
-            # session-global confs (partitionOverwriteMode) around every
-            # staged swap, so sharing one session across threads could
-            # flip a concurrent overwrite's mode mid-write. Soaked in
+            # running N transforms at once against one table) needs no
+            # session isolation from the loaders: they set no session
+            # conf, each load writes its own version directory and only
+            # the catalog commit serializes (loaders.py). Soaked in
             # tools/concurrency_soak.py; regression in
             # tests/test_concurrency.py.
             day_dfs: dict[date, DataFrame] = {}

@@ -127,10 +127,8 @@ def _cdc_fixture_frames(
 ) -> tuple[DataFrame, DataFrame]:
     """(standing_with_stale, new_batch) — the deterministic CDC
     fixture content: the older 80% of docs' LSH index rows plus a
-    stale row per even-id new doc, and the new batch's fresh rows.
-    Shared by ``_cdc_merge_setup`` and the backup-restore probe
-    (tools/bakrestore100_probe.py), which recomputes the expected
-    pre-crash table content from exactly these frames."""
+    stale row per even-id new doc, and the new batch's fresh rows
+    (materialized by ``_cdc_merge_setup``)."""
     from .operators.dedup import minhash_band_buckets
 
     register_tables(spark, sf_dir, ("documents",))

@@ -2,104 +2,88 @@
 
 Re-expresses the reference's loaders + write dispositions
 (reference: executor/bumblebee/loader.py:24-56, bigquery_service.py:
-96-141) as DataFrameWriter / INSERT OVERWRITE operations over
-``dt``-partitioned Parquet tables:
+96-141) over ``dt``-partitioned Parquet tables:
 
-* append            → WRITE_APPEND
-* overwrite_table   → WRITE_TRUNCATE (whole table)
-* overwrite_partition → partition decorator ``table$YYYYMMDD``
-  (static ``PARTITION (dt=...)`` overwrite — truncates the partition
-  even when the new data is empty)
-* overwrite_dynamic → REPLACE_MERGE "auto": dynamic partition
-  overwrite replaces exactly the partitions present in the result —
-  the Spark-native collapse of the reference's temp-table +
-  ``MERGE ON FALSE`` delete+insert script (reference: query.py:6-39)
-* delete_insert     → REPLACE_MERGE with PARTITION_FILTER: delete
+* append              → WRITE_APPEND
+* overwrite_table     → WRITE_TRUNCATE (whole table)
+* overwrite_partition → partition decorator ``table$YYYYMMDD`` (the
+  day is truncated even when the new data is empty)
+* overwrite_partitions → the multi-day REPLACE fan-out, one job
+* overwrite_dynamic   → REPLACE_MERGE "auto": exactly the days present
+  in the result are replaced — the Spark-native collapse of the
+  reference's temp-table + ``MERGE ON FALSE`` script (reference:
+  query.py:6-39)
+* delete_insert       → REPLACE_MERGE with PARTITION_FILTER: delete
   rows matching the filter, insert all new rows (reference:
   query.py:41-62)
+* delete_where / update_where / overwrite_from_plan_reading_destination
+  → DML emulation (dml.py)
 
-Writes that must read the destination first (delete_insert, DML
-emulation) go through a staging table: Parquet can't be overwritten
-by a plan that scans it.
+Commit protocol — one for every load except APPEND. The load writes its
+new content exactly once, into a fresh version directory
+``<warehouse>/<db>.db/_versions/<table>/<uuid>`` outside the table's
+own root, and commits by changing catalog metadata only: ``ALTER TABLE
+… SET LOCATION`` for an unpartitioned table; for a partitioned one, one
+batched ``ADD PARTITION … LOCATION`` for the new days and one
+``PARTITION (dt=…) SET LOCATION`` per day that already exists. A day
+the load empties is pointed at an empty directory rather than dropped:
+dropping a managed partition deletes files a reader may still scan, and
+a later APPEND of that day would land in the day's old default
+directory and pick its stale files up again. No load ever overwrites
+or deletes a file, so a plan may read the destination it replaces
+without a staging table. APPEND keeps ``insertInto``: it only adds
+files.
 
-Crash/recovery contract for the staged paths (write-then-swap):
+Crash and recovery. Between the version write and the catalog changes
+the commit writes an intent record — ``_versions/<table>/intent.json``,
+through a temporary file and ``os.replace`` — naming the table and its
+new locations; it deletes the record after the last catalog change.
+Applying a record twice is harmless, so:
 
-* killed DURING the stage write — destination untouched; Spark's
-  commit protocol leaves at most a ``_temporary`` dir under the
-  half-written stage table, plus possibly the stage table itself.
-* killed BETWEEN stage write and swap — destination untouched and
-  fully readable; a committed ``<table>__stage_<hex8>`` orphan
-  remains (a real kill never reaches the ``finally`` DROP).
-* killed DURING the swap — the two paths differ:
+* killed during the version write — there is no record; the table is
+  wholly old and the half-written version is garbage.
+* killed after the record is written — before the first catalog
+  change, between two partition changes, or before the record is
+  deleted — the next load of the table (any method, at its entry,
+  under the table lock) or ``Writer.recover()`` rolls the record
+  forward: the table reads wholly new.
 
-  - WHOLE-TABLE staged overwrites of NON-PARTITIONED destinations
-    (``_overwrite_via_stage``) swap by METASTORE RENAME (r13):
-    dest → ``__old_``, stage → dest, drop ``__old_``. The
-    destination's original files are never rewritten, so no crash
-    window can damage them. A kill between the two renames leaves
-    the name absent with the original intact under ``__old_``; the
-    first subsequent lookup (``Catalog.get_table`` →
-    ``adopt_interrupted_swap``) renames it back — a zero-copy,
-    bit-identical restore — and the re-run converges. A kill after
-    the second rename leaves a garbage ``__old_`` that the next DML
-    entry (``_restore_pending_backup``) drops. This replaced a
-    3-data-write protocol (stage + whole-table ``__bak_`` snapshot +
-    truncate-insert) with ONE data write; the snapshot alone was
-    +0.34-0.45 s locally (``BAKCOST_r12.json``) and a full extra
-    table write at any scale.
-  - PARTITIONED destinations — both whole-table overwrites (a table
-    RENAME moves the table directory but the catalog's PARTITION
-    entries keep their old locations, so a swapped-in partitioned
-    stage reads empty) and PARTITION-SCOPED staged overwrites
-    (``_replace_affected_partitions`` — a rename can only swap a
-    whole table) — keep the ``INSERT OVERWRITE`` swap, which is NOT
-    crash-atomic on Parquet (SURVEY §7). That window is closed by a
-    BACKUP SNAPSHOT (r10 verdict ask 4): just before the swap,
-    exactly the affected partitions are committed to a
-    ``<table>__bak_<hex8>`` table — written under ``__bakstage_``
-    and RENAMEd into place, so the restorable name can never hold a
-    half-written snapshot; the snapshot cost is proportional to the
-    touched window, not the table. The bak is dropped only after the
-    swap succeeds; EVERY destination-mutating entry point — the DML
-    emulations AND the REPLACE/append family — restores a surviving
-    bak (under the table lock, before reading or writing the
-    destination), so a re-run recomputes from restored state, not
-    from a partially rewritten table. The REPLACE-family restore
-    exists for a different reason than the DML one: a REPLACE needs
-    no snapshot of its own (its output derives from the source
-    alone), but a bak left by an EARLIER crashed DML must be
-    consumed before the REPLACE commits — a stale bak surviving the
-    REPLACE would make the NEXT DML's restore roll the table back
-    over the REPLACE's output, silently losing it.
+Re-running the load converges from every window. The hot path makes no
+catalog scan: a load's recovery check is one ``os.path.exists`` unless
+a record is there. Superseded versions are never deleted by a load — a
+reader that planned against one must still be able to finish;
+``Writer.recover()`` deletes the directories no table references any
+more. Fault injection: tests/test_crash_atomicity.py kills a real
+process in each window above.
 
-Recovery, in order: (1) re-run the load (every entry point restores
-pending ``__bak_``/garbage ``__old_`` state first, and a missing
-destination is adopted back from its ``__old_`` at lookup); (2) call
-``Writer.recover_orphan_stages`` to drop leftover ``__stage_`` tables
-(pure garbage: unique-suffix names mean a re-run never collides with
-an orphan). Loads whose output derives solely from the source query
-(APPEND, REPLACE / REPLACE_ALL / REPLACE_MERGE) converge on re-run
-after a crash in ANY window; DML-emulation loads converge because
-the windows above leave the destination either untouched, restorable
-by rename (whole-table), or restorable from the bak snapshot
-(partition-scoped). A transactional table format (the write surface
-is format-agnostic by design) makes the swap machinery unnecessary.
-
-Fault-injection coverage: tests/test_crash_atomicity.py kills a real
-process (a) between stage and swap on both the non-partitioned and
-the partitioned path, (b) BETWEEN the whole-table swap's two renames
-(destination name absent) and (c) MID-SWAP on the partition-scoped
-DML path (the overwrite's first file mutation), then proves old data
-intact/adopted-back (a, b) or restored-on-rerun (c), plus re-run
-convergence on all arms.
+Concurrency. Within one process, loads on one table take a per-table
+re-entrant lock (``table_write_lock``) for their catalog changes.
+Read-modify-write loads — MERGE / DELETE / UPDATE emulation,
+delete_insert, and a REPLACE whose query reads its own destination —
+hold it across plan build, version write and commit, so N concurrent
+in-process loads on one table produce the state of SOME serial order.
+Other REPLACE-family loads write their version outside the lock, so
+they overlap on everything but the commit. Across processes (or
+sessions on a shared metastore) the engine offers no coordination:
+concurrent cross-process loads on one table are unsupported and
+last-writer-wins; serialize them externally, as the reference's
+orchestrator serializes per-table jobs.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import glob
+import json
+import os
 import re
+import shutil
 import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from datetime import date, datetime
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,61 +93,11 @@ from .catalog import PARTITION_COL, Catalog, PartitionKind, TableMeta
 # "bigint NOT NULL" → constraint recognized in catalog type strings
 _NOT_NULL_RE = re.compile(r"\s+not\s+null\s*$", re.IGNORECASE)
 
-# uuid-suffixed staging tables (see _overwrite_via_stage /
-# _replace_affected_partitions); recover_orphan_stages matches on this
-_STAGE_RE = re.compile(r"__stage_[0-9a-f]{8}$")
+_VERSIONS = "_versions"  # <db>.db/_versions/<table>/<uuid>
+_INTENT = "intent.json"  # <db>.db/_versions/<table>/intent.json
+_NULL_DAY = "__HIVE_DEFAULT_PARTITION__"  # partitionBy's dir for dt NULL
+_PARALLEL_MOVES = 4  # from this many SET LOCATIONs on, run them on threads
 
-# Rename-swap state for WHOLE-TABLE staged overwrites (r13,
-# _overwrite_via_stage): the destination is renamed to
-# ``<table>__old_<hex8>`` and the committed stage renamed into place —
-# the destination's ORIGINAL files are never rewritten, so recovery
-# from a mid-swap kill is a zero-copy rename back (see
-# adopt_interrupted_swap / _restore_pending_backup).
-_OLD_RE = re.compile(r"__old_[0-9a-f]{8}$")
-
-# Mid-swap crash backups for DML-emulation loads (r10 verdict ask 4).
-# Protocol (see _create_backup / _restore_from_backup): the affected
-# destination content is snapshotted to ``<table>__bakstage_<hex8>``
-# and RENAMEd (metastore-atomic) to ``<table>__bak_<hex8>`` just
-# before the swap, so a committed ``__bak_`` name GUARANTEES a
-# complete snapshot — a kill during the snapshot write leaves only a
-# ``__bakstage_`` orphan (pure garbage: the destination is untouched
-# while it exists). The bak is dropped only after a successful swap
-# (or after a successful restore), making restore idempotent: as long
-# as the bak exists, re-running the restore converges.
-_BAK_RE = re.compile(r"__bak_[0-9a-f]{8}$")
-_BAKSTAGE_RE = re.compile(r"__bakstage_[0-9a-f]{8}$")
-_BAK_SCOPE_PROP = "transformers_spark.bak.scope"   # 'table' | 'days'
-# days in the affected set that had no rows to snapshot (insert-only
-# partitions): restore must DROP them, since they did not exist before
-_BAK_ABSENT_PROP = "transformers_spark.bak.absent_days"
-
-# Concurrent-DML contract for read-modify-write loads (MERGE / DELETE /
-# UPDATE emulation and delete_insert — every path whose staged
-# replacement is computed BY READING the destination): within one
-# process, loads on the same table SERIALIZE on a per-table re-entrant
-# lock (table_write_lock below, acquired by the Writer entry points and
-# by dml.execute_merge around plan build + write, so the second load's
-# plan reads the first load's committed output, never a stale file
-# listing). The observable contract: N concurrent in-process RMW loads
-# on one table produce the state of SOME serial execution order.
-# ACROSS processes (or sessions on a shared metastore) the engine
-# offers NO coordination — concurrent cross-process RMW loads on the
-# same table are unsupported and can lose updates (last-writer-wins on
-# the swap) or collide with recovery (see recover_orphan_stages:
-# quiesced-only); serialize them externally, exactly as the reference's
-# orchestrator serializes per-table jobs. REPLACE-family loads derive
-# their output solely from the source query, so they need no lock for
-# their OWN correctness (8-way partition REPLACE races are soaked
-# bit-identical — CONCSOAK_r09) — but an RMW load racing a REPLACE on
-# the same table reads the destination while the REPLACE swaps files,
-# so every destination-MUTATING window (the INSERT OVERWRITE / append
-# commit, not the stage write) also takes the table lock: an RMW
-# holding the lock across plan build + write can never observe a
-# mid-swap file listing from any in-process load (r10 ADVICE item 1).
-# Stage writes stay outside the lock — they touch only the private
-# uuid-suffixed stage table, so staged REPLACE loads still overlap on
-# everything but the short swap itself.
 _TABLE_LOCKS: dict[str, threading.RLock] = {}
 _LOCKS_GUARD = threading.Lock()
 
@@ -171,8 +105,8 @@ __all__ = ["Writer", "table_write_lock"]
 
 
 def table_write_lock(spark_name: str) -> threading.RLock:
-    """Per-table re-entrant lock serializing in-process
-    read-modify-write loads (see the concurrent-DML contract above)."""
+    """Per-table re-entrant lock serializing in-process commits and
+    read-modify-write loads (see the concurrency contract above)."""
     with _LOCKS_GUARD:
         return _TABLE_LOCKS.setdefault(
             spark_name.lower(), threading.RLock()
@@ -208,12 +142,6 @@ class Writer:
             return  # metric is best-effort, never fail a write over it
         self.rows_written = (self.rows_written or 0) + n
 
-    def _refresh(self, meta: TableMeta) -> None:
-        """Invalidate cached file listings after a destructive write:
-        a reader that scanned the table earlier in the session would
-        otherwise hit FAILED_READ_FILE on the replaced files."""
-        self.spark.catalog.refreshTable(meta.spark_name)
-
     # -- schema alignment ----------------------------------------------
 
     def _align(
@@ -230,6 +158,11 @@ class Writer:
         DML emulation on ingestion-time tables, where kept/updated rows
         must retain their ORIGINAL partition.
 
+        A cast that turns a non-NULL value into NULL (``'abc'`` into a
+        ``bigint`` column: with ANSI off, ``Column.cast`` yields NULL)
+        fails the job: a schema mismatch never writes NULLs in place of
+        data.
+
         ``allow_field_addition`` enables BOTH schema-update options the
         reference sets together (bigquery_service.py:111-115): new
         columns are added (ALLOW_FIELD_ADDITION) and NOT NULL
@@ -241,6 +174,10 @@ class Writer:
         enforce declared constraints on v1 parquet tables.
         """
         df_cols = {c.lower(): c for c in df.columns}
+        df_types = {
+            c.lower(): f.dataType.simpleString()
+            for c, f in zip(df.columns, df.schema.fields)
+        }
         dest_names = {n.lower() for n, _ in meta.columns}
         extra = [
             c
@@ -254,12 +191,9 @@ class Writer:
                     f"result has columns {extra} not in destination {meta.fqn}; "
                     "set ALLOW_FIELD_ADDITION to evolve the schema"
                 )
-            df_types = {
-                c: f.dataType.simpleString()
-                for c, f in zip(df.columns, df.schema.fields)
-            }
-            new_cols = [(c, df_types[c]) for c in extra]
-            self.catalog.add_columns(meta.fqn, new_cols)
+            self.catalog.add_columns(
+                meta.fqn, [(c, df_types[c.lower()]) for c in extra]
+            )
         missing = [n for n, _ in meta.columns if n.lower() not in df_cols]
         if missing and not allow_field_addition:
             raise ValueError(f"result missing destination columns {missing} for {meta.fqn}")
@@ -275,7 +209,25 @@ class Writer:
         for name, ddl_type in meta.columns:
             base_type = _NOT_NULL_RE.sub("", ddl_type)
             if name.lower() in df_cols:
-                col = F.col(f"`{df_cols[name.lower()]}`").cast(base_type)
+                src = F.col(f"`{df_cols[name.lower()]}`")
+                col = src.cast(base_type)
+                src_type = df_types[name.lower()]
+                if _norm_type(src_type) != _norm_type(base_type):
+                    col = F.when(
+                        src.isNotNull() & col.isNull(),
+                        F.raise_error(
+                            F.concat(
+                                F.lit(
+                                    f"cannot write {src_type} value '"
+                                ),
+                                src.cast("string"),
+                                F.lit(
+                                    f"' to {base_type} column {name} of "
+                                    f"{meta.fqn}: the cast yields NULL"
+                                ),
+                            )
+                        ).cast(base_type),
+                    ).otherwise(col)
                 if name.lower() in required_set:
                     col = F.coalesce(
                         col,
@@ -320,11 +272,10 @@ class Writer:
         partition_date: date | datetime | None = None,
         allow_field_addition: bool = False,
     ) -> None:
-        meta = self.catalog.get_table(fqn)
+        meta = self.prepare(fqn)
         out = self._with_dt(self._align(df, meta, allow_field_addition), meta, partition_date)
         out, obs = self._observed(out)
         with table_write_lock(meta.spark_name):
-            self._restore_pending_backup(meta)
             out.write.insertInto(meta.spark_name, overwrite=False)
         self._record(obs)
 
@@ -336,25 +287,15 @@ class Writer:
         allow_field_addition: bool = False,
         reads_destination: bool = False,
     ) -> None:
-        """WRITE_TRUNCATE of the whole table (all partitions)."""
-        meta = self.catalog.get_table(fqn)
-        out = self._with_dt(self._align(df, meta, allow_field_addition), meta, partition_date)
-        if reads_destination:
-            with table_write_lock(meta.spark_name):
-                self._restore_pending_backup(meta)
-                self._overwrite_via_stage(meta, out)
-            return
-        # Static mode: INSERT OVERWRITE with no partition spec truncates
-        # the WHOLE table (in dynamic mode it would only replace touched
-        # partitions — not WRITE_TRUNCATE semantics).
-        out, obs = self._observed(out)
-        with table_write_lock(meta.spark_name), _conf(
-            self.spark, "spark.sql.sources.partitionOverwriteMode", "static"
-        ):
-            self._restore_pending_backup(meta)
-            out.write.insertInto(meta.spark_name, overwrite=True)
-        self._record(obs)
-        self._refresh(meta)
+        """WRITE_TRUNCATE of the whole table (all partitions).
+        ``reads_destination`` makes it a read-modify-write load: the
+        table lock is held across the version write and the commit."""
+        meta = self.prepare(fqn)
+        with _locked_if(reads_destination, meta):
+            out = self._with_dt(
+                self._align(df, meta, allow_field_addition), meta, partition_date
+            )
+            self._commit(meta, out, whole=True)
 
     def overwrite_partition(
         self,
@@ -365,61 +306,16 @@ class Writer:
         reads_destination: bool = False,
     ) -> None:
         """Partition-decorator write ``table$YYYYMMDD`` — truncate and
-        load exactly one day partition. ``reads_destination`` breaks a
-        write-over-read cycle by materializing the plan (whose lineage
-        scans the destination) before the overwrite."""
-        meta = self.catalog.get_table(fqn)
-        if not meta.partition.is_partitioned:
-            raise ValueError(f"{meta.fqn} is not partitioned")
+        load exactly one day partition; every row lands in that day."""
+        meta = self.prepare(fqn)
+        _require_partitioned(meta)
         if isinstance(partition_date, datetime):
             partition_date = partition_date.date()
-        out = self._align(df, meta, allow_field_addition)
-        if reads_destination:
-            with table_write_lock(meta.spark_name):
-                self._restore_pending_backup(meta)
-                stage_name = f"{meta.spark_name}__stage_{uuid.uuid4().hex[:8]}"
-                out.write.format("parquet").saveAsTable(stage_name)
-                try:
-                    self._overwrite_partition_from(meta, stage_name, partition_date)
-                finally:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {_q(stage_name)}")
-            return
-        out, obs = self._observed(out)
-        view = f"__ts_part_src_{uuid.uuid4().hex[:8]}"
-        out.createOrReplaceTempView(view)
-        cols = ", ".join(f"`{c}`" for c in meta.column_names)
-        try:
-            with table_write_lock(meta.spark_name):
-                self._restore_pending_backup(meta)
-                self.spark.sql(
-                    f"INSERT OVERWRITE TABLE {_q(meta.spark_name)} "
-                    f"PARTITION ({PARTITION_COL} = DATE'{partition_date.isoformat()}') "
-                    f"SELECT {cols} FROM {view}"
-                )
-        finally:
-            self.spark.catalog.dropTempView(view)
-        self._record(obs)
-        self._refresh(meta)
-
-    def _overwrite_partition_from(
-        self, meta: TableMeta, src_table: str, partition_date: date
-    ) -> None:
-        src = self.spark.table(src_table)
-        src, obs = self._observed(src)
-        view = f"__ts_part_src_{uuid.uuid4().hex[:8]}"
-        src.createOrReplaceTempView(view)
-        cols = ", ".join(f"`{c}`" for c in meta.column_names)
-        try:
-            with table_write_lock(meta.spark_name):
-                self.spark.sql(
-                    f"INSERT OVERWRITE TABLE {_q(meta.spark_name)} "
-                    f"PARTITION ({PARTITION_COL} = DATE'{partition_date.isoformat()}') "
-                    f"SELECT {cols} FROM {view}"
-                )
-        finally:
-            self.spark.catalog.dropTempView(view)
-        self._record(obs)
-        self._refresh(meta)
+        with _locked_if(reads_destination, meta):
+            out = self._align(df, meta, allow_field_addition).withColumn(
+                PARTITION_COL, F.lit(partition_date.isoformat()).cast("date")
+            )
+            self._commit(meta, out, days=[partition_date])
 
     def overwrite_partitions(
         self,
@@ -428,36 +324,27 @@ class Writer:
         allow_field_addition: bool = False,
     ) -> None:
         """Multi-partition REPLACE fan-out as ONE Spark job: each day's
-        result is tagged with its partition date, unioned, staged, and
-        swapped in with dynamic partition overwrite. Decorator
-        semantics (each listed day is truncated even if its new data is
-        empty) come from dropping listed-but-empty partitions AFTER the
-        staged data lands — write-then-swap, so a failed write job
-        leaves every existing partition intact (dropping first would
-        delete a managed table's data before anything replaced it).
+        result is tagged with its partition date, unioned and written
+        once. Decorator semantics: every listed day is replaced, even
+        when its new data is empty.
 
         This replaces the reference's N concurrent per-partition load
         jobs (transformation.py:362-428) with a single scan+write whose
         parallelism Spark schedules internally — at 100 TB, one job
         reading the source once beats 30 jobs re-scanning it.
         """
-        meta = self.catalog.get_table(fqn)
-        if not meta.partition.is_partitioned:
-            raise ValueError(f"{meta.fqn} is not partitioned")
+        meta = self.prepare(fqn)
+        _require_partitioned(meta)
         if not day_dfs:
             return  # empty day window: nothing to replace
-        with table_write_lock(meta.spark_name):
-            self._restore_pending_backup(meta)
-        pieces = []
-        for day, df in day_dfs.items():
-            aligned = self._align(df, meta, allow_field_addition)
-            pieces.append(
-                aligned.withColumn(PARTITION_COL, F.lit(day.isoformat()).cast("date"))
+        pieces = [
+            self._align(df, meta, allow_field_addition).withColumn(
+                PARTITION_COL, F.lit(day.isoformat()).cast("date")
             )
-        combined = pieces[0]
-        for piece in pieces[1:]:
-            combined = combined.unionByName(piece)
-        self._replace_affected_partitions(meta, combined, sorted(day_dfs))
+            for day, df in day_dfs.items()
+        ]
+        combined = functools.reduce(DataFrame.unionByName, pieces)
+        self._commit(meta, combined, days=sorted(day_dfs))
 
     def overwrite_dynamic(
         self, fqn: str, df: DataFrame, allow_field_addition: bool = False
@@ -465,18 +352,10 @@ class Writer:
         """Replace exactly the day-partitions present in the result
         (REPLACE_MERGE auto semantics) — one pass, no temp table, no
         driver-side partition collection."""
-        meta = self.catalog.get_table(fqn)
-        if not meta.partition.is_partitioned:
-            raise ValueError(f"{meta.fqn} is not partitioned")
+        meta = self.prepare(fqn)
+        _require_partitioned(meta)
         out = self._with_dt(self._align(df, meta, allow_field_addition), meta, None)
-        out, obs = self._observed(out)
-        with table_write_lock(meta.spark_name), _conf(
-            self.spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            self._restore_pending_backup(meta)
-            out.write.insertInto(meta.spark_name, overwrite=True)
-        self._record(obs)
-        self._refresh(meta)
+        self._commit(meta, out)
 
     def delete_insert(
         self,
@@ -498,81 +377,56 @@ class Writer:
         Partition-scoped on partitioned tables: only partitions that
         contain matching rows or receive new rows are rewritten —
         at 100 TB a date-scoped PARTITION_FILTER touches the window's
-        partitions, not the table. Non-partitioned tables fall back to
-        the whole-table staged rewrite.
+        partitions, not the table.
         """
-        meta = self.catalog.get_table(fqn)
+        meta = self.prepare(fqn)
         with table_write_lock(meta.spark_name):
-            self._restore_pending_backup(meta)
             new = self._with_dt(
                 self._align(df, meta, allow_field_addition), meta, partition_date
             )
             dest = self.spark.table(meta.spark_name)
             matches = F.coalesce(F.expr(filter_expression), F.lit(False))
             if not meta.partition.is_partitioned:
-                self._overwrite_via_stage(
-                    meta, dest.filter(~matches).unionByName(new), backup=True
-                )
+                self._commit(meta, dest.filter(~matches).unionByName(new))
                 return
-            # affected = partitions with deletions ∪ partitions of inserts —
-            # snapshotted BEFORE any write (the plan reads the destination)
-            affected_days, affected = self._affected_days_snapshot(
+            # affected = partitions with deletions ∪ partitions of inserts
+            days = _days(
                 dest.filter(matches)
                 .select(PARTITION_COL)
                 .union(new.select(PARTITION_COL))
-                .distinct()
             )
-            kept_in_scope = dest.join(
-                F.broadcast(affected), PARTITION_COL, "left_semi"
-            ).filter(~matches)
-            # insertInto is positional — pin user columns + dt in table order
-            order = [F.col(f"`{c}`") for c in meta.column_names] + [F.col(PARTITION_COL)]
-            combined = kept_in_scope.select(*order).unionByName(new.select(*order))
-            self._replace_affected_partitions(
-                meta, combined, affected_days, backup=True
-            )
+            kept = _in_days(dest, days).filter(~matches)
+            self._commit(meta, kept.unionByName(new), days=days)
 
     def delete_where(self, fqn: str, predicate: str) -> None:
         """``DELETE FROM t WHERE pred`` (reference:
         samples/tasks/delete/query.sql). Partition-scoped on partitioned
         tables: only partitions containing matching rows are rewritten,
         so a date-scoped predicate touches the window's partitions, not
-        the table. Non-partitioned tables fall back to the whole-table
-        staged rewrite."""
-        meta = self.catalog.get_table(fqn)
+        the table."""
+        meta = self.prepare(fqn)
         with table_write_lock(meta.spark_name):
-            self._restore_pending_backup(meta)
             dest = self.spark.table(meta.spark_name)
             matches = F.coalesce(F.expr(predicate), F.lit(False))
             if not meta.partition.is_partitioned:
-                self._overwrite_via_stage(
-                    meta, dest.filter(~matches), backup=True
-                )
+                self._commit(meta, dest.filter(~matches))
                 return
-            affected_days, affected = self._affected_days_snapshot(
-                dest.filter(matches).select(PARTITION_COL).distinct()
-            )
-            kept_in_scope = dest.join(
-                F.broadcast(affected), PARTITION_COL, "left_semi"
-            ).filter(~matches)
-            # insertInto is positional — pin user columns + dt in table order
-            order = [F.col(f"`{c}`") for c in meta.column_names] + [F.col(PARTITION_COL)]
-            self._replace_affected_partitions(
-                meta, kept_in_scope.select(*order), affected_days, backup=True
-            )
+            days = _days(dest.filter(matches).select(PARTITION_COL))
+            if not days:
+                self.rows_written = self.rows_written or 0
+                return  # nothing matched: nothing to rewrite
+            self._commit(meta, _in_days(dest, days).filter(~matches), days=days)
 
     def update_where(
         self, fqn: str, assignments: dict, predicate: str
     ) -> None:
-        """``UPDATE t SET c = expr WHERE pred`` via staged rewrite —
-        the same cost class as BigQuery's DML (a job that rewrites the
-        affected storage). Partition-scoped on partitioned tables
-        UNLESS an assignment can change the partition column (then
-        rows may move between partitions, so the whole table stages);
-        non-partitioned tables always stage whole."""
-        meta = self.catalog.get_table(fqn)
+        """``UPDATE t SET c = expr WHERE pred`` — the same cost class as
+        BigQuery's DML (a job that rewrites the affected storage).
+        Partition-scoped on partitioned tables UNLESS an assignment can
+        change the partition column (then rows may move between
+        partitions, so the whole table is rewritten)."""
+        meta = self.prepare(fqn)
         with table_write_lock(meta.spark_name):
-            self._restore_pending_backup(meta)
             dest = self.spark.table(meta.spark_name)
             matches = F.coalesce(F.expr(predicate), F.lit(False))
             assigned = {c.lower() for c in assignments}
@@ -615,493 +469,257 @@ class Writer:
                 (part.field or "").lower() in assigned
             )
             if not partition_safe:
-                out = updated
                 if part.is_partitioned and part.field:
                     # dt derives from the partition field — recompute it
-                    out = updated.withColumn(
+                    updated = updated.withColumn(
                         PARTITION_COL, F.to_date(F.col(f"`{part.field}`"))
                     )
-                self._overwrite_via_stage(meta, out.select(*[F.col(f"`{c}`") for c in meta.column_names], *( [F.col(PARTITION_COL)] if part.is_partitioned else [] )), backup=True)
+                self._commit(meta, updated, whole=True)
                 return
-            affected_days, affected = self._affected_days_snapshot(
-                dest.filter(matches).select(PARTITION_COL).distinct()
-            )
-            in_scope = updated.join(F.broadcast(affected), PARTITION_COL, "left_semi")
-            order = [F.col(f"`{c}`") for c in meta.column_names] + [F.col(PARTITION_COL)]
-            self._replace_affected_partitions(
-                meta, in_scope.select(*order), affected_days, backup=True
-            )
-
-    def _affected_days_snapshot(self, affected: DataFrame) -> tuple[list, DataFrame]:
-        """Materialize the affected-partition day set ONCE, before any
-        destructive write: the callers' plans read the destination, so
-        re-evaluating them after the overwrite would see mutated state
-        (and could silently drop a live partition). Returns the literal
-        day list plus a broadcast-ready literal frame for the semi-joins
-        — both views of the SAME snapshot."""
-        days = sorted(
-            r[0] for r in affected.collect() if r[0] is not None
-        )
-        frame = self.spark.createDataFrame(
-            [(d,) for d in days], f"`{PARTITION_COL}` DATE"
-        )
-        return days, frame
-
-    def _replace_affected_partitions(
-        self,
-        meta: TableMeta,
-        combined: DataFrame,
-        affected_days: list,
-        backup: bool = False,
-    ) -> None:
-        """Stage ``combined`` (its plan reads the partitions it
-        replaces), dynamic-overwrite exactly those partitions, and drop
-        any affected partition the new data emptied entirely (dynamic
-        overwrite won't touch a partition absent from the staged data).
-        ``affected_days`` is a pre-collected snapshot — never a lazy
-        plan over the destination (see _affected_days_snapshot).
-        The row-count Observation rides the staging write, so every
-        staged load method reports rows_written consistently.
-
-        ``backup=True`` (DML-emulation callers): the affected
-        partitions are snapshotted to a ``__bak_`` table before the
-        swap — see _overwrite_via_stage; partition scope keeps the
-        snapshot cost proportional to the touched window, not the
-        table."""
-        stage_name = f"{meta.spark_name}__stage_{uuid.uuid4().hex[:8]}"
-        combined, obs = self._observed(combined)
-        combined.write.format("parquet").saveAsTable(stage_name)
-        self._record(obs)
-        try:
-            days = [d for d in affected_days if d is not None]
-            bak = self._create_backup(meta, days) if backup else None
-            # swap window (overwrite + empty-partition drops) under the
-            # table lock: a concurrent in-process RMW must never list
-            # this table's files mid-swap (module contract)
-            try:
-                with table_write_lock(meta.spark_name):
-                    with _conf(self.spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-                        self.spark.table(stage_name).write.insertInto(
-                            meta.spark_name, overwrite=True
-                        )
-                    staged_parts = {
-                        r[0] for r in self.spark.table(stage_name).select(PARTITION_COL).distinct().collect()
-                    }
-                    for day in days:
-                        if day not in staged_parts:
-                            self.spark.sql(
-                                f"ALTER TABLE {_q(meta.spark_name)} DROP IF EXISTS "
-                                f"PARTITION ({PARTITION_COL} = DATE'{day.isoformat()}')"
-                            )
-            except BaseException:
-                if bak is not None:
-                    try:
-                        self._restore_from_backup(meta.spark_name, bak)
-                    except Exception:  # noqa: BLE001 — bak survives for
-                        pass           # the next load's re-run restore
-                raise
-            if bak is not None:
-                self.spark.sql(f"DROP TABLE IF EXISTS {_q(bak)}")
-        finally:
-            self.spark.sql(f"DROP TABLE IF EXISTS {_q(stage_name)}")
-        self._refresh(meta)
-
-    def recover_orphan_stages(self) -> list[str]:
-        """Drop committed ``<table>__stage_<hex8>`` tables left behind
-        by a process killed between a stage write and its swap (see the
-        module docstring's crash/recovery contract). Returns the
-        dropped names.
-
-        QUIESCED-ONLY: run this only when no loads are in flight
-        anywhere on the shared catalog. The uuid suffix prevents NAME
-        collisions on re-run, but ``_STAGE_RE`` cannot tell an orphan
-        from a live stage held by a CONCURRENT load (another session
-        or process between its stage write and swap) — recovery run
-        at that moment drops the live stage and fails, or interrupts,
-        that load's swap. In-flight loads in THIS process are not
-        enough to reason about; the quiesce must cover every writer
-        on the catalog. (A stage-age filter would narrow but not
-        close the race, so the contract is quiesced-only.)"""
-        dropped: list[str] = []
-        for db in self.spark.catalog.listDatabases():
-            for tbl in self.spark.catalog.listTables(db.name):
-                if tbl.isTemporary:
-                    continue
-                if _STAGE_RE.search(tbl.name):
-                    full = f"{db.name}.{tbl.name}"
-                    self.spark.sql(f"DROP TABLE IF EXISTS {_q(full)}")
-                    dropped.append(full)
-        return dropped
+            days = _days(dest.filter(matches).select(PARTITION_COL))
+            if not days:
+                self.rows_written = self.rows_written or 0
+                return  # nothing matched: nothing to rewrite
+            self._commit(meta, _in_days(updated, days), days=days)
 
     def overwrite_from_plan_reading_destination(self, fqn: str, df: DataFrame) -> None:
         """Full overwrite where df's plan scans the destination (DML
-        emulation): stage first. Re-entrant lock: dml.execute_merge
-        already holds the table lock around plan build + this write so
-        the plan can never read a file listing another in-process load
-        is about to swap out; direct callers get the same guarantee
-        only if they BUILD df while holding table_write_lock too.
-        Pending-backup restore is likewise the CALLER's entry step
-        (dml.execute_merge restores before building the plan — df's
-        lineage already points at the destination files, so restoring
-        here would be after the fact); the rename-swap keeps a
-        mid-swap kill recoverable without any snapshot write (the
-        ``__old_`` name IS the zero-copy backup)."""
-        meta = self.catalog.get_table(fqn)
+        emulation). Re-entrant lock: dml.execute_merge already holds
+        the table lock around plan build + this write, so the plan
+        reads the state the commit replaces and no other in-process
+        commit lands in between; direct callers get the same guarantee
+        only if they BUILD df while holding table_write_lock too."""
+        meta = self.prepare(fqn)
         with table_write_lock(meta.spark_name):
-            self._overwrite_via_stage(meta, df, backup=True)
+            self._commit(meta, df, whole=True)
 
-    # -- mid-swap crash backups (DML emulation) ---------------------------
+    # -- the commit protocol (module docstring) --------------------------
 
-    def _create_backup(
-        self, meta: TableMeta, affected_days: list | None
-    ) -> str:
-        """Snapshot the destination content the imminent swap will
-        overwrite (whole table when ``affected_days`` is None, else
-        exactly those partitions) into a committed ``__bak_`` table.
-        Two-step: saveAsTable into ``__bakstage_``, then a
-        metastore-atomic RENAME — so a crash mid-snapshot can never
-        leave a half-written table under the restorable name."""
-        suffix = uuid.uuid4().hex[:8]
-        bakstage = f"{meta.spark_name}__bakstage_{suffix}"
-        bak = f"{meta.spark_name}__bak_{suffix}"
-        dest = self.spark.table(meta.spark_name)
-        if affected_days is None:
-            snap, scope, absent = dest, "table", []
-        else:
-            frame = self.spark.createDataFrame(
-                [(d,) for d in affected_days], f"`{PARTITION_COL}` DATE"
-            )
-            # the semi join puts the join key first — reselect the
-            # destination's physical order (restore inserts positionally)
-            snap = dest.join(
-                F.broadcast(frame), PARTITION_COL, "left_semi"
-            ).select(*[F.col(f"`{c}`") for c in dest.columns])
-            scope = "days"
-        snap.write.format("parquet").saveAsTable(bakstage)
-        if affected_days is not None:
-            bak_days = {
-                r[0]
-                for r in self.spark.table(bakstage)
-                .select(PARTITION_COL)
-                .distinct()
-                .collect()
-            }
-            absent = [d for d in affected_days if d not in bak_days]
-        self.spark.sql(
-            f"ALTER TABLE {_q(bakstage)} SET TBLPROPERTIES "
-            f"('{_BAK_SCOPE_PROP}' = '{scope}', "
-            f"'{_BAK_ABSENT_PROP}' = "
-            f"'{','.join(d.isoformat() for d in absent)}')"
-        )
-        self.spark.sql(f"ALTER TABLE {_q(bakstage)} RENAME TO {_q(bak)}")
-        return bak
-
-    def _restore_from_backup(self, dest_spark_name: str, bak: str) -> None:
-        """Rewrite the destination content a (possibly crashed) swap
-        covered, from its ``__bak_`` snapshot, then drop the snapshot.
-        Idempotent while the bak exists: a kill mid-restore leaves the
-        bak in place, and the next restore converges. 'table' scope is
-        a whole-table static overwrite; 'days' scope dynamic-overwrites
-        the snapshotted partitions and DROPs the recorded insert-only
-        (absent) days, which did not exist before the crashed load."""
-        props = {
-            r[0]: r[1]
-            for r in self.spark.sql(
-                f"SHOW TBLPROPERTIES {_q(bak)}"
-            ).collect()
-        }
-        scope = props.get(_BAK_SCOPE_PROP, "table")
-        mode = "static" if scope == "table" else "dynamic"
-        with _conf(
-            self.spark, "spark.sql.sources.partitionOverwriteMode", mode
-        ):
-            self.spark.table(bak).write.insertInto(
-                dest_spark_name, overwrite=True
-            )
-        if scope != "table":
-            absent = [
-                d for d in props.get(_BAK_ABSENT_PROP, "").split(",") if d
-            ]
-            for day in absent:
-                self.spark.sql(
-                    f"ALTER TABLE {_q(dest_spark_name)} DROP IF EXISTS "
-                    f"PARTITION ({PARTITION_COL} = DATE'{day}')"
-                )
-        self.spark.sql(f"DROP TABLE IF EXISTS {_q(bak)}")
-        self.spark.catalog.refreshTable(dest_spark_name)
-
-    def _restore_pending_backup(self, meta: TableMeta) -> list[str]:
-        """Re-run detection (r10 verdict ask 4): called by every
-        DML-emulation entry point under the table lock, BEFORE the
-        load reads the destination. A surviving ``__bak_`` table means
-        a previous load died somewhere between snapshot-commit and
-        bak-drop — the destination may be partially rewritten by its
-        swap, so restore the snapshot first (a no-op restore when the
-        crash hit before the swap). ``__bakstage_`` leftovers are
-        garbage by protocol and are dropped. Returns restored names."""
-        db, _, table = meta.spark_name.rpartition(".")
-        # exact-anchor on THIS table's name: a sibling table sharing a
-        # name prefix ('t' vs 't2') must never have its bak adopted.
-        # Matching is case-INSENSITIVE: the Hive metastore lowercases
-        # stored table names, so a mixed-case meta.spark_name anchored
-        # verbatim would never match listTables() output and the
-        # pending restore would silently skip that table.
-        bak_re = re.compile(
-            re.escape(table.lower()) + r"__bak_[0-9a-f]{8}$"
-        )
-        bakstage_re = re.compile(
-            re.escape(table.lower()) + r"__bakstage_[0-9a-f]{8}$"
-        )
-        old_re = re.compile(
-            re.escape(table.lower()) + r"__old_[0-9a-f]{8}$"
-        )
-        restored: list[str] = []
-        for tbl in self.spark.catalog.listTables(db or None):
-            if tbl.isTemporary:
-                continue
-            full = f"{db}.{tbl.name}" if db else tbl.name
-            if bakstage_re.fullmatch(tbl.name.lower()):
-                self.spark.sql(f"DROP TABLE IF EXISTS {_q(full)}")
-            elif bak_re.fullmatch(tbl.name.lower()):
-                self._restore_from_backup(meta.spark_name, full)
-                restored.append(full)
-            elif old_re.fullmatch(tbl.name.lower()):
-                # rename-swap leftovers (_overwrite_via_stage). The
-                # destination exists here (the caller looked it up),
-                # so either the swap COMPLETED and its final DROP
-                # never ran — the __old_ holds superseded pre-swap
-                # content, garbage — or a mid-swap crash was already
-                # rolled back by adopt_interrupted_swap, which leaves
-                # no __old_ behind. Drop it.
-                self.spark.sql(f"DROP TABLE IF EXISTS {_q(full)}")
-        return restored
-
-    def recover_pending_backups(self) -> list[str]:
-        """Catalog-wide counterpart of :meth:`_restore_pending_backup`
-        for operational recovery, QUIESCED-ONLY exactly like
-        :meth:`recover_orphan_stages` (a live load's bak is
-        indistinguishable from an orphan). Normal re-runs need no
-        manual step — every DML entry point restores its own table's
-        pending backup first. Returns restored bak names."""
-        restored: list[str] = []
-        for db in self.spark.catalog.listDatabases():
-            for tbl in self.spark.catalog.listTables(db.name):
-                if tbl.isTemporary:
-                    continue
-                full = f"{db.name}.{tbl.name}"
-                if _BAKSTAGE_RE.search(tbl.name):
-                    self.spark.sql(f"DROP TABLE IF EXISTS {_q(full)}")
-                elif _BAK_RE.search(tbl.name):
-                    self._restore_from_backup(_BAK_RE.sub("", full), full)
-                    restored.append(full)
-                elif _OLD_RE.search(tbl.name):
-                    # rename-swap state: destination present = the
-                    # swap completed, the __old_ is superseded content
-                    # (drop); destination absent = mid-swap crash, the
-                    # __old_ IS the original table (rename it back)
-                    base = _OLD_RE.sub("", full)
-                    if self.spark.catalog.tableExists(base):
-                        self.spark.sql(f"DROP TABLE IF EXISTS {_q(full)}")
-                    else:
-                        self.spark.sql(
-                            f"ALTER TABLE {_q(full)} RENAME TO {_q(base)}"
-                        )
-                        restored.append(full)
-        return restored
-
-    # -- staging --------------------------------------------------------
-
-    def _rename_table(self, src: str, dst: str) -> None:
-        """Metastore table rename (a managed table's directory moves
-        with it). A seam: tests/test_crash_atomicity.py injects real
-        kills between the swap's two renames by patching exactly this
-        method."""
-        self.spark.sql(f"ALTER TABLE {_q(src)} RENAME TO {_q(dst)}")
-
-    def _copy_table_properties(self, src: str, dst: str) -> None:
-        """Copy TBLPROPERTIES (the catalog's partition bookkeeping
-        PROP_KIND/PROP_FIELD, operators' index-width props, bak scopes)
-        from ``src`` onto ``dst`` so a rename-swapped stage presents
-        the destination's full metadata. Reserved storage keys —
-        which SET TBLPROPERTIES rejects or which must stay the
-        stage's own — are skipped."""
-        rows = self.spark.sql(f"SHOW TBLPROPERTIES {_q(src)}").collect()
-        skip = {"external", "location", "owner", "provider"}
-        kvs = [
-            (r[0], r[1])
-            for r in rows
-            if r[0].lower() not in skip
-            and not r[0].startswith(("option.", "spark.sql.create."))
-            and r[0] != "transient_lastDdlTime"
-        ]
-        if kvs:
-            pairs = ", ".join(
-                "'{}' = '{}'".format(
-                    k.replace("'", "''"), (v or "").replace("'", "''")
-                )
-                for k, v in kvs
-            )
-            self.spark.sql(
-                f"ALTER TABLE {_q(dst)} SET TBLPROPERTIES ({pairs})"
-            )
-
-    def _overwrite_via_stage(
-        self, meta: TableMeta, df: DataFrame, backup: bool = False
-    ) -> None:
-        """Materialize df into a staging table, copy the destination's
-        table properties onto it, then RENAME-SWAP it into place:
-        dest → ``__old_``, stage → dest, DROP ``__old_``. Breaks the
-        read-write cycle when df's plan scans the destination, with
-        **one data write total** — the previous protocol wrote the
-        data THREE times (stage + whole-table ``__bak_`` snapshot +
-        truncate-insert; the snapshot alone was +0.34-0.45 s locally,
-        BAKCOST_r12.json, and a full-table write at any scale). The
-        renames are metastore/filesystem-metadata operations.
-
-        Crash contract (fault-injected in tests/test_crash_atomicity):
-
-        * killed after the stage commit, before the first rename —
-          destination untouched; the stage is an orphan
-          (``recover_orphan_stages``).
-        * killed BETWEEN the renames — the destination name is absent
-          but its ORIGINAL files live on under ``__old_``; the next
-          touch of the table (``Catalog.get_table`` miss →
-          ``adopt_interrupted_swap``) renames them back, bit-identical
-          by construction (no copy to get wrong), and the re-run
-          converges.
-        * killed after the second rename, before the DROP — the swap
-          is complete; the ``__old_`` is garbage and the next DML
-          entry on the table (``_restore_pending_backup``) drops it.
-
-        PARTITIONED destinations keep the legacy stage + snapshot +
-        truncate-insert protocol: a table RENAME moves the table
-        directory but the catalog's PARTITION entries keep their old
-        per-partition locations, so a swapped-in partitioned stage
-        reads EMPTY (caught by
-        test_rename_swap_preserves_table_properties_for_fresh_catalog).
-        ``backup`` applies only there (DML callers snapshot, the
-        REPLACE family — whose output derives from the source alone —
-        does not); the hot whole-table DML paths (standing indexes)
-        are non-partitioned and always rename-swap. The
-        partition-SCOPED paths (``_replace_affected_partitions``)
-        likewise keep the ``__bak_`` protocol."""
-        suffix = uuid.uuid4().hex[:8]
-        stage_name = f"{meta.spark_name}__stage_{suffix}"
-        old_name = f"{meta.spark_name}__old_{suffix}"
-        if meta.partition.is_partitioned:
-            df, obs = self._observed(df)
-            df.write.format("parquet").partitionBy(PARTITION_COL).saveAsTable(
-                stage_name
-            )
-            self._record(obs)
-            try:
-                bak = self._create_backup(meta, None) if backup else None
-                try:
-                    with table_write_lock(meta.spark_name), _conf(
-                        self.spark,
-                        "spark.sql.sources.partitionOverwriteMode",
-                        "static",
-                    ):
-                        self.spark.table(stage_name).write.insertInto(
-                            meta.spark_name, overwrite=True
-                        )
-                except BaseException:
-                    if bak is not None:
-                        try:
-                            self._restore_from_backup(meta.spark_name, bak)
-                        except Exception:  # noqa: BLE001 — bak survives
-                            pass           # for the re-run restore
-                    raise
-                if bak is not None:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {_q(bak)}")
-            finally:
-                self.spark.sql(f"DROP TABLE IF EXISTS {_q(stage_name)}")
-            self._refresh(meta)
-            return
-        # The stage BECOMES the destination, so pin the destination's
-        # physical column NAMES positionally (the insertInto contract
-        # this replaced) and exact TYPES (insertInto cast-by-position;
-        # both are no-ops when df already matches).
-        dest_schema = self.spark.table(meta.spark_name).schema
-        df = df.toDF(*[f.name for f in dest_schema])
-        df = df.select(
-            *[
-                F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
-                for f in dest_schema
-            ]
-        )
-        df, obs = self._observed(df)
-        df.write.format("parquet").saveAsTable(stage_name)
-        self._record(obs)
-        swapped = False
-        try:
-            self._copy_table_properties(meta.spark_name, stage_name)
+    def prepare(self, fqn: str) -> TableMeta:
+        """Look the destination up and finish its interrupted commit,
+        if any — every load's entry step. A caller whose frame reads
+        the destination calls it before building the frame, so the
+        plan reads the finished state (the engine does)."""
+        meta = self.catalog.get_table(fqn)
+        # the unlocked check keeps the hot path free of catalog calls;
+        # _finish re-reads the record under the lock, where no
+        # in-process commit can still be holding it
+        path = os.path.join(self._versions_dir(meta.spark_name), _INTENT)
+        if os.path.exists(path):
             with table_write_lock(meta.spark_name):
-                self._rename_table(meta.spark_name, old_name)
-                try:
-                    self._rename_table(stage_name, meta.spark_name)
-                    swapped = True
-                except BaseException:
-                    # roll the first rename back so the destination is
-                    # never left absent by an in-process failure
-                    self._rename_table(old_name, meta.spark_name)
-                    raise
-            self.spark.sql(f"DROP TABLE IF EXISTS {_q(old_name)}")
-        finally:
-            if not swapped:
-                self.spark.sql(f"DROP TABLE IF EXISTS {_q(stage_name)}")
-        self._refresh(meta)
+                self._finish(path)
+        return meta
+
+    def _commit(
+        self,
+        meta: TableMeta,
+        df: DataFrame,
+        days: list[date] = (),
+        whole: bool = False,
+    ) -> None:
+        """Write ``df`` once into a fresh version directory, then point
+        the catalog at it. Partitioned tables replace the days ``df``
+        writes, plus the listed ``days`` and — when ``whole`` — every
+        existing day; a replaced day without new rows is emptied."""
+        name = meta.spark_name
+        partitioned = meta.partition.is_partitioned
+        cols = meta.column_names + ([PARTITION_COL] if partitioned else [])
+        version = os.path.join(self._versions_dir(name), uuid.uuid4().hex)
+        out, obs = self._observed(df.select(*[F.col(f"`{c}`") for c in cols]))
+        writer = out.write.format("parquet")
+        if partitioned:
+            writer = writer.partitionBy(PARTITION_COL)
+        writer.save(version)
+        self._record(obs)
+        with table_write_lock(name):
+            if partitioned:
+                prefix = f"{PARTITION_COL}="
+                written = {
+                    d[len(prefix):] for d in os.listdir(version) if d.startswith(prefix)
+                }
+                existing = {
+                    r[0].split("=", 1)[1]
+                    for r in self.catalog._run_ddl(f"SHOW PARTITIONS {_q(name)}").collect()
+                }
+                touched = written | {d.isoformat() for d in days}
+                if whole:
+                    touched |= existing
+                intent = {
+                    "table": name,
+                    "version": version,
+                    "add": sorted(written - existing),
+                    "set": sorted(touched & existing),
+                }
+            else:
+                intent = {"table": name, "location": version}
+            path = os.path.join(self._versions_dir(name), _INTENT)
+            tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+            with open(tmp, "w") as fh:
+                json.dump(intent, fh)
+            os.replace(tmp, path)
+            self._apply(intent)
+            os.remove(path)
+        self.spark.catalog.refreshTable(name)
+
+    def _apply(self, intent: dict) -> None:
+        """Point the catalog at an intent record's locations. Every
+        statement is idempotent, so a record may be applied again."""
+        name = _q(intent["table"])
+        if "location" in intent:
+            self.catalog._run_ddl(
+                f"ALTER TABLE {name} SET LOCATION {_lit(intent['location'])}"
+            )
+            return
+
+        def location(day: str) -> str:
+            path = os.path.join(intent["version"], f"{PARTITION_COL}={day}")
+            os.makedirs(path, exist_ok=True)  # an emptied day's directory
+            return _lit(path)
+
+        if intent["add"]:
+            specs = " ".join(
+                f"PARTITION ({_spec(d)}) LOCATION {location(d)}"
+                for d in intent["add"]
+            )
+            self.catalog._run_ddl(f"ALTER TABLE {name} ADD IF NOT EXISTS {specs}")
+        moves = [
+            f"ALTER TABLE {name} PARTITION ({_spec(day)}) SET LOCATION {location(day)}"
+            for day in intent["set"]
+        ]
+        if len(moves) < _PARALLEL_MOVES:
+            for sql in moves:
+                self.catalog._run_ddl(sql)
+            return
+        # each statement is ~20 ms of catalog work in the JVM and a
+        # backfill moves tens of days: overlap them on a few threads
+        with ThreadPoolExecutor(_PARALLEL_MOVES) as pool:
+            list(pool.map(self.catalog._run_ddl, moves))
+
+    def _finish(self, path: str) -> None:
+        """Roll an intent record forward, then delete it (caller holds
+        the table lock)."""
+        try:
+            with open(path) as fh:
+                intent = json.load(fh)
+        except FileNotFoundError:
+            return  # finished by the commit that held the lock
+        exists = self.spark.catalog.tableExists(intent["table"])
+        if exists:
+            self._apply(intent)
+        os.remove(path)
+        if exists:
+            self.spark.catalog.refreshTable(intent["table"])
+
+    def recover(self) -> list[str]:
+        """Roll every intent record in the warehouse forward, then
+        delete the directories no table references any more: versions
+        that were superseded or never committed (a load killed during
+        its version write), and a table's original directories that a
+        commit moved it away from. Returns the deleted paths.
+
+        QUIESCED-ONLY: run it only when no load is in flight anywhere
+        on the shared catalog. A live load's version is unreferenced
+        until its commit, and a reader may still be scanning a
+        superseded one; loads themselves never need this call — each
+        one finishes its own table's interrupted commit at entry."""
+        root = self._warehouse
+        for path in glob.glob(os.path.join(root, "*.db", _VERSIONS, "*", _INTENT)):
+            tdir = os.path.dirname(path)
+            with table_write_lock(f"{_db_of(tdir)}.{os.path.basename(tdir)}"):
+                self._finish(path)
+        deleted: list[str] = []
+        for tdir in sorted(glob.glob(os.path.join(root, "*.db", _VERSIONS, "*"))):
+            db, table = _db_of(tdir), os.path.basename(tdir)
+            candidates = [tdir]
+            live: list[str] = []
+            if self.spark.catalog.tableExists(f"{db}.{table}"):
+                partitioned, live = self._data_locations(db, table)
+                default_root = os.path.join(root, f"{db}.db", table)
+                candidates = [
+                    *glob.glob(os.path.join(tdir, "*", f"{PARTITION_COL}=*")),
+                    *glob.glob(os.path.join(tdir, "*", "")),
+                    # a partitioned table keeps its root; its days may move
+                    *(glob.glob(os.path.join(default_root, f"{PARTITION_COL}=*"))
+                      if partitioned else [default_root]),
+                ]
+            for tmp in glob.glob(os.path.join(tdir, f"{_INTENT}.*.tmp")):
+                os.remove(tmp)  # killed between writing a record and its os.replace
+            for cand in candidates:
+                cand = cand.rstrip("/")
+                if os.path.isdir(cand) and not any(_overlaps(cand, p) for p in live):
+                    shutil.rmtree(cand, ignore_errors=True)
+                    deleted.append(cand)
+        return deleted
+
+    def _data_locations(self, db: str, table: str) -> tuple[bool, list[str]]:
+        """(partitioned, local paths holding the table's data): its
+        location, or every partition's when it is partitioned."""
+        ext = self.spark._jsparkSession.sessionState().catalog().externalCatalog()
+        meta = ext.getTable(db, table)
+        if not meta.partitionColumnNames().nonEmpty():
+            return False, [meta.location().getPath().rstrip("/")]
+        paths = []
+        parts = ext.listPartitions(db, table, self.spark._jvm.scala.Option.empty())
+        it = parts.iterator()
+        while it.hasNext():
+            paths.append(it.next().location().getPath().rstrip("/"))
+        return True, paths
+
+    @functools.cached_property
+    def _warehouse(self) -> str:
+        uri = urlparse(self.spark.conf.get("spark.sql.warehouse.dir"))
+        if uri.scheme not in ("", "file"):
+            raise ValueError(
+                f"version directories need a local warehouse, not {uri.geturl()}"
+            )
+        return os.path.abspath(uri.path)
+
+    def _versions_dir(self, spark_name: str) -> str:
+        db, _, table = spark_name.lower().rpartition(".")
+        return os.path.join(self._warehouse, f"{db or 'default'}.db", _VERSIONS, table)
 
 
-def adopt_interrupted_swap(spark: SparkSession, spark_name: str) -> bool:
-    """Recovery for the one window where a rename-swap crash leaves
-    the destination NAME absent (killed between ``dest → __old_`` and
-    ``stage → dest``; see ``Writer._overwrite_via_stage``): the
-    original table lives intact under ``<table>__old_<hex8>``. Rename
-    it back and report True — a zero-copy, bit-identical restore (the
-    files never moved content, only names). Called from
-    ``Catalog.get_table`` when a lookup misses, so the FIRST touch of
-    the table after the crash converges, before any plan reads it.
+def _require_partitioned(meta: TableMeta) -> None:
+    if not meta.partition.is_partitioned:
+        raise ValueError(f"{meta.fqn} is not partitioned")
 
-    Roll BACK, not forward: the committed stage does hold the
-    complete new content, but the convergence contract is "restore
-    pre-crash state, re-run the load" (the stage becomes an orphan
-    for ``recover_orphan_stages``). Matching is case-insensitive
-    (the Hive metastore lowercases stored names) and exact-anchored
-    so a sibling table sharing a name prefix is never adopted."""
-    db, _, table = spark_name.rpartition(".")
-    pat = re.compile(re.escape(table.lower()) + r"__old_[0-9a-f]{8}$")
-    try:
-        tables = spark.catalog.listTables(db or None)
-    except Exception:  # noqa: BLE001 — e.g. the database doesn't exist
-        return False
-    for tbl in tables:
-        if tbl.isTemporary:
-            continue
-        if pat.fullmatch(tbl.name.lower()):
-            full = f"{db}.{tbl.name}" if db else tbl.name
-            spark.sql(f"ALTER TABLE {_q(full)} RENAME TO {_q(spark_name)}")
-            spark.catalog.refreshTable(spark_name)
-            return True
-    return False
+
+def _locked_if(hold: bool, meta: TableMeta):
+    return table_write_lock(meta.spark_name) if hold else contextlib.nullcontext()
+
+
+def _days(frame: DataFrame) -> list[date]:
+    """The distinct non-NULL ``dt`` values of a one-column frame."""
+    return sorted(r[0] for r in frame.distinct().collect() if r[0] is not None)
+
+
+def _in_days(df: DataFrame, days: list[date]) -> DataFrame:
+    """Rows of ``days`` only — a literal IN on the partition column, so
+    the scan is pruned to those partitions."""
+    return df.filter(F.col(PARTITION_COL).isin(days))
+
+
+def _norm_type(ddl: str) -> str:
+    return re.sub(r"\s+", "", ddl).lower()
+
+
+def _spec(day: str) -> str:
+    value = "NULL" if day == _NULL_DAY else f"'{day}'"
+    return f"{PARTITION_COL} = {value}"
+
+
+def _db_of(table_dir: str) -> str:
+    """``<warehouse>/<db>.db/_versions/<table>`` → ``<db>``."""
+    return os.path.basename(os.path.dirname(os.path.dirname(table_dir)))[: -len(".db")]
+
+
+def _overlaps(a: str, b: str) -> bool:
+    return a == b or a.startswith(b + "/") or b.startswith(a + "/")
+
+
+def _lit(text: str) -> str:
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _q(name: str) -> str:
     return ".".join(f"`{part}`" for part in name.split("."))
-
-
-class _conf:
-    """Temporarily set a runtime SQL conf."""
-
-    def __init__(self, spark: SparkSession, key: str, value: str):
-        self.spark, self.key, self.value = spark, key, value
-
-    def __enter__(self):
-        self.old = self.spark.conf.get(self.key, None)
-        self.spark.conf.set(self.key, self.value)
-
-    def __exit__(self, *exc):
-        if self.old is None:
-            self.spark.conf.unset(self.key)
-        else:
-            self.spark.conf.set(self.key, self.old)

@@ -468,21 +468,34 @@ def token_budget_sample(
                 f"mix weight for {s!r} must be a positive integer ratio, "
                 f"got {w!r} — express fractional mixes as integer ratios"
             )
+    # rate = LEAST(10000, (10000 * budget * w) div (sum_w * tok)). The
+    # weight folds into a per-stratum Python-int numerator
+    # n = (10000 * budget * w) // sum_w (floor(floor(a/b)/c) ==
+    # floor(a/(b*c))), so only ``n div tok`` runs in the plan and no
+    # bigint product can wrap. tok <= n // 10000 means the rate caps
+    # at 10000; otherwise n < 10000 * 2^63 fits DECIMAL(38,0) and the
+    # quotient stays below 10000.
     sum_w = sum(weights.values())
-    w_expr: Column = F.lit(0)
+    tok = F.col("__tok")
+    rate: Column = F.lit(0)
     for s, w in weights.items():
-        w_expr = F.when(F.col(strata_col) == s, w).otherwise(w_expr)
+        n = 10000 * int(total_budget) * w // sum_w
+        if n // 10000 >= 2**63 - 1:
+            stratum_rate = F.lit(10000)
+        else:
+            stratum_rate = F.when(tok <= n // 10000, 10000).otherwise(
+                F.expr(f"CAST({n} AS DECIMAL(38,0)) div __tok")
+            )
+        rate = F.when(F.col(strata_col) == s, stratum_rate).otherwise(rate)
     rates = (
         df.groupBy(strata_col)
         .agg(F.sum(count_col).cast("bigint").alias("__tok"))
-        .withColumn("__w", w_expr.cast("bigint"))
         .select(
             F.col(strata_col).alias("__strat"),
-            F.expr(
-                "CASE WHEN __tok IS NULL OR __tok <= 0 OR __w <= 0 THEN 0 "
-                f"ELSE LEAST(10000, ({10000 * int(total_budget)} * __w) "
-                f"div ({sum_w} * __tok)) END"
-            ).cast("bigint").alias("__rate_bp"),
+            F.when(tok.isNull() | (tok <= 0), 0)
+            .otherwise(rate)
+            .cast("bigint")
+            .alias("__rate_bp"),
         )
     )
     bucket = _salted_bucket("budget:", id_col)

@@ -105,7 +105,7 @@ def global_row_number(
 
 def _with_ntile_from_total(
     df: DataFrame, rn_col: str, total_col: str, out_col: str, k: int
-) -> Column:
+) -> DataFrame:
     """NTILE(k) from a row-number column and a (per-row) total COLUMN,
     by the SQL-standard rule both Spark and DuckDB implement: with
     ``total = k*base + rem`` rows, the first ``rem`` buckets hold

@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 
 from .config import TaskConfig, task_config_from_env, task_config_from_properties
 from .engine import Engine, TransformResult, compile_assets
-from .stats import collect_job_stats, write_xcom
+from .stats import collect_job_stats, next_job_id, write_xcom
 from .tracing import init_telemetry, start_child_span
 from .windowing import parse_datetime
 
@@ -40,6 +40,7 @@ def run_task(
     if isinstance(execution_time, str):
         execution_time = parse_datetime(execution_time)
     started = time.time()
+    first_job = next_job_id(spark)
     eng = engine or Engine(spark)
     if task_config.labels:
         label_str = ",".join(f"{k}={v}" for k, v in task_config.labels.items())
@@ -52,14 +53,18 @@ def run_task(
     spark.sparkContext.setLocalProperty(
         "spark.scheduler.pool", task_config.query_priority.lower()
     )
-    with start_child_span("Transform") as span:
-        span.set_attribute("destination", task_config.destination_table)
-        span.set_attribute("load_method", task_config.load_method.value)
-        span.set_attribute("dry_run", dry_run)
-        result = eng.transform(
-            task_config, sql_query, dstart, dend, execution_time, dry_run=dry_run
-        )
-    stats = collect_job_stats(spark, started)
+    try:
+        with start_child_span("Transform") as span:
+            span.set_attribute("destination", task_config.destination_table)
+            span.set_attribute("load_method", task_config.load_method.value)
+            span.set_attribute("dry_run", dry_run)
+            result = eng.transform(
+                task_config, sql_query, dstart, dend, execution_time, dry_run=dry_run
+            )
+    finally:
+        if task_config.labels:
+            spark.sparkContext._jsc.clearJobGroup()
+    stats = collect_job_stats(spark, started, first_job=first_job)
     stats.extras["dry_run"] = dry_run
     stats.extras["load_method"] = task_config.load_method.value
     if result.rows_written is not None:

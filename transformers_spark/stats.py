@@ -17,7 +17,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-__all__ = ["JobStats", "collect_job_stats", "write_xcom"]
+__all__ = ["JobStats", "collect_job_stats", "next_job_id", "write_xcom"]
 
 DEFAULT_XCOM_PATH = "/tmp/transformers_spark/xcom/return.json"
 
@@ -44,13 +44,33 @@ class JobStats:
         }
 
 
-def collect_job_stats(spark: SparkSession, started_at: float) -> JobStats:
-    """Read cumulative metrics from the AppStatusStore (best-effort:
-    any py4j surface change degrades to wall-time-only stats)."""
+def next_job_id(spark: SparkSession) -> int | None:
+    """The id the session's next Spark job will get (job ids count up
+    from 0 per SparkContext), or None when the py4j surface changed."""
+    try:
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+    except Exception:
+        return None
+
+
+def collect_job_stats(
+    spark: SparkSession, started_at: float, first_job: int | None = None
+) -> JobStats:
+    """Read metrics from the AppStatusStore (best-effort: any py4j
+    surface change degrades to wall-time-only stats). With
+    ``first_job`` (``next_job_id`` taken when the task started),
+    ``jobs`` counts the jobs submitted since then — the task's own, as
+    long as no other thread runs jobs on the session meanwhile;
+    without it, every job of the application that has no job group.
+    Task time and bytes are application totals."""
     stats = JobStats(execution_time_sec=time.time() - started_at)
     try:
-        tracker = spark.sparkContext.statusTracker()
-        stats.jobs = len(tracker.getJobIdsForGroup(None) or [])
+        end = next_job_id(spark) if first_job is not None else None
+        if end is not None:
+            stats.jobs = end - first_job
+        else:
+            tracker = spark.sparkContext.statusTracker()
+            stats.jobs = len(tracker.getJobIdsForGroup(None) or [])
     except Exception:
         pass
     try:
