@@ -1,13 +1,16 @@
 """The version-directory commit (loaders.py) in one process: intent
-records roll forward, the hot path makes no catalog scan, superseded
-versions stay readable until ``Writer.recover()``, and a schema
-mismatch raises instead of writing NULLs. The process-kill arms live in
-test_crash_atomicity.py."""
+records roll forward, the hot path makes no catalog scan, a replaced
+version stays readable for one more commit and is deleted by the one
+after, and a schema mismatch raises instead of writing NULLs. The
+process-kill arms live in test_crash_atomicity.py."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import sys
+import threading
 from datetime import date
 
 import pytest
@@ -15,6 +18,7 @@ from pyspark.sql import catalog as pyspark_catalog
 
 from transformers_spark.catalog import Catalog, PartitionKind, PartitionSpec
 from transformers_spark.dml import execute_merge, parse_merge
+from transformers_spark import loaders
 from transformers_spark.loaders import Writer
 
 
@@ -149,7 +153,7 @@ def test_recover_clears_a_record_of_a_dropped_table(spark, monkeypatch):
     with pytest.raises(RuntimeError):
         writer.overwrite_table(fqn, spark.createDataFrame([(5, "e")], "id bigint, v string"))
     versions = writer._versions_dir(cat.spark_name(fqn))
-    cat.drop_table(fqn)
+    spark.sql(f"DROP TABLE {cat.spark_name(fqn)}")  # not through Catalog.drop_table
     deleted = writer.recover()
     assert versions in deleted
     assert not os.path.exists(versions)
@@ -187,6 +191,111 @@ def test_reader_planned_before_a_swap_finishes_on_the_old_version(spark):
     cat.drop_table(fqn)
 
 
+def _dirs(pattern):
+    return sorted(glob.glob(pattern))
+
+
+def test_commits_keep_at_most_one_replaced_version(spark):
+    """Each commit deletes what the commit before it replaced, so any
+    number of loads leaves the current data plus one replaced commit."""
+    flat = "g-project.playground.gc_flat"
+    part = "g-project.playground.gc_part"
+    fcat, fwriter = _flat(spark, flat)
+    pcat, pwriter = _part(spark, part)
+    fdir = fwriter._versions_dir(fcat.spark_name(flat))
+    pdir = pwriter._versions_dir(pcat.spark_name(part))
+    root = os.path.join(os.path.dirname(os.path.dirname(pdir)), "gc_part")
+    for i in range(6):
+        fwriter.overwrite_table(
+            flat, spark.createDataFrame([(i, "x")], "id bigint, v string"))
+        pwriter.overwrite_partitions(part, {
+            date(2024, 1, d): _days(spark, [(10 * i + d, f"2024-01-0{d}")])
+            for d in (1, 2, 3)
+        })
+        assert len(_dirs(os.path.join(fdir, "*", ""))) <= 2
+        assert len(_dirs(os.path.join(pdir, "*", "dt=*"))) <= 6
+    assert _ids(fcat, flat) == [5]
+    assert _ids(pcat, part) == [51, 52, 53]
+    assert len(_dirs(os.path.join(pdir, "*", ""))) == 2
+    # the days APPEND wrote under the table root were replaced twice
+    assert _dirs(os.path.join(root, "dt=*")) == []
+    # a DELETE of one day: the other days' versions stay referenced
+    pwriter.delete_where(part, "id = 52")
+    pwriter.delete_where(part, "id = 53")
+    assert _ids(pcat, part) == [51]
+    fcat.drop_table(flat)
+    pcat.drop_table(part)
+    assert not os.path.exists(fdir) and not os.path.exists(pdir)
+
+
+def test_a_version_being_written_is_never_deleted(spark):
+    fqn = "g-project.playground.gc_in_flight"
+    cat, writer = _flat(spark, fqn)
+    tdir = writer._versions_dir(cat.spark_name(fqn))
+    pending = os.path.join(tdir, "pending")
+    os.makedirs(pending)
+    with loaders._writing(pending):
+        for i in range(3):
+            writer.overwrite_table(fqn, spark.createDataFrame([(i, "x")], "id bigint, v string"))
+        assert os.path.isdir(pending)
+    for i in range(2):
+        writer.overwrite_table(fqn, spark.createDataFrame([(i, "x")], "id bigint, v string"))
+    assert not os.path.exists(pending)  # unreferenced once no longer in flight
+    cat.drop_table(fqn)
+
+
+@pytest.mark.parametrize("drop", ["catalog", "sql"])
+def test_recreated_table_ignores_the_dropped_tables_record(spark, monkeypatch, drop):
+    fqn = f"g-project.playground.intent_recreated_{drop}"
+    cat, writer = _flat(spark, fqn)
+    _interrupt(monkeypatch, writer)
+    with pytest.raises(RuntimeError):
+        writer.overwrite_table(fqn, spark.createDataFrame([(5, "old")], "id bigint, v string"))
+    assert os.path.exists(_intent(writer, cat, fqn))
+    if drop == "catalog":
+        cat.drop_table(fqn)
+    else:  # Catalog.create_table clears what a plain DROP left
+        spark.sql(f"DROP TABLE {cat.spark_name(fqn)}")
+    cat.create_table(fqn, [("id", "bigint"), ("v", "string")])
+    writer.append(fqn, spark.createDataFrame([(7, "new")], "id bigint, v string"))
+    assert _ids(cat, fqn) == [7]
+    writer.overwrite_table(fqn, spark.createDataFrame([(8, "new")], "id bigint, v string"))
+    assert _ids(cat, fqn) == [8]
+    cat.drop_table(fqn)
+
+
+def test_concurrent_replaces_never_delete_a_version_in_flight(spark):
+    """REPLACEs on one table write their versions outside the lock while
+    other commits land and delete what they replaced; no commit may
+    delete a version that is still being written."""
+    fqn = "g-project.playground.gc_race"
+    cat, writer = _flat(spark, fqn)
+    errors = []
+
+    def work(i):
+        try:
+            for j in range(3):
+                writer.overwrite_table(
+                    fqn, spark.createDataFrame([(10 * i + j, "x")], "id bigint, v string"))
+        except Exception as err:  # noqa: BLE001 — reported below
+            errors.append(err)
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(_ids(cat, fqn)) == 1  # the last commit's row, readable
+    cat.drop_table(fqn)
+
+
 def test_emptied_day_stays_empty_for_a_later_append(spark):
     """A day a load empties keeps a partition on an empty directory, so
     an APPEND of that day never lands beside the day's old files."""
@@ -208,6 +317,8 @@ def test_schema_mismatch_raises_through_replace(spark):
     with pytest.raises(Exception, match="cast yields NULL"):
         writer.overwrite_table(fqn, bad)
     assert _ids(cat, fqn) == [1, 2]
+    # the failed write leaves no version behind
+    assert _dirs(os.path.join(writer._versions_dir(cat.spark_name(fqn)), "*", "")) == []
     # a NULL that was NULL already is not a mismatch
     writer.overwrite_table(fqn, spark.createDataFrame([(None, "n")], "id string, v string"))
     assert cat.read(fqn).collect()[0]["id"] is None
@@ -228,8 +339,8 @@ def test_schema_mismatch_raises_through_merge(spark):
 
 
 def test_many_day_commit_moves_every_day(spark):
-    """A commit over more existing days than the serial threshold moves
-    them on threads; every day must land."""
+    """One catalog call moves every existing day of a commit; every day
+    must land, and the emptied ones read empty."""
     fqn = "g-project.playground.many_days"
     cat, writer = _part(spark, fqn)
     writer.append(fqn, _days(spark, [(i, f"2024-01-{i:02d}") for i in range(3, 9)]))
@@ -237,6 +348,8 @@ def test_many_day_commit_moves_every_day(spark):
         date(2024, 1, i): _days(spark, [(100 + i, f"2024-01-{i:02d}")]) for i in range(1, 9)
     })
     assert _ids(cat, fqn) == [100 + i for i in range(1, 9)]
+    writer.overwrite_table(fqn, _days(spark, [(7, "2024-01-07")]))
+    assert _ids(cat, fqn) == [7]
     cat.drop_table(fqn)
 
 

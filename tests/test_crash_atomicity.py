@@ -13,8 +13,9 @@ process then recovers and checks the table. The kill points:
 * ``write``    — while the version directory is being written;
 * ``intent``   — after the intent record, before the first catalog
   change;
-* ``between``  — between two partition changes of one multi-day commit
-  (the table reads half old, half new until recovery);
+* ``between``  — between the two catalog changes of one multi-day
+  commit, the ADD of its new day and the move of its existing days (the
+  table reads half old, half new until recovery);
 * ``unlinked`` — after the last catalog change, before the record is
   deleted.
 
@@ -122,14 +123,12 @@ elif point in ("intent", "unlinked"):
     Writer._apply = apply
 else:
     original_ddl = Catalog._run_ddl
-    alters = []
 
     def run_ddl(self, sql):
         out = original_ddl(self, sql)
         if sql.startswith("ALTER TABLE"):
-            alters.append(sql)
-            if len(alters) == 2:  # ADD of the new day + first SET LOCATION
-                die("KILLED_BETWEEN_SWAPS")
+            assert " ADD " in sql, sql  # the new day comes first
+            die("KILLED_BETWEEN_SWAPS")
         return out
 
     Catalog._run_ddl = run_ddl
@@ -141,7 +140,7 @@ _RECOVER = _COMMON + """
 assert os.path.exists(INTENT) == (point != "write"), point
 before = ids()
 if point == "between":
-    assert before == [2, 11, 13], before  # the window really was hit
+    assert before == [1, 2, 13], before  # the window really was hit
 elif point in ("write", "intent"):
     assert before == OLD, before
 else:

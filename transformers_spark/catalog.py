@@ -19,10 +19,14 @@ re-introspect it (the dispatch layer's analogue of BigQuery
 
 from __future__ import annotations
 
+import functools
+import os
 import re
 import shutil
+import time
 from dataclasses import dataclass
 from datetime import date
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +36,7 @@ from .dialect import spark_table_name_from_fqn
 __all__ = ["PartitionKind", "PartitionSpec", "TableMeta", "Catalog", "PARTITION_COL"]
 
 PARTITION_COL = "dt"
+VERSIONS = "_versions"  # <warehouse>/<db>.db/_versions/<table>: loads' versions
 
 PROP_KIND = "transformers.partition.kind"
 PROP_FIELD = "transformers.partition.field"
@@ -106,13 +111,14 @@ class Catalog:
         """Run a catalog/DDL statement with bounded retry + exponential
         backoff on transient failures (see ``_TRANSIENT_ERROR_RE``).
         Non-transient errors propagate on the first attempt."""
-        import time
+        return self._retry(lambda: self.spark.sql(sql))
 
+    def _retry(self, call):
         attempt = 0
         while True:
             attempt += 1
             try:
-                return self.spark.sql(sql)
+                return call()
             except Exception as err:  # noqa: BLE001 — classified below
                 if attempt >= MAX_CATALOG_ATTEMPTS or not _TRANSIENT_ERROR_RE.search(
                     str(err)
@@ -132,6 +138,8 @@ class Catalog:
         name = self.spark_name(fqn)
         db = name.split(".")[0]
         self._run_ddl(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+        if not self.spark.catalog.tableExists(name):
+            self._drop_versions(name)  # left by an earlier table of this name
         cols_ddl = ", ".join(f"`{c}` {t}" for c, t in columns)
         partition_ddl = ""
         props = [f"'{PROP_KIND}' = '{partition.kind}'"]
@@ -164,8 +172,69 @@ class Catalog:
         return meta
 
     def drop_table(self, fqn: str) -> None:
-        self._run_ddl(f"DROP TABLE IF EXISTS {_q(self.spark_name(fqn))}")
+        name = self.spark_name(fqn)
+        self._run_ddl(f"DROP TABLE IF EXISTS {_q(name)}")
         self._meta.pop(fqn, None)
+        self._drop_versions(name)
+
+    # -- version directories (loaders.py commit protocol) ---------------
+
+    @functools.cached_property
+    def local_warehouse(self) -> str | None:
+        """The warehouse directory, or None when it is not local."""
+        uri = urlparse(self.spark.conf.get("spark.sql.warehouse.dir"))
+        return os.path.abspath(uri.path) if uri.scheme in ("", "file") else None
+
+    def versions_dir(self, spark_name: str) -> str:
+        """``<warehouse>/<db>.db/_versions/<table>``: where loads write
+        the table's versions and its intent record."""
+        if self.local_warehouse is None:
+            raise ValueError(
+                "version directories need a local warehouse, not "
+                + self.spark.conf.get("spark.sql.warehouse.dir")
+            )
+        db, _, table = spark_name.lower().rpartition(".")
+        return os.path.join(
+            self.local_warehouse, f"{db or 'default'}.db", VERSIONS, table
+        )
+
+    def _drop_versions(self, spark_name: str) -> None:
+        """Delete a dropped table's versions and any intent record: a
+        table created again under the name must not adopt them. (A table
+        dropped and created again with plain SQL skips this: drop
+        destinations through ``drop_table``.)"""
+        if self.local_warehouse is not None:
+            shutil.rmtree(self.versions_dir(spark_name), ignore_errors=True)
+
+    def set_partition_locations(self, spark_name: str, locations: dict[str, str]) -> None:
+        """Point existing ``dt`` partitions at new local directories in
+        ONE external-catalog call. ``locations`` maps a partition value,
+        as it appears in a ``dt=`` directory name, to a path. The SQL
+        form, ``ALTER TABLE … PARTITION … SET LOCATION``, costs one
+        statement per day: 10-20 ms each with the in-memory catalog and
+        about 60 ms with the embedded Hive metastore."""
+        jvm = self.spark._jvm
+        ext = self.spark._jsparkSession.sessionState().catalog().externalCatalog()
+        db, table = spark_name.lower().split(".")
+        storage = ext.getTable(db, table).storage()
+        formats = (
+            storage.inputFormat(), storage.outputFormat(), storage.serde(),
+            storage.compressed(), storage.properties(),
+        )
+        partition = jvm.org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
+        uri = jvm.org.apache.spark.sql.catalyst.catalog.CatalogUtils.stringToURI
+        spec = jvm.org.apache.spark.sql.execution.datasources.PartitioningUtils.parsePathFragment
+        no_params = jvm.scala.Predef.Map().empty()
+        now = int(time.time() * 1000)
+        parts = jvm.java.util.ArrayList()
+        for value, path in locations.items():
+            where = storage.copy(jvm.scala.Option.apply(uri("file:" + path)), *formats)
+            parts.add(partition(
+                spec(f"{PARTITION_COL}={value}"), where, no_params, now, -1,
+                jvm.scala.Option.empty(),
+            ))
+        seq = jvm.scala.jdk.javaapi.CollectionConverters.asScala(parts).toSeq()
+        self._retry(lambda: ext.alterPartitions(db, table, seq))
 
     def create_view(self, fqn: str, sql_query: str, replace: bool = True) -> str:
         """Standard (non-materialized) view under catalog coordinates;

@@ -25,14 +25,14 @@ new content exactly once, into a fresh version directory
 own root, and commits by changing catalog metadata only: ``ALTER TABLE
 … SET LOCATION`` for an unpartitioned table; for a partitioned one, one
 batched ``ADD PARTITION … LOCATION`` for the new days and one
-``PARTITION (dt=…) SET LOCATION`` per day that already exists. A day
-the load empties is pointed at an empty directory rather than dropped:
-dropping a managed partition deletes files a reader may still scan, and
-a later APPEND of that day would land in the day's old default
-directory and pick its stale files up again. No load ever overwrites
-or deletes a file, so a plan may read the destination it replaces
-without a staging table. APPEND keeps ``insertInto``: it only adds
-files.
+external-catalog ``alterPartitions`` call that moves every day that
+already exists. A day the load empties is pointed at an empty directory
+rather than dropped: dropping a managed partition deletes files a
+reader may still scan, and a later APPEND of that day would land in the
+day's old default directory and pick its stale files up again. No load
+overwrites a file it may read, so a plan may read the destination it
+replaces without a staging table. APPEND keeps ``insertInto``: it only
+adds files.
 
 Crash and recovery. Between the version write and the catalog changes
 the commit writes an intent record — ``_versions/<table>/intent.json``,
@@ -43,18 +43,25 @@ Applying a record twice is harmless, so:
 * killed during the version write — there is no record; the table is
   wholly old and the half-written version is garbage.
 * killed after the record is written — before the first catalog
-  change, between two partition changes, or before the record is
-  deleted — the next load of the table (any method, at its entry,
-  under the table lock) or ``Writer.recover()`` rolls the record
-  forward: the table reads wholly new.
+  change, between the ADD of new days and the move of existing ones,
+  or before the record is deleted — the next load of the table (any
+  method, at its entry, under the table lock) or ``Writer.recover()``
+  rolls the record forward: the table reads wholly new.
 
 Re-running the load converges from every window. The hot path makes no
 catalog scan: a load's recovery check is one ``os.path.exists`` unless
-a record is there. Superseded versions are never deleted by a load — a
-reader that planned against one must still be able to finish;
-``Writer.recover()`` deletes the directories no table references any
-more. Fault injection: tests/test_crash_atomicity.py kills a real
-process in each window above.
+a record is there. Fault injection: tests/test_crash_atomicity.py kills
+a real process in each window above.
+
+Old versions. A commit never deletes what it replaces: it records the
+directories it stopped referencing in ``_versions/<table>/
+superseded.json`` and deletes the ones the PREVIOUS commit of the table
+recorded. A reader that planned against a version can finish while one
+more commit lands, and a table keeps at most its current data plus the
+data of one replaced commit. Leftovers of a killed load are swept by
+the next commit of their days; ``Writer.recover()`` (quiesced-only)
+deletes every directory no table references. ``Catalog.drop_table``
+deletes the table's ``_versions`` directory, record included.
 
 Concurrency. Within one process, loads on one table take a per-table
 re-entrant lock (``table_write_lock``) for their catalog changes.
@@ -63,7 +70,8 @@ delete_insert, and a REPLACE whose query reads its own destination —
 hold it across plan build, version write and commit, so N concurrent
 in-process loads on one table produce the state of SOME serial order.
 Other REPLACE-family loads write their version outside the lock, so
-they overlap on everything but the commit. Across processes (or
+they overlap on everything but the commit; a commit never deletes a
+version another in-process load is still writing. Across processes (or
 sessions on a shared metastore) the engine offers no coordination:
 concurrent cross-process loads on one table are unsupported and
 last-writer-wins; serialize them externally, as the reference's
@@ -81,25 +89,24 @@ import re
 import shutil
 import threading
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 from datetime import date, datetime
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import PARTITION_COL, Catalog, PartitionKind, TableMeta
+from .catalog import PARTITION_COL, VERSIONS, Catalog, PartitionKind, TableMeta
 
 # "bigint NOT NULL" → constraint recognized in catalog type strings
 _NOT_NULL_RE = re.compile(r"\s+not\s+null\s*$", re.IGNORECASE)
 
-_VERSIONS = "_versions"  # <db>.db/_versions/<table>/<uuid>
 _INTENT = "intent.json"  # <db>.db/_versions/<table>/intent.json
+_SUPERSEDED = "superseded.json"  # what the last commit replaced
 _NULL_DAY = "__HIVE_DEFAULT_PARTITION__"  # partitionBy's dir for dt NULL
-_PARALLEL_MOVES = 4  # from this many SET LOCATIONs on, run them on threads
 
 _TABLE_LOCKS: dict[str, threading.RLock] = {}
 _LOCKS_GUARD = threading.Lock()
+_IN_FLIGHT: set[str] = set()  # version directories being written
+_IN_FLIGHT_GUARD = threading.Lock()
 
 __all__ = ["Writer", "table_write_lock"]
 
@@ -524,76 +531,124 @@ class Writer:
         name = meta.spark_name
         partitioned = meta.partition.is_partitioned
         cols = meta.column_names + ([PARTITION_COL] if partitioned else [])
-        version = os.path.join(self._versions_dir(name), uuid.uuid4().hex)
+        tdir = self._versions_dir(name)
+        version = os.path.join(tdir, uuid.uuid4().hex)
+        path = os.path.join(tdir, _INTENT)
         out, obs = self._observed(df.select(*[F.col(f"`{c}`") for c in cols]))
         writer = out.write.format("parquet")
         if partitioned:
             writer = writer.partitionBy(PARTITION_COL)
-        writer.save(version)
-        self._record(obs)
-        with table_write_lock(name):
-            if partitioned:
-                prefix = f"{PARTITION_COL}="
-                written = {
-                    d[len(prefix):] for d in os.listdir(version) if d.startswith(prefix)
-                }
-                existing = {
-                    r[0].split("=", 1)[1]
-                    for r in self.catalog._run_ddl(f"SHOW PARTITIONS {_q(name)}").collect()
-                }
-                touched = written | {d.isoformat() for d in days}
-                if whole:
-                    touched |= existing
-                intent = {
-                    "table": name,
-                    "version": version,
-                    "add": sorted(written - existing),
-                    "set": sorted(touched & existing),
-                }
-            else:
-                intent = {"table": name, "location": version}
-            path = os.path.join(self._versions_dir(name), _INTENT)
-            tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(intent, fh)
-            os.replace(tmp, path)
-            self._apply(intent)
-            os.remove(path)
+        with _writing(version):
+            try:
+                writer.save(version)
+            except BaseException:
+                shutil.rmtree(version, ignore_errors=True)  # never referenced
+                raise
+            self._record(obs)
+            with table_write_lock(name):
+                # an in-process load that failed after its record was
+                # written: finish it before this record replaces it
+                if os.path.exists(path):
+                    self._finish(path)
+                if partitioned:
+                    prefix = f"{PARTITION_COL}="
+                    written = {
+                        d[len(prefix):] for d in os.listdir(version) if d.startswith(prefix)
+                    }
+                    existing = {
+                        r[0].split("=", 1)[1]
+                        for r in self.catalog._run_ddl(f"SHOW PARTITIONS {_q(name)}").collect()
+                    }
+                    touched = written | {d.isoformat() for d in days}
+                    if whole:
+                        touched |= existing
+                    intent = {
+                        "table": name,
+                        "version": version,
+                        "add": sorted(written - existing),
+                        "set": sorted(touched & existing),
+                    }
+                else:
+                    intent = {"table": name, "location": version}
+                _write_json(path, intent)
+                self._apply(intent)
+                os.remove(path)
+                garbage = self._supersede(meta, intent)
         self.spark.catalog.refreshTable(name)
+        for old in garbage:
+            shutil.rmtree(old, ignore_errors=True)
+        for old in {os.path.dirname(g) for g in garbage}:
+            # a version whose last day was replaced
+            if os.path.dirname(old) == tdir and not glob.glob(
+                os.path.join(old, f"{PARTITION_COL}=*")
+            ):
+                shutil.rmtree(old, ignore_errors=True)
 
     def _apply(self, intent: dict) -> None:
         """Point the catalog at an intent record's locations. Every
-        statement is idempotent, so a record may be applied again."""
-        name = _q(intent["table"])
+        step is idempotent, so a record may be applied again."""
+        name = intent["table"]
         if "location" in intent:
             self.catalog._run_ddl(
-                f"ALTER TABLE {name} SET LOCATION {_lit(intent['location'])}"
+                f"ALTER TABLE {_q(name)} SET LOCATION {_lit(intent['location'])}"
             )
             return
 
         def location(day: str) -> str:
             path = os.path.join(intent["version"], f"{PARTITION_COL}={day}")
             os.makedirs(path, exist_ok=True)  # an emptied day's directory
-            return _lit(path)
+            return path
 
         if intent["add"]:
             specs = " ".join(
-                f"PARTITION ({_spec(d)}) LOCATION {location(d)}"
+                f"PARTITION ({_spec(d)}) LOCATION {_lit(location(d))}"
                 for d in intent["add"]
             )
-            self.catalog._run_ddl(f"ALTER TABLE {name} ADD IF NOT EXISTS {specs}")
-        moves = [
-            f"ALTER TABLE {name} PARTITION ({_spec(day)}) SET LOCATION {location(day)}"
-            for day in intent["set"]
-        ]
-        if len(moves) < _PARALLEL_MOVES:
-            for sql in moves:
-                self.catalog._run_ddl(sql)
-            return
-        # each statement is ~20 ms of catalog work in the JVM and a
-        # backfill moves tens of days: overlap them on a few threads
-        with ThreadPoolExecutor(_PARALLEL_MOVES) as pool:
-            list(pool.map(self.catalog._run_ddl, moves))
+            self.catalog._run_ddl(f"ALTER TABLE {_q(name)} ADD IF NOT EXISTS {specs}")
+        if intent["set"]:
+            self.catalog.set_partition_locations(
+                name, {day: location(day) for day in intent["set"]}
+            )
+
+    def _supersede(self, meta: TableMeta, intent: dict) -> list[str]:
+        """Lazy deletion of replaced data (caller holds the table lock,
+        after the swap). Record the directories this commit stopped
+        referencing in ``_versions/<table>/superseded.json`` and return
+        the ones the previous commit recorded, for deletion: a reader
+        that planned against a version keeps it for one more commit.
+
+        Every directory of a replaced day other than the new one is
+        unreferenced once the catalog points at the new one — except a
+        version another in-process load is still writing, which is
+        skipped. Leftovers of a killed load are swept with the next
+        commit of their days."""
+        tdir = self._versions_dir(meta.spark_name)
+        root = os.path.join(os.path.dirname(os.path.dirname(tdir)), os.path.basename(tdir))
+        with _IN_FLIGHT_GUARD:
+            skip = set(_IN_FLIGHT)
+        if "location" in intent:
+            skip.add(intent["location"])
+            replaced = [root, *glob.glob(os.path.join(tdir, "*", ""))]
+        else:
+            skip.add(intent["version"])
+            days = {f"{PARTITION_COL}={d}" for d in intent["set"]}
+            replaced = [
+                d
+                for d in glob.glob(os.path.join(tdir, "*", f"{PARTITION_COL}=*"))
+                + glob.glob(os.path.join(root, f"{PARTITION_COL}=*"))
+                if os.path.basename(d) in days
+            ]
+        path = os.path.join(tdir, _SUPERSEDED)
+        try:
+            with open(path) as fh:
+                previous = json.load(fh)
+        except FileNotFoundError:
+            previous = []
+        replaced = {p.rstrip("/") for p in replaced if os.path.isdir(p)} - set(previous)
+        _write_json(path, sorted(
+            p for p in replaced if not any(_overlaps(p, s) for s in skip)
+        ))
+        return previous
 
     def _finish(self, path: str) -> None:
         """Roll an intent record forward, then delete it (caller holds
@@ -622,13 +677,15 @@ class Writer:
         until its commit, and a reader may still be scanning a
         superseded one; loads themselves never need this call — each
         one finishes its own table's interrupted commit at entry."""
-        root = self._warehouse
-        for path in glob.glob(os.path.join(root, "*.db", _VERSIONS, "*", _INTENT)):
+        root = self.catalog.local_warehouse
+        if root is None:
+            raise ValueError("recover() needs a local warehouse")
+        for path in glob.glob(os.path.join(root, "*.db", VERSIONS, "*", _INTENT)):
             tdir = os.path.dirname(path)
             with table_write_lock(f"{_db_of(tdir)}.{os.path.basename(tdir)}"):
                 self._finish(path)
         deleted: list[str] = []
-        for tdir in sorted(glob.glob(os.path.join(root, "*.db", _VERSIONS, "*"))):
+        for tdir in sorted(glob.glob(os.path.join(root, "*.db", VERSIONS, "*"))):
             db, table = _db_of(tdir), os.path.basename(tdir)
             candidates = [tdir]
             live: list[str] = []
@@ -642,7 +699,7 @@ class Writer:
                     *(glob.glob(os.path.join(default_root, f"{PARTITION_COL}=*"))
                       if partitioned else [default_root]),
                 ]
-            for tmp in glob.glob(os.path.join(tdir, f"{_INTENT}.*.tmp")):
+            for tmp in glob.glob(os.path.join(tdir, "*.tmp")):
                 os.remove(tmp)  # killed between writing a record and its os.replace
             for cand in candidates:
                 cand = cand.rstrip("/")
@@ -665,23 +722,26 @@ class Writer:
             paths.append(it.next().location().getPath().rstrip("/"))
         return True, paths
 
-    @functools.cached_property
-    def _warehouse(self) -> str:
-        uri = urlparse(self.spark.conf.get("spark.sql.warehouse.dir"))
-        if uri.scheme not in ("", "file"):
-            raise ValueError(
-                f"version directories need a local warehouse, not {uri.geturl()}"
-            )
-        return os.path.abspath(uri.path)
-
     def _versions_dir(self, spark_name: str) -> str:
-        db, _, table = spark_name.lower().rpartition(".")
-        return os.path.join(self._warehouse, f"{db or 'default'}.db", _VERSIONS, table)
+        return self.catalog.versions_dir(spark_name)
 
 
 def _require_partitioned(meta: TableMeta) -> None:
     if not meta.partition.is_partitioned:
         raise ValueError(f"{meta.fqn} is not partitioned")
+
+
+@contextlib.contextmanager
+def _writing(version: str):
+    """Mark a version as in flight — no commit may delete it — until
+    the commit that writes it ends."""
+    with _IN_FLIGHT_GUARD:
+        _IN_FLIGHT.add(version)
+    try:
+        yield
+    finally:
+        with _IN_FLIGHT_GUARD:
+            _IN_FLIGHT.discard(version)
 
 
 def _locked_if(hold: bool, meta: TableMeta):
@@ -697,6 +757,14 @@ def _in_days(df: DataFrame, days: list[date]) -> DataFrame:
     """Rows of ``days`` only — a literal IN on the partition column, so
     the scan is pruned to those partitions."""
     return df.filter(F.col(PARTITION_COL).isin(days))
+
+
+def _write_json(path: str, value) -> None:
+    """Replace ``path`` atomically: a temporary file, then os.replace."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(value, fh)
+    os.replace(tmp, path)
 
 
 def _norm_type(ddl: str) -> str:
