@@ -36,7 +36,7 @@ def main(sf_dir: str, out_dir: str) -> dict:
     # 1. measure first: what would the strip remove, per source?
     # hasher="fast" is the production setting: xxhash64 long keys
     # instead of the oracle-portable md5 hex strings, so the per-hash
-    # shuffle rows are ~4x smaller (SPANHASH_r11.json A/B).
+    # shuffle rows are ~4x smaller (round-11 A/B).
     stats = cross_doc_span_dedup_stats(docs, span_len=8, hasher="fast")
     report = (
         docs.select(F.col("doc_id").alias("doc"), "source")

@@ -5,26 +5,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def pytest_sessionstart(session):
-    """Adopt driver-written round evidence before any test runs
-    (round-10 verdict ask 1): the driver writes
-    ``BENCH_r{N}.json`` / ``CORRECTNESS_r{N}.json`` AFTER the round's
-    last commit, so the first pytest of the next round used to fail
-    ``test_artifact_tracking`` until a human ran ``git add``. Staging
-    them here makes the fix structural — the tracking test checks
-    ``git ls-files``, which includes staged-but-uncommitted files."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "tools"))
-    try:
-        import gatelib
-
-        staged = gatelib.stage_round_artifacts()
-        if staged:
-            print(f"[conftest] staged driver round artifacts: {staged}")
-    except Exception:  # noqa: BLE001 — staging must never block tests
-        pass
-
-
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

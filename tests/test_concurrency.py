@@ -1,6 +1,6 @@
 """A18 orchestrator-level concurrency regression (round-8 verdict
-ask 6; the 8-worker 10x soak lives in tools/concurrency_soak.py with
-its artifact — this is the always-on small replica).
+ask 6; an 8-worker 10x soak ran in round 9 — this is the always-on
+small replica).
 
 Three adjacent-day REPLACE loads run simultaneously against one
 destination table, each on its own ``spark.newSession()`` — the

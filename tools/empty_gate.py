@@ -1,9 +1,9 @@
-#!/usr/bin/env python
-"""Empty-input robustness gate (round-6 verdict ask 1).
+"""Empty-input wave datasets (round-6 verdict ask 1).
 
 Zero-row source tables are the one input shape no prior wave touched
 and the first shape a real deployment hits (backfill day 1, an empty
-partition). This gate runs the full dual-engine compare against:
+partition). ``tools/run_gates.py`` runs the dual-engine compare
+against:
 
 * ``all-empty``: every source table replaced by a zero-row copy
   (schema preserved), over the WHOLE catalog;
@@ -14,27 +14,18 @@ partition). This gate runs the full dual-engine compare against:
 Contract pinning: some operators LEGITIMATELY error on empty input
 (codebook training over zero vectors cannot produce centroids; the
 engine raises a loud ValueError by design — similarity.py). Those are
-pinned in EXPECTED_ERRORS below with the exception type; the gate
-greens them only when that exact type is raised, so the artifact
+pinned in EMPTY_ERROR_CONTRACTS below with the exception type; the
+gate greens them only when that exact type is raised, so the artifact
 records WHICH queries error-by-contract vs return empty.
 
-    python tools/empty_gate.py --json EMPTYGATE_r06.json
-    python tools/empty_gate.py --scenario all-empty --only text_bm25_retrieval
+    python tools/run_gates.py --waves all-empty,empty:embeddings --json /tmp/empty.json
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import re
 import shutil
-import sys
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-import scratch
 
 SRC = "/root/testdata/sf0.001"
 TABLES = [
@@ -83,107 +74,3 @@ def build_empty(dst_dir: str, empty_tables: list[str]) -> None:
 def oracle_tables(oracle: str) -> set[str]:
     """Tables a query reads, from its oracle SQL text (word match)."""
     return {t for t in TABLES if re.search(rf"\b{t}\b", oracle)}
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--json", default=None)
-    ap.add_argument("--only", default=None,
-                    help="comma-separated query names to restrict to")
-    ap.add_argument("--scenario", default=None,
-                    help="run just one: 'all-empty' or a table name")
-    args = ap.parse_args()
-
-    import __spark_entry__ as entry_mod
-    from gatelib import compare_queries, summarize
-
-    from transformers_spark.session import get_spark
-
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    reads = {n: oracle_tables(o) for n, o in oracles.items()}
-
-    # Contract pins: queries that LEGITIMATELY raise on empty input,
-    # with the exception type that is the documented contract
-    # (codebook/centroid/hyperplane training over zero vectors raises
-    # a loud ValueError by design — see similarity.py docstrings).
-    # Populated from the discovery run of this gate; a query greens
-    # under a pin only when that exact type is raised.
-    EMPTY_ERROR_QUERIES = dict(EMPTY_ERROR_CONTRACTS)
-
-    scenarios: list[tuple[str, list[str]]] = [("all-empty", TABLES)]
-    scenarios += [(f"empty:{t}", [t]) for t in TABLES]
-    if args.scenario:
-        want = args.scenario if args.scenario == "all-empty" else f"empty:{args.scenario}"
-        scenarios = [s for s in scenarios if s[0] == want]
-
-    spark = get_spark(app_name="empty-input-gate")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    artifact: dict[str, dict] = {}
-    total_checked = total_green = 0
-    for label, empties in scenarios:
-        if label == "all-empty":
-            names = list(qs)
-        else:
-            t = empties[0]
-            names = [n for n in qs if t in reads.get(n, set())]
-        if args.only:
-            keep = set(args.only.split(","))
-            names = [n for n in names if n in keep]
-        if not names:
-            continue
-        dst = scratch.scratch_path(f"empty_{label.replace(':', '_').replace('-', '_')}_sf0.001")
-        build_empty(dst, empties)
-        print(f"=== scenario {label}: {len(names)} queries ===",
-              file=sys.stderr)
-        expected = {
-            n: exc for n, exc in EMPTY_ERROR_QUERIES.items()
-            if n in names
-            and (label == "all-empty" or "embeddings" in empties)
-        }
-        results = compare_queries(spark, qs, names, dst, expected)
-        summ = summarize(results)
-        total_checked += summ["n_checked"]
-        total_green += summ["n_green"]
-        artifact[label] = {
-            "empties": empties,
-            **summ,
-            "expected_errors": {
-                n: results[n]["status"]
-                for n in expected
-                if n in results
-            },
-        }
-        for n in summ["mismatches"]:
-            print(f"MISMATCH [{label}]: {n}", file=sys.stderr)
-        for n in summ["errors"]:
-            print(
-                f"--- ERROR [{label}] {n} ---\n"
-                f"{results[n].get('traceback', '')}",
-                file=sys.stderr,
-            )
-
-    print("\n=== EMPTY-GATE SUMMARY ===")
-    print(f"scenario-query pairs checked: {total_checked}  green: {total_green}")
-    for label, row in artifact.items():
-        bad = row["mismatches"] + row["errors"]
-        print(f"  {label}: {row['n_green']}/{row['n_checked']}"
-              + (f"  RED: {bad}" if bad else ""))
-    if args.json:
-        with open(args.json, "w") as fh:
-            json.dump(
-                {
-                    "total_checked": total_checked,
-                    "total_green": total_green,
-                    "scenarios": artifact,
-                },
-                fh,
-                indent=1,
-            )
-        print(f"wrote {args.json}")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -1,10 +1,12 @@
-"""Shared dual-engine compare loop for the robustness gates.
+"""Shared dual-engine compare loop for the oracle gates.
 
-Every gate (null waves, degenerate text, malformed JSON, unicode,
-extreme values, empty-input, duplicate-row, adversarial-skew) runs the
-same check: build a mutated copy of sf0.001, then run every catalog
-query on BOTH engines over it and demand equality. This module holds
-the one loop they all share so a fix lands everywhere at once.
+Every gate runs the same check: run each catalog query on BOTH engines
+over one dataset and demand equality. ``local_gate.py`` runs it over
+the driver's scale factor; ``run_gates.py`` builds mutated copies of
+sf0.001 (null waves, degenerate text, malformed JSON, unicode, extreme
+values, empty-input, duplicate-row, adversarial-skew) and runs it over
+each. This module holds the one loop they all share so a fix lands
+everywhere at once.
 
 A loud ERROR can be a contract (operators like ntiles_wide reject
 null keys by design; codebook training rejects empty input) — gates
@@ -20,6 +22,9 @@ import time
 import traceback
 
 
+CHECKS = ("rows_match", "schema_match", "hash_match", "pandas_hash_match")
+
+
 def compare_queries(
     spark,
     qs: dict,
@@ -28,8 +33,13 @@ def compare_queries(
     expected_errors: dict[str, str] | None = None,
 ) -> dict[str, dict]:
     """Run each query on Spark and its oracle on DuckDB over ``dst``;
-    return {name: {"status", "secs", ...}}. status is one of
-    green | green (expected <Exc>) | MISMATCH | ERROR (<Exc>)."""
+    return {name: {"status", "secs", "rows", "oracle_rows", <CHECKS>}}.
+
+    The four checks: row count, column names, the fetchall canon
+    (``normalize_rows``) and the driver-faithful pandas canon; None
+    means the check was not reached. status is one of
+    green | green (expected <Exc>) | MISMATCH | ERROR (<Exc>), and a
+    query is green only when all four checks are true."""
     from transformers_spark import cache
     from transformers_spark.canon import (
         duckdb_connect_views,
@@ -43,6 +53,7 @@ def compare_queries(
     for i, name in enumerate(names):
         sdf = None
         t0 = time.perf_counter()
+        row: dict = {"rows": None, "oracle_rows": None, **dict.fromkeys(CHECKS)}
         try:
             oracle = oracle_for(name, dst)
             if oracle is None:
@@ -53,47 +64,37 @@ def compare_queries(
             # from the DuckDB oracle or the comparison below must stay
             # a loud ERROR, not a silent green
             try:
+                # persist: the frame is read twice (collect for the
+                # fetchall canon, toPandas for the pandas canon)
                 sdf = qs[name](spark, dst).persist()
                 spark_cols = [c.lower() for c in sdf.columns]
                 spark_rows = [tuple(r) for r in sdf.collect()]
             except Exception as exc:
                 exc_name = type(exc).__name__
-                if expected_errors.get(name) == exc_name:
-                    row = {
-                        "status": f"green (expected {exc_name})",
-                        "rows": None,
-                    }
-                    row["secs"] = round(time.perf_counter() - t0, 3)
-                    out[name] = row
-                    print(
-                        f"[{i + 1}/{len(names)}] {name}: {row['status']}"
-                        f" ({row['secs']}s)",
-                        file=sys.stderr,
-                    )
-                    continue
-                raise
-            con = duckdb_connect_views(dst)
-            res = con.execute(oracle)
-            duck_cols = [d[0].lower() for d in res.description]
-            duck_rows = res.fetchall()
-            ok = (
-                len(spark_rows) == len(duck_rows)
-                and sorted(spark_cols) == sorted(duck_cols)
-                and normalize_rows(spark_rows, spark_cols)
-                == normalize_rows(duck_rows, duck_cols)
-                and pandas_canon(sdf.toPandas())
-                == pandas_canon(con.execute(oracle).fetch_df())
-            )
-            row = {
-                "status": "green" if ok else "MISMATCH",
-                "rows": len(spark_rows),
-            }
+                if expected_errors.get(name) != exc_name:
+                    raise
+                row["status"] = f"green (expected {exc_name})"
+            else:
+                con = duckdb_connect_views(dst)
+                res = con.execute(oracle)
+                duck_cols = [d[0].lower() for d in res.description]
+                duck_rows = res.fetchall()
+                row["rows"] = len(spark_rows)
+                row["oracle_rows"] = len(duck_rows)
+                row["rows_match"] = len(spark_rows) == len(duck_rows)
+                row["schema_match"] = sorted(spark_cols) == sorted(duck_cols)
+                row["hash_match"] = normalize_rows(
+                    spark_rows, spark_cols
+                ) == normalize_rows(duck_rows, duck_cols)
+                row["pandas_hash_match"] = pandas_canon(
+                    sdf.toPandas()
+                ) == pandas_canon(con.execute(oracle).fetch_df())
+                row["status"] = (
+                    "green" if all(row[k] for k in CHECKS) else "MISMATCH"
+                )
         except Exception as exc:
-            row = {
-                "status": f"ERROR ({type(exc).__name__})",
-                "rows": None,
-                "traceback": traceback.format_exc(limit=3),
-            }
+            row["status"] = f"ERROR ({type(exc).__name__})"
+            row["traceback"] = traceback.format_exc(limit=5)
         finally:
             if sdf is not None:
                 sdf.unpersist()
@@ -118,67 +119,3 @@ def summarize(results: dict[str, dict]) -> dict:
         "mismatches": mism,
         "errors": errs,
     }
-
-
-def stage_round_artifacts() -> list[str]:
-    """Stage every repo-root round-evidence JSON the DRIVER wrote after
-    the previous round's last commit (round-10 verdict ask 1: six
-    consecutive rounds tripped
-    ``test_artifact_tracking.test_round_artifacts_are_git_tracked``
-    because ``BENCH_r{N}.json`` / ``CORRECTNESS_r{N}.json`` land on
-    disk untracked and staging relied on a human noticing at the next
-    round's first pytest run). Builder-side writers already stage at
-    their own write sites via :func:`stage_artifact`; this sweep
-    closes the driver-side gap structurally — it is called at startup
-    of the gate/bench entry points AND from a pytest session hook
-    (``tests/conftest.py``), so the first thing ANY round does is
-    adopt the previous round's evidence. Returns the staged names
-    (best-effort: failures are swallowed, the tracking test stays the
-    loud backstop)."""
-    import glob
-    import os
-    import re
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pat = re.compile(r"^[A-Z][A-Z0-9_]*_r\d{2}[a-z0-9_]*\.json$")
-    standing = {"BENCH_FULL.json", "BASELINE.json"}
-    staged: list[str] = []
-    try:
-        tracked = set(
-            subprocess.run(
-                ["git", "-C", repo, "ls-files"],
-                check=True, capture_output=True, text=True, timeout=30,
-            ).stdout.splitlines()
-        )
-        for path in sorted(glob.glob(os.path.join(repo, "*.json"))):
-            name = os.path.basename(path)
-            if name in tracked or not (pat.match(name) or name in standing):
-                continue
-            subprocess.run(
-                ["git", "-C", repo, "add", "--", path],
-                check=False, capture_output=True, timeout=30,
-            )
-            staged.append(name)
-    except Exception:  # noqa: BLE001 — never kill the run that swept
-        pass
-    return staged
-
-
-def stage_artifact(path: str) -> None:
-    """``git add`` a round-evidence artifact right where it is written
-    (round-8 verdict ask 1: four consecutive rounds shipped untracked
-    driver/gate artifacts because staging relied on a human noticing).
-    Best-effort: staging must never fail the run that produced the
-    evidence — the artifact-tracking test is the loud backstop."""
-    import os
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        subprocess.run(
-            ["git", "-C", repo, "add", "--", os.path.abspath(path)],
-            check=False, capture_output=True, timeout=30,
-        )
-    except Exception:  # noqa: BLE001 — never kill the evidence writer
-        pass

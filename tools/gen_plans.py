@@ -249,7 +249,7 @@ PICKS = {
         "and nation stay BroadcastHashJoin; lag math is exact integer "
         "days with a single double division in the rollup."
     ),
-    # r9 pin-by-cost additions: the remaining BENCH_FULL top-10 batch
+    # r9 pin-by-cost additions: the remaining top-10-cost batch
     # queries (test_plan_pins.test_top_cost_batch_queries_are_pinned)
     "ivf_probe_recall_curve": (
         "IVF probe/recall curve (r8) — exact baseline is "
@@ -338,7 +338,9 @@ def main() -> None:
 
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    # the scale the plan pins check PLANS.md at: a PLANS.md generated
+    # at any other scale is one they reject
+    from tests.test_plan_pins import SF as sf
 
     out = [
         "# PLANS — physical-plan evidence for the scale claims\n",

@@ -6,11 +6,12 @@ factor under BOTH canons (native fetchall + the driver-faithful pandas
 canon from ``transformers_spark.canon``) and writes ONE artifact the
 judge can diff against the driver's ``CORRECTNESS_r{N}.json``:
 
-    python tools/local_gate.py --round 4                 # full catalog
-    python tools/local_gate.py --round 4 --first 50      # driver-style sample
-    python tools/local_gate.py --round 4 --sf-dir /root/testdata/sf0.01
+    python tools/local_gate.py --json /tmp/canon.json             # full catalog
+    python tools/local_gate.py --json /tmp/canon.json --first 50  # driver-style sample
+    python tools/local_gate.py --json /tmp/canon.json --only windowed_daily_events
 
-Output: ``CORRECTNESS_LOCAL_r{N}.json`` at the repo root with, per
+Each query runs through the loop every gate shares,
+``gatelib.compare_queries``. Output: the ``--json`` file with, per
 query: row/schema match, fetchall hash match, pandas hash match, and
 any canonicalization error (the driver's ``err`` column equivalent).
 The first 50 entries (the driver's sample, by ``__spark_entry__``
@@ -23,7 +24,6 @@ import argparse
 import json
 import os
 import sys
-import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -31,7 +31,8 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("--json", required=True,
+                    help="path of the artifact to write")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--first", type=int, default=None,
                     help="check only the first N cohort entries (driver style)")
@@ -40,25 +41,11 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
-    import gatelib
+    from gatelib import CHECKS, compare_queries
 
-    gatelib.stage_round_artifacts()  # adopt driver-written evidence
-
-    from transformers_spark.canon import (
-        duckdb_connect_views,
-        normalize_rows,
-        pandas_canon,
-    )
-    from transformers_spark.queries import oracle_for
     from transformers_spark.session import get_spark
 
     qs = entry_mod.queries()
-    # sf-bound oracles (multimodal VALUES literals) regenerate for the
-    # requested --sf-dir; the rest come from the entry module verbatim.
-    oracles = {
-        name: oracle_for(name, args.sf_dir)
-        for name in entry_mod.oracle_sql()
-    }
     names = list(qs)
     # --only narrows BEFORE --first slices: otherwise a query named in
     # --only but outside the first N passed the unknown-name check yet
@@ -74,83 +61,26 @@ def main() -> None:
 
     spark = get_spark(app_name="local-correctness-gate")
     spark.sparkContext.setLogLevel("ERROR")
-    from transformers_spark import cache
 
-    results: dict[str, dict] = {}
+    checked = compare_queries(spark, qs, names, args.sf_dir)
     n_sample = 50
-    for i, name in enumerate(names):
-        row: dict = {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "pandas_hash_match": None,
+    results = {
+        name: {
+            **{k: r[k] for k in CHECKS},
+            "spark_rows": r["rows"],
+            "oracle_rows": r["oracle_rows"],
             "in_driver_sample": i < n_sample,
-            "err": None,
+            "err": r.get("traceback"),
         }
-        sdf = None
-        try:
-            # persist: the frame is read twice (collect for the fetchall
-            # canon, toPandas for the driver-faithful canon) — without
-            # this every Spark plan executes twice per gate entry
-            sdf = qs[name](spark, args.sf_dir).persist()
-            spark_cols = [c.lower() for c in sdf.columns]
-            spark_rows = [tuple(r) for r in sdf.collect()]
-
-            con = duckdb_connect_views(args.sf_dir)
-            res = con.execute(oracles[name])
-            duck_cols = [d[0].lower() for d in res.description]
-            duck_rows = res.fetchall()
-
-            row["spark_rows"] = len(spark_rows)
-            row["oracle_rows"] = len(duck_rows)
-            row["rows_match"] = len(spark_rows) == len(duck_rows)
-            row["schema_match"] = sorted(spark_cols) == sorted(duck_cols)
-            row["hash_match"] = normalize_rows(
-                spark_rows, spark_cols
-            ) == normalize_rows(duck_rows, duck_cols)
-            row["pandas_hash_match"] = pandas_canon(sdf.toPandas()) == pandas_canon(
-                con.execute(oracles[name]).fetch_df()
-            )
-        except Exception:
-            row["err"] = traceback.format_exc(limit=5)
-        finally:
-            if sdf is not None:
-                sdf.unpersist()
-            cache.release()
-        results[name] = row
-        ok = all(
-            row.get(k) for k in ("rows_match", "schema_match", "hash_match",
-                                 "pandas_hash_match")
-        )
-        print(f"[{i + 1}/{len(names)}] {name}: {'green' if ok else 'NOT GREEN'}",
-              file=sys.stderr)
-
-    # --only is a dev-iteration subset: never clobber the round's real
-    # full-catalog artifact, and keep the partial artifact OUT of the
-    # repo root — a root *_rNN*.json would trip the artifact-tracking
-    # guard (tests/test_artifact_tracking.py) for a file that is
-    # scratch, not round evidence
-    if args.only:
-        sys.path.insert(0, os.path.join(REPO, "tools"))
-        import scratch
-
-        out_path = scratch.scratch_path(
-            f"CORRECTNESS_LOCAL_r{args.round:02d}_dev.json"
-        )
-    else:
-        out_path = os.path.join(
-            REPO, f"CORRECTNESS_LOCAL_r{args.round:02d}.json"
-        )
-    with open(out_path, "w") as fh:
+        for i, (name, r) in enumerate(checked.items())
+    }
+    with open(args.json, "w") as fh:
         json.dump(
             {
                 "sf_dir": args.sf_dir,
-                "n_checked": len(names),
+                "n_checked": len(results),
                 "n_green": sum(
-                    1
-                    for r in results.values()
-                    if r["rows_match"] and r["schema_match"] and r["hash_match"]
-                    and r["pandas_hash_match"]
+                    r["status"] == "green" for r in checked.values()
                 ),
                 "canons": ["fetchall", "pandas(driver-faithful)"],
                 "queries": results,
@@ -158,13 +88,7 @@ def main() -> None:
             fh,
             indent=1,
         )
-    print(f"wrote {out_path}")
-    if not args.only and not args.first:
-        # round artifact (not a _dev subset): stage it immediately so
-        # the round-close commit can't forget it (r8 verdict ask 1)
-        import gatelib
-
-        gatelib.stage_artifact(out_path)
+    print(f"wrote {args.json}")
     spark.stop()
 
 

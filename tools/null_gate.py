@@ -1,38 +1,29 @@
-#!/usr/bin/env python
-"""Null-robustness gate: the catalog vs its oracles on null-bearing data.
+"""Mutation-wave datasets: null injection and value-content variants.
 
 The driver's testdata contains no NULLs, so a whole class of
 Spark-vs-DuckDB divergence (size(split(NULL)) = -1, count(*) vs
 null-skipping COUNT(col), hashing NULL into a sketch, ...) is
-invisible to the regular gate. This tool copies sf0.001 with ~2% NULLs
-injected into the nullable VALUE columns of the LLM-pipeline tables
-(events.user_id/event_type/value/props, documents.text/lang/source,
-embeddings.label — ids, timestamps and vectors stay non-null) and runs
-the same dual-engine compare over every catalog query.
+invisible to the regular gate. The builders here copy sf0.001 with
+~2% NULLs injected into the nullable VALUE columns of the LLM-pipeline
+tables (events.user_id/event_type/value/props, documents.text/lang/
+source, embeddings.label — ids, timestamps and vectors stay non-null;
+waves 2 and 3 widen the set), or with degenerate text, malformed
+JSON, unicode, extreme values or duplicate rows.
 
-A mismatch here is a real portability bug: the two engines disagree on
-the same input. A loud ERROR can be a contract (operators like
-ntiles_wide reject null keys by design) — those are reported
-separately for eyeball triage, not auto-failed.
+A mismatch on such data is a real portability bug: the two engines
+disagree on the same input. ``tools/run_gates.py`` builds each wave and
+runs the dual-engine compare over every catalog query:
 
-    python tools/null_gate.py                # build + run all
-    python tools/null_gate.py --only NAME    # one query
+    python tools/run_gates.py --waves null-w1,null-all,duprows --json /tmp/null.json
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 import shutil
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-import scratch
-
 SRC = "/root/testdata/sf0.001"
-DST = scratch.scratch_path("nulldata_sf0.001")
 
 # table -> columns to null-inject (deterministic ~2% by id-hash)
 INJECT = {
@@ -105,7 +96,7 @@ COPY (
               WHEN hash(doc_id) % 50 = 1 THEN '   '
               WHEN hash(doc_id) % 50 = 2 THEN 'single'
               -- exotic-whitespace case: vertical tab + form feed, the
-              -- Java-\s-vs-RE2-\s divergence probe (ORACLES.md class 16)
+              -- Java-\\s-vs-RE2-\\s divergence probe (ORACLES.md class 16)
               WHEN hash(doc_id) % 50 = 3 THEN 'a' || chr(11) || 'b' || chr(12) || 'c'
               ELSE text END AS text,
          lang, source,
@@ -254,11 +245,9 @@ COPY (
     print(f"built {dst_dir} (duplicate rows)", file=sys.stderr)
 
 
-def build_nulldata(inject: dict | None = None, dst_dir: str | None = None) -> None:
+def build_nulldata(inject: dict, dst_dir: str) -> None:
     import duckdb
 
-    inject = inject if inject is not None else INJECT
-    dst_dir = dst_dir or DST
     os.makedirs(dst_dir, exist_ok=True)
     for fname in sorted(os.listdir(SRC)):
         if not fname.endswith(".parquet"):
@@ -286,145 +275,3 @@ def build_nulldata(inject: dict | None = None, dst_dir: str | None = None) -> No
             f"TO '{dst}' (FORMAT PARQUET)"
         )
     print(f"built {dst_dir}", file=sys.stderr)
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--only", default=None)
-    ap.add_argument("--skip-build", action="store_true")
-    ap.add_argument("--json", default=None,
-                    help="also write a summary artifact to this path")
-    ap.add_argument("--wave2", action="store_true",
-                    help="ALSO null-inject events.ts and "
-                         "embeddings.embedding (null ordering / vector "
-                         "arithmetic paths) on top of the wave-1 columns")
-    ap.add_argument("--wave3", action="store_true",
-                    help="ALSO null-inject the TPC-H value + FK columns "
-                         "(NOT IN / anti-join / null-group-key paths) on "
-                         "top of the wave-1 columns")
-    ap.add_argument("--degenerate-text", action="store_true",
-                    help="INSTEAD of null injection, rewrite ~6%% of "
-                         "documents.text to empty/whitespace-only/"
-                         "single-token strings (split('') = [''] class)")
-    ap.add_argument("--malformed-json", action="store_true",
-                    help="INSTEAD of null injection, rewrite ~8%% of "
-                         "events.props to malformed JSON (lenient-"
-                         "extraction contract: NULL, never an error)")
-    ap.add_argument("--unicode-text", action="store_true",
-                    help="INSTEAD of null injection, rewrite ~10%% of "
-                         "documents.text to accented/CJK/emoji/RTL/"
-                         "Turkish-dotted-I strings (case-folding class)")
-    ap.add_argument("--extreme-values", action="store_true",
-                    help="INSTEAD of null injection, rewrite ~6%% of "
-                         "events.value to ±1e308/1e-308 (decimal-cast "
-                         "overflow: Spark NULL vs DuckDB CAST error)")
-    ap.add_argument("--duplicate-rows", action="store_true",
-                    help="INSTEAD of null injection, UNION ALL a ~1%% "
-                         "exact-duplicate sample into EVERY table "
-                         "(duplicated ids: the id-tiebreak determinism "
-                         "class)")
-    ap.add_argument("--dup-on-nulls", action="store_true",
-                    help="COMPOSED wave: duplicate ~1%% of rows of the "
-                         "combined all-columns NULL dataset (w2+w3) — "
-                         "duplicated null-bearing rows probe the "
-                         "dup x null interaction")
-    args = ap.parse_args()
-
-    if args.degenerate_text:
-        # the string-content waves replace null injection entirely
-        # (their own dataset + builder); wave flags are ignored
-        dst = scratch.scratch_path("degentext_sf0.001")
-        inject = {"documents": ["text (degenerate strings, not NULL)"]}
-        if not args.skip_build:
-            build_degenerate_text(dst)
-    elif args.malformed_json:
-        dst = scratch.scratch_path("badjson_sf0.001")
-        inject = {"events": ["props (malformed JSON, not NULL)"]}
-        if not args.skip_build:
-            build_malformed_json(dst)
-    elif args.unicode_text:
-        dst = scratch.scratch_path("unicode_sf0.001")
-        inject = {"documents": ["text (unicode case-folding class, not NULL)"]}
-        if not args.skip_build:
-            build_unicode_text(dst)
-    elif args.extreme_values:
-        dst = scratch.scratch_path("extreme_sf0.001")
-        inject = {"events": ["value (extreme doubles, not NULL)"]}
-        if not args.skip_build:
-            build_extreme_values(dst)
-    elif args.duplicate_rows:
-        dst = scratch.scratch_path("duprows_sf0.001")
-        inject = {"*": ["~1% exact duplicate rows, ids included"]}
-        if not args.skip_build:
-            build_duplicate_rows(dst)
-    elif args.dup_on_nulls:
-        dst = scratch.scratch_path("dupnulls_sf0.001")
-        inject = {"*": ["~1% duplicates OF the w2+w3 null-injected rows"]}
-        if not args.skip_build:
-            base = DST + "-w2-w3"
-            if not os.path.isdir(base):
-                combined = {
-                    t: sorted(
-                        set(INJECT.get(t, []))
-                        | set(INJECT_WAVE2.get(t, []))
-                        | set(INJECT_WAVE3.get(t, []))
-                    )
-                    for t in set(INJECT) | set(INJECT_WAVE2) | set(INJECT_WAVE3)
-                }
-                build_nulldata(combined, base)
-            build_duplicate_rows(dst, src_dir=base)
-    else:
-        dst = DST
-        inject = dict(INJECT)
-        if args.wave2:
-            inject = {
-                t: sorted(set(inject.get(t, [])) | set(INJECT_WAVE2.get(t, [])))
-                for t in set(inject) | set(INJECT_WAVE2)
-            }
-        if args.wave3:
-            inject = {
-                t: sorted(set(inject.get(t, [])) | set(INJECT_WAVE3.get(t, [])))
-                for t in set(inject) | set(INJECT_WAVE3)
-            }
-        # each flag COMBINATION gets its own dataset dir — the combined
-        # wave must never overwrite a single wave's data, or a later
-        # --skip-build run of that wave silently tests the wrong inject
-        suffix = ("-w2" if args.wave2 else "") + ("-w3" if args.wave3 else "")
-        dst = DST + suffix
-        if not args.skip_build:
-            build_nulldata(inject, dst)
-
-    import __spark_entry__ as entry_mod
-    from gatelib import compare_queries, summarize
-
-    from transformers_spark.session import get_spark
-
-    qs = entry_mod.queries()
-    names = [args.only] if args.only else list(qs)
-
-    spark = get_spark(app_name="null-robustness-gate")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    results = compare_queries(spark, qs, names, dst)
-    summ = summarize(results)
-
-    print("\n=== NULL-GATE SUMMARY ===")
-    print(
-        f"checked: {summ['n_checked']}  mismatches: "
-        f"{len(summ['mismatches'])}  errors: {len(summ['errors'])}"
-    )
-    for n in summ["mismatches"]:
-        print("MISMATCH:", n)
-    for n in summ["errors"]:
-        print(f"--- ERROR {n} ---\n{results[n].get('traceback', '')}")
-    if args.json:
-        import json
-
-        with open(args.json, "w") as fh:
-            json.dump({"data": dst, "inject": inject, **summ}, fh, indent=1)
-        print(f"wrote {args.json}")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -2,9 +2,9 @@
 """ONE gate runner, ONE denominator (round-6 verdict ask 3).
 
 Round 6 left robustness coverage split across per-wave artifacts with
-different denominators (DUPGATE/SKEWGATE at 163 queries, the 5 late
-additions covered only by the separate NEWQ_WAVES replay) — one
-catalog append away from a silent hole. This runner kills that drift
+different denominators (the duplicate-row and skew waves at 163
+queries, the 5 late additions covered only by a separate replay) —
+one catalog append away from a silent hole. This runner kills that drift
 class structurally:
 
 * it reads the CURRENT catalog from ``__spark_entry__.queries()``
@@ -12,13 +12,13 @@ class structurally:
 * it REBUILDS every wave dataset from the builders (so a builder fix,
   e.g. the round-7 vertical-tab probe in the degenerate-text wave, is
   always in the data);
-* it emits ONE ``GATES_r{N}.json`` where every mutation-wave row has
+* it emits ONE ``--json`` artifact where every mutation-wave row has
   ``n_checked == n_catalog``, and the per-table empty scenarios list
   their skips EXPLICITLY (``n_checked + n_skipped == n_catalog``,
   skipped = query's oracle never reads the emptied table, so its
   result is definitionally identical to the base-data gate).
 
-    python tools/run_gates.py --json GATES_r07.json
+    python tools/run_gates.py --json /tmp/gates.json
     python tools/run_gates.py --waves duprows,skew --json /tmp/g.json
     python tools/run_gates.py --queries q1,q2 --json /tmp/newq.json
 
@@ -26,6 +26,10 @@ The ``--queries`` restriction is the newq-replay mode (mid-round
 catalog append coverage without 168 x 12 compares); the artifact then
 records ``restricted: true`` so it can never be mistaken for the
 full-denominator round artifact.
+
+The wave datasets come from the builders in ``null_gate``,
+``skew_gate`` and ``empty_gate``; every wave runs through
+``gatelib.compare_queries``.
 """
 
 from __future__ import annotations
@@ -109,10 +113,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
-    import gatelib
     from gatelib import compare_queries, summarize
-
-    gatelib.stage_round_artifacts()  # adopt driver-written evidence
 
     from transformers_spark.session import get_spark
 
@@ -208,9 +209,6 @@ def main() -> None:
     }
     with open(args.json, "w") as fh:
         json.dump(summary, fh, indent=1)
-    import gatelib
-
-    gatelib.stage_artifact(args.json)
     print(f"\n=== GATES SUMMARY: catalog={len(catalog)} "
           f"red={n_red} full_denominator_green={ok} ===")
     print(f"wrote {args.json}")

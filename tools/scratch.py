@@ -1,12 +1,11 @@
-"""Pinned scratch root for generated gate/soak datasets and per-arm
-bench scratch (round-7 verdict ask 5).
+"""Pinned scratch root for generated gate datasets (round-7 verdict
+ask 5).
 
 These instruments used to write under /tmp, and a mid-session /tmp
 wipe destroyed a bench epoch AND the 10x soak datasets in one stroke
-(BENCH_NOTES round 7). Everything generated now lands under ONE
-pinned, gitignored directory — ``$SPARK_GRAFT_SCRATCH`` if set, else
-``<repo>/.scratch`` — which shares a volume with the repo the
-instruments serve, not with whatever cleans /tmp.
+(round 7). Everything generated now lands under ONE pinned, gitignored
+directory, ``<repo>/.scratch``, which shares a volume with the repo
+the instruments serve, not with whatever cleans /tmp.
 """
 
 from __future__ import annotations
@@ -17,9 +16,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def scratch_dir() -> str:
-    root = os.environ.get(
-        "SPARK_GRAFT_SCRATCH", os.path.join(REPO, ".scratch")
-    )
+    root = os.path.join(REPO, ".scratch")
     os.makedirs(root, exist_ok=True)
     return root
 

@@ -1,5 +1,4 @@
-#!/usr/bin/env python
-"""Adversarial-skew gate (round-6 verdict ask 2).
+"""Adversarial-skew wave dataset (round-6 verdict ask 2).
 
 Builds a copy of sf0.001 with two degenerate-cardinality injections —
 the exact shapes the r5 verdict flagged as "documented in prose, not
@@ -12,34 +11,23 @@ enforced":
   collect would materialize it; ``event_path_counts``'s
   WindowGroupLimit slice ships at most 3 rows per user-day).
 
-Then runs the FULL dual-engine compare — the injections change every
-event/lineitem aggregate, identically in both engines, so the whole
-catalog doubles as a skew wave — and records per-query wall time. The
-artifact pins that the two guarded queries stay green AND bounded
-(each within --bound seconds, default 60).
+The injections change every event/lineitem aggregate, identically in
+both engines, so the whole catalog doubles as a skew wave. The wave
+runs as ``skew`` in ``tools/run_gates.py``:
 
-    python tools/skew_gate.py --json SKEWGATE_r06.json
+    python tools/run_gates.py --waves skew --json /tmp/skew.json
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import shutil
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-import scratch
-
 SRC = "/root/testdata/sf0.001"
-DST = scratch.scratch_path("skew_sf0.001")
 
 MEGA_BASKET_PARTS = 5_000
 BOT_DAY_EVENTS = 50_000
-GUARDED = ["order_basket_pairs", "event_path_counts"]
 
 
 def build_skewdata(dst_dir: str) -> None:
@@ -91,80 +79,3 @@ COPY (
         else:
             shutil.copyfile(src, dst)
     print(f"built {dst_dir} (adversarial skew)", file=sys.stderr)
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--json", default=None)
-    ap.add_argument("--only", default=None)
-    ap.add_argument("--skip-build", action="store_true")
-    ap.add_argument("--bound", type=float, default=60.0,
-                    help="max seconds a GUARDED query may take on the "
-                         "skewed data before the gate reds it")
-    args = ap.parse_args()
-
-    if not args.skip_build:
-        build_skewdata(DST)
-
-    import __spark_entry__ as entry_mod
-    from gatelib import compare_queries, summarize
-
-    from transformers_spark.session import get_spark
-
-    qs = entry_mod.queries()
-    names = [args.only] if args.only else list(qs)
-
-    spark = get_spark(app_name="adversarial-skew-gate")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    results = compare_queries(spark, qs, names, DST)
-    summ = summarize(results)
-
-    overtime = [
-        n for n in GUARDED
-        if n in results and results[n]["secs"] > args.bound
-    ]
-    print("\n=== SKEW-GATE SUMMARY ===")
-    print(
-        f"checked: {summ['n_checked']}  mismatches: "
-        f"{len(summ['mismatches'])}  errors: {len(summ['errors'])}"
-    )
-    for n in GUARDED:
-        if n in results:
-            print(f"  guarded {n}: {results[n]['status']}"
-                  f" in {results[n]['secs']}s (bound {args.bound}s)")
-    for n in summ["mismatches"]:
-        print("MISMATCH:", n)
-    for n in summ["errors"]:
-        print(f"--- ERROR {n} ---\n{results[n].get('traceback', '')}")
-    if overtime:
-        print(f"OVERTIME (guarded query blew the bound): {overtime}")
-    if args.json:
-        with open(args.json, "w") as fh:
-            json.dump(
-                {
-                    "data": DST,
-                    "inject": {
-                        "lineitem": f"1 order x {MEGA_BASKET_PARTS} parts",
-                        "events": f"1 user-day x {BOT_DAY_EVENTS} events",
-                    },
-                    **summ,
-                    "guarded": {
-                        n: {
-                            "status": results[n]["status"],
-                            "secs": results[n]["secs"],
-                        }
-                        for n in GUARDED if n in results
-                    },
-                    "bound_secs": args.bound,
-                    "overtime": overtime,
-                },
-                fh,
-                indent=1,
-            )
-        print(f"wrote {args.json}")
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -4,9 +4,9 @@ Operators that ``persist()``/``cache()`` an intermediate (gram tables,
 vocabulary counts, prefix-sum inputs) register it here via
 :func:`track`. Harnesses then call :func:`release` once the consuming
 query has been MATERIALIZED — the catalog wrapper (queries.query_fns),
-bench.py, and the pytest oracle harness all do — so cached frames from
-one query never accumulate executor memory across a 90-query catalog
-run.
+the benchmark, the gates and the pytest oracle harness all do — so
+cached frames from one query never accumulate executor memory across
+a 90-query catalog run.
 
 Why not rely on the ``result._grams_cache``-style attribute handles the
 operators also expose? Those are lost on any further DataFrame

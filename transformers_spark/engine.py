@@ -239,8 +239,8 @@ class Engine:
             # running N transforms at once against one table) needs no
             # session isolation from the loaders: they set no session
             # conf, each load writes its own version directory and only
-            # the catalog commit serializes (loaders.py). Soaked in
-            # tools/concurrency_soak.py; regression in
+            # the catalog commit serializes (loaders.py). Soaked with
+            # 8 workers at 10x in round 9; regression in
             # tests/test_concurrency.py.
             day_dfs: dict[date, DataFrame] = {}
             for i, day in enumerate(days):

@@ -258,8 +258,9 @@ def q_event_path_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice" — equivalent to the old size(es) >= 3 but computed on the
     bounded frame. Path rollup is an ordinary hash aggregate; the
     final top-10 is TakeOrderedAndProject, never a global sort.
-    Skew-gated: tools/skew_gate.py injects a 50k-event user-day and
-    re-runs the dual compare (SKEWGATE_r06.json).
+    Skew-gated: the skew wave of tools/run_gates.py injects a
+    50k-event user-day and re-runs the dual compare (green since
+    round 6).
     """
     register_tables(spark, sf_dir, ("events",))
     ev = spark.table("events").filter(
@@ -339,9 +340,10 @@ def q_order_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning the join reuses; the cap is part of the metric's
     contract and mirrored in the oracle — degenerate mega-baskets are
     noise for support/lift and would put m²/2 pairs on one join key's
-    task). Skew-gated: tools/skew_gate.py injects a 5k-part order and
-    re-runs the dual compare (SKEWGATE_r06.json). Marginals and the
-    1-row order count broadcast into the projection. NULL part keys
+    task). Skew-gated: the skew wave of tools/run_gates.py injects a
+    5k-part order and re-runs the dual compare (green since round 6).
+    Marginals and the 1-row order count broadcast into the
+    projection. NULL part keys
     drop out of pairs by construction (NULL < x is never TRUE) and are
     excluded from marginals to match.
 

@@ -784,7 +784,7 @@ def q_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE codebook collect shared across the probe settings (the same
     # index is probed at every n_probe; per-call collects cost ~2 s
-    # cold at sf0.1 — IVFCOLD_r10.json, r9 verdict ask 4). The public
+    # cold at sf0.1, measured in round 10; r9 verdict ask 4). The public
     # default_codebook helper IS ivf_topk's default seeding rule, so
     # the curve can never diverge from per-call behavior (r10 ADVICE).
     # ivf_probe_sweep also shares the corpus CELL ASSIGNMENT and the

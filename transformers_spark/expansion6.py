@@ -777,7 +777,7 @@ def q_lsh_scurve_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE signature pass shared by all three band configs (signatures
     # are the dominant cost — a per-config minhash_lsh_pairs call
     # would scan + hash the corpus three times; measured 117 s -> the
-    # shared-sig form at 100x, SF100_r09)
+    # shared-sig form at 100x, measured in round 9)
     sigs = cache.track(
         minhash_signatures(docs, num_perm=SCURVE_NUM_PERM).persist()
     )

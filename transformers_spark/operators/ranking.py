@@ -18,7 +18,7 @@ The offsets deliberately stay distributed — an earlier version
 collected them driver-side, which cost one extra Spark ACTION per
 call (a full job round-trip: schedule + AQE re-plan + py4j) on top of
 the final query's own. The per-query job floor is ~150-300 ms/job
-locally (FLOOR_r12.json) and a driver sync point at any scale, while
+locally (measured in round 12) and a driver sync point at any scale, while
 the in-plan window runs over a frame the size of the partition count.
 
 The sort key must be a TOTAL order (include a unique tie-break

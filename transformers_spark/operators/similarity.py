@@ -334,7 +334,7 @@ def ivf_topk(
     the per-call collect entirely — callers probing several settings
     against ONE index (ivf_probe_recall_curve) collect once and share
     (the collect is ~2 s cold / ~0.25 s warm per call at sf0.1,
-    IVFCOLD_r10.json).
+    measured in round 10).
     """
     # null-vector contract: NULL embeddings are dropped at intake —
     # they cannot seed the codebook, be assigned a cell, or be scored

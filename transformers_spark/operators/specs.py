@@ -1550,7 +1550,7 @@ def q_streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session's gap boundary, so the engine's one trailing
         # timeout batch flushes every open session deterministically.
         # Byte-identical output to the old file-at-a-time drain
-        # (tools/sessionization_split.py compares them row-for-row)
+        # (compared row-for-row in round 13)
         # at 2 micro-batches instead of 5 — each batch pays a
         # state-store/Python round trip measured at 0.75-2 s (r12).
         # Production streams (unbounded sources) still drain

@@ -608,7 +608,7 @@ def _span_hash(joined: Column, hasher: str) -> Column:
     (md5, 32-hex-char string — identical in the DuckDB oracle) or
     ``fast`` (JVM xxhash64, an 8-byte LONG — no digest + hex
     round-trip, and the hash KEY is 4x smaller). Measured effect
-    (SPANHASH_BYTES_r12.json, executor shuffle metrics on the policy
+    (round 12, executor shuffle metrics on the policy
     operator): total shuffle bytes shrink 2.95x at 1x and 2.19x on
     the 100x saturated corpus — less than the 4x key ratio because
     the shuffled rows also carry doc/pos ints and the downstream
