@@ -82,12 +82,11 @@ def test_next_load_rolls_an_interrupted_commit_forward(spark, monkeypatch, next_
         writer.append(fqn, spark.createDataFrame([(3, "c")], "id bigint, v string"))
         want = [3, 10, 20]
     elif next_load == "replace":
-        # a frame that reads its destination is built after the entry
-        # step, as the engine does
-        writer.prepare(fqn)
-        writer.overwrite_table(
-            fqn, cat.read(fqn).selectExpr("id + 1 AS id", "v"), reads_destination=True
-        )
+        # a frame that reads its destination is built under the table
+        # lock, after the entry step, as the engine does
+        with loaders.table_write_lock(cat.spark_name(fqn)):
+            writer.prepare(fqn)
+            writer.overwrite_table(fqn, cat.read(fqn).selectExpr("id + 1 AS id", "v"))
         want = [11, 21]
     elif next_load == "delete":
         writer.delete_where(fqn, "id = 20")
@@ -229,18 +228,29 @@ def test_commits_keep_at_most_one_replaced_version(spark):
 
 
 def test_a_version_being_written_is_never_deleted(spark):
+    """A version is only written under its table's lock, so a commit on
+    the table waits until the load writing it is done."""
     fqn = "g-project.playground.gc_in_flight"
     cat, writer = _flat(spark, fqn)
-    tdir = writer._versions_dir(cat.spark_name(fqn))
-    pending = os.path.join(tdir, "pending")
-    os.makedirs(pending)
-    with loaders._writing(pending):
+    name = cat.spark_name(fqn)
+    pending = os.path.join(writer._versions_dir(name), "pending")
+
+    def commits():
         for i in range(3):
             writer.overwrite_table(fqn, spark.createDataFrame([(i, "x")], "id bigint, v string"))
+
+    other = threading.Thread(target=commits)
+    with loaders.table_write_lock(name):
+        os.makedirs(pending)  # a load mid-write
+        other.start()
+        other.join(timeout=5)
+        assert other.is_alive()  # its commits wait for the lock
         assert os.path.isdir(pending)
-    for i in range(2):
-        writer.overwrite_table(fqn, spark.createDataFrame([(i, "x")], "id bigint, v string"))
-    assert not os.path.exists(pending)  # unreferenced once no longer in flight
+        assert _ids(cat, fqn) == [1, 2]
+    other.join(timeout=300)
+    assert not other.is_alive()
+    assert _ids(cat, fqn) == [2]
+    assert not os.path.exists(pending)  # unreferenced once its load is done
     cat.drop_table(fqn)
 
 
@@ -265,9 +275,10 @@ def test_recreated_table_ignores_the_dropped_tables_record(spark, monkeypatch, d
 
 
 def test_concurrent_replaces_never_delete_a_version_in_flight(spark):
-    """REPLACEs on one table write their versions outside the lock while
-    other commits land and delete what they replaced; no commit may
-    delete a version that is still being written."""
+    """Eight threads REPLACE one table while each commit deletes what
+    the commit before it replaced; every load holds the table lock
+    from its entry step through its commit, so no commit deletes a
+    version that is still being written."""
     fqn = "g-project.playground.gc_race"
     cat, writer = _flat(spark, fqn)
     errors = []

@@ -3,11 +3,11 @@ ask 6; an 8-worker 10x soak ran in round 9 — this is the always-on
 small replica).
 
 Three adjacent-day REPLACE loads run simultaneously against one
-destination table, each on its own ``spark.newSession()`` — the
-isolation rule the engine requires for concurrent transforms, because
-session confs (``partitionOverwriteMode``) are session-global and the
-loaders toggle them around every staged swap. The concurrent result
-must equal the serial baseline bit-exactly, per partition."""
+destination table, each on its own ``spark.newSession()``. The loaders
+set no session conf, and each load holds the table's lock from its
+entry step through its commit, so the three end in some serial order.
+The concurrent result must equal the serial baseline bit-exactly, per
+partition."""
 
 from __future__ import annotations
 

@@ -185,3 +185,111 @@ def test_merge_racing_replace_serializes(spark, iteration):
         serial_merge_then_replace,
         serial_replace_then_merge,
     ), f"not a serial outcome: {final}"
+
+
+SELF_READ_FQN = "g-project.playground.conc_self_read"
+D1, D2 = "DATE '2024-01-01'", "DATE '2024-01-02'"
+# A partitioned scan binds its partition list when it runs, so the
+# partitioned arms read the destination at plan time through a script
+# variable, as a watermark DECLARE does.
+TOP_ID = f"DECLARE top_id INT64 DEFAULT (SELECT MAX(id) FROM `{SELF_READ_FQN}`);\n"
+# load A reads its destination; load B writes constants.
+# (A's query, B's query, A-then-B, B-then-A) per load method.
+SELF_READ_CASES = {
+    "replace": (
+        f"SELECT id + 1 AS id FROM `{SELF_READ_FQN}`",
+        "SELECT 100 AS id",
+        [(100,)],
+        [(101,)],
+    ),
+    "replace_fanout": (
+        TOP_ID + "SELECT top_id + 1 AS id, DATE '{{ .DSTART | Date }}' AS d",
+        "SELECT 100 AS id, DATE '{{ .DSTART | Date }}' AS d",
+        [(100, "2024-01-01"), (100, "2024-01-02")],
+        [(101, "2024-01-01"), (101, "2024-01-02")],
+    ),
+    "replace_merge_auto": (
+        TOP_ID + f"SELECT top_id + 1 AS id, {D1} AS d",
+        f"SELECT 100 AS id, {D1} AS d",
+        [(100, "2024-01-01"), (2, "2024-01-02")],
+        [(101, "2024-01-01"), (2, "2024-01-02")],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(SELF_READ_CASES))
+def test_self_reading_load_races_another_load_to_a_serial_outcome(
+    spark, monkeypatch, case
+):
+    """A load whose query reads its own destination, racing another
+    in-process load of that table through ``Engine.transform``: B starts
+    right after A's frame is planned and gets a few seconds. If A's
+    plan is not under the table lock, B commits in between and A's
+    commit writes a state no serial order gives (A's +1 applied to the
+    rows B replaced)."""
+    from datetime import datetime
+
+    from transformers_spark.catalog import PartitionKind, PartitionSpec
+    from transformers_spark.config import LoadMethod, TaskConfig
+    from transformers_spark.engine import Engine, compile_assets
+
+    query_a, query_b, a_then_b, b_then_a = SELF_READ_CASES[case]
+    partitioned = case != "replace"
+    method = LoadMethod.REPLACE_MERGE if case == "replace_merge_auto" else LoadMethod.REPLACE
+    dstart, dend = datetime(2024, 1, 1), datetime(2024, 1, 2 if case == "replace" else 3)
+    exec_time = datetime(2024, 1, 4)
+
+    eng_a, eng_b = Engine(spark), Engine(spark)
+    cat = eng_a.catalog
+    cat.drop_table(SELF_READ_FQN)
+    if partitioned:
+        cat.create_table(
+            SELF_READ_FQN, [("id", "bigint"), ("d", "date")],
+            partition=PartitionSpec(kind=PartitionKind.COLUMN_DAY, field="d"),
+        )
+        initial = f"SELECT 1 AS id, {D1} AS d UNION ALL SELECT 2, {D2}"
+    else:
+        cat.create_table(SELF_READ_FQN, [("id", "bigint")])
+        initial = "SELECT 1 AS id"
+    eng_a.writer.append(SELF_READ_FQN, spark.sql(initial))
+    cfg = TaskConfig(
+        destination_project="g-project",
+        destination_dataset="playground",
+        destination_table_name="conc_self_read",
+        load_method=method,
+    )
+
+    def load(eng, template):
+        sql = compile_assets(template, dstart, dend, method)
+        eng.transform(cfg, sql, dstart, dend, exec_time)
+
+    errors: list[BaseException] = []
+
+    def run_b() -> None:
+        try:
+            load(eng_b, query_b)
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    b = threading.Thread(target=run_b)
+    real = Engine._render_and_plan
+
+    def plan_then_race(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        if self is eng_a and b.ident is None:  # A planned its first frame
+            b.start()
+            b.join(timeout=8)  # time for B to commit, unless it must wait
+        return out
+
+    monkeypatch.setattr(Engine, "_render_and_plan", plan_then_race)
+    load(eng_a, query_a)
+    b.join(timeout=300)
+    assert not b.is_alive()
+    assert not errors, errors
+
+    rows = cat.read(SELF_READ_FQN).collect()
+    final = sorted(
+        (r["id"], str(r["d"])) if partitioned else (r["id"],) for r in rows
+    )
+    assert final in (sorted(a_then_b), sorted(b_then_a)), f"not a serial outcome: {final}"
+    cat.drop_table(SELF_READ_FQN)

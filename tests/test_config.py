@@ -79,13 +79,6 @@ def test_label_parsing():
         parse_labels("a=")
 
 
-def test_write_mode_mapping():
-    assert LoadMethod.APPEND.write_mode == "append"
-    assert LoadMethod.REPLACE.write_mode == "overwrite"
-    with pytest.raises(ValueError):
-        LoadMethod.MERGE.write_mode
-
-
 def test_naming_validators_match_reference_rules():
     """reference optimus-plugin-bq2bq.yaml:9-36 via validate.go:15-30:
     ^[a-zA-Z0-9_-]+$, minlength 3 (table maxlength 1024)."""

@@ -4,7 +4,6 @@ import pytest
 
 from transformers_spark.dialect import (
     classify_statement,
-    split_headers_and_body,
     split_statements,
     table_references,
     transpile,
@@ -92,15 +91,6 @@ def test_classify():
     assert classify_statement("MERGE `t` S using (select 1) N on false") == "merge"
     assert classify_statement("WITH x AS (select 1) select * from x") == "select"
     assert classify_statement("DROP TABLE `a`") == "drop_table"
-
-
-def test_split_headers_and_body():
-    sql = (
-        "CREATE TEMP FUNCTION f(x STRING) RETURNS STRING LANGUAGE js AS 'x';\n"
-        "WITH d AS (SELECT 1 AS a) SELECT * FROM d"
-    )
-    headers, body = split_headers_and_body(sql)
-    assert len(headers) == 1 and body.startswith("WITH d")
 
 
 def test_table_references_basic():

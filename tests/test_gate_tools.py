@@ -35,15 +35,38 @@ def test_compare_queries_reports_four_checks(spark, sf_dir, monkeypatch):
     assert row["rows_match"] is False
 
 
-def test_run_gates_imports_and_lists_its_waves(monkeypatch):
+def _run_gates(monkeypatch):
     monkeypatch.setattr(sys, "path", list(sys.path))
     spec = importlib.util.spec_from_file_location(
         "run_gates", os.path.join(TOOLS, "run_gates.py")
     )
     run_gates = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(run_gates)
+    return run_gates
 
+
+def test_run_gates_imports_and_lists_its_waves(monkeypatch):
+    run_gates = _run_gates(monkeypatch)
     assert [w["label"] for w in run_gates.mutation_waves()] == [
         "null-w1", "null-w2", "null-w3", "null-all", "degentext",
         "badjson", "unicode", "extreme", "duprows", "dupnulls", "skew",
     ]
+
+
+def test_skew_wave_reds_a_guarded_query_over_its_bound(monkeypatch):
+    run_gates = _run_gates(monkeypatch)
+    bound = run_gates.SKEW_BOUND_S
+    results = {
+        "order_basket_pairs": {"status": "green", "secs": bound + 1.5},
+        "event_path_counts": {"status": "green", "secs": bound - 1.0},
+        "windowed_daily_events": {"status": "green", "secs": bound * 2},
+    }
+    row = {"mismatches": [], "errors": [], **run_gates.skew_times(results)}
+    assert row["guarded_secs"] == {
+        "order_basket_pairs": bound + 1.5, "event_path_counts": bound - 1.0,
+    }
+    assert run_gates.red_queries(row) == ["order_basket_pairs"]
+
+    results["order_basket_pairs"]["secs"] = bound
+    row.update(run_gates.skew_times(results))
+    assert run_gates.red_queries(row) == []

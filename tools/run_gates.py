@@ -29,7 +29,9 @@ full-denominator round artifact.
 
 The wave datasets come from the builders in ``null_gate``,
 ``skew_gate`` and ``empty_gate``; every wave runs through
-``gatelib.compare_queries``.
+``gatelib.compare_queries``. The skew wave also records the seconds of
+the two queries its injections target and reds either one slower than
+``SKEW_BOUND_S`` (60 s).
 """
 
 from __future__ import annotations
@@ -50,6 +52,12 @@ import null_gate
 import skew_gate
 
 TABLES = empty_gate.TABLES
+
+# The skew wave must keep the two queries its injections target bounded,
+# not only green: a guarded query slower than this on the skewed data
+# reds the wave.
+SKEW_GUARDED = ("order_basket_pairs", "event_path_counts")
+SKEW_BOUND_S = 60.0
 
 
 def _null_inject(*maps: dict) -> dict:
@@ -90,6 +98,21 @@ def mutation_waves() -> list[dict]:
                d, src_dir=_ensure_nullall(wall))),
         _w("skew", scratch.scratch_path("skew_sf0.001"), skew_gate.build_skewdata),
     ]
+
+
+def skew_times(results: dict[str, dict]) -> dict:
+    """The guarded queries' seconds on the skew wave, and the ones over
+    ``SKEW_BOUND_S``."""
+    secs = {n: results[n]["secs"] for n in SKEW_GUARDED if n in results}
+    return {
+        "guarded_secs": secs,
+        "overtime": sorted(n for n, t in secs.items() if t > SKEW_BOUND_S),
+    }
+
+
+def red_queries(row: dict) -> list[str]:
+    """A wave row's red queries: mismatches, errors and overtime."""
+    return row["mismatches"] + row["errors"] + row.get("overtime", [])
 
 
 def _ensure_nullall(inject: dict) -> str:
@@ -141,8 +164,8 @@ def main() -> None:
     def record(label: str, row: dict) -> None:
         nonlocal n_red
         artifact[label] = row
-        n_red += len(row["mismatches"]) + len(row["errors"])
-        bad = row["mismatches"] + row["errors"]
+        bad = red_queries(row)
+        n_red += len(bad)
         print(f"  {label}: {row['n_green']}/{row['n_checked']}"
               + (f"  RED: {bad}" if bad else ""), file=sys.stderr)
 
@@ -155,7 +178,13 @@ def main() -> None:
         print(f"=== wave {label} ({len(names)} queries) ===",
               file=sys.stderr)
         results = compare_queries(spark, qs, names, dst)
-        record(label, {"data": dst, **summarize(results)})
+        row = {"data": dst, **summarize(results)}
+        if label == "skew":
+            row.update(skew_times(results))
+            for n, t in row["guarded_secs"].items():
+                print(f"  guarded {n}: {t}s (bound {SKEW_BOUND_S}s)",
+                      file=sys.stderr)
+        record(label, row)
 
     # empty-input scenarios: all-empty over everything, then one table
     # at a time over the queries whose oracle reads it (skips listed)

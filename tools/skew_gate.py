@@ -13,7 +13,8 @@ enforced":
 
 The injections change every event/lineitem aggregate, identically in
 both engines, so the whole catalog doubles as a skew wave. The wave
-runs as ``skew`` in ``tools/run_gates.py``:
+runs as ``skew`` in ``tools/run_gates.py``, which also reds
+``order_basket_pairs`` or ``event_path_counts`` slower than 60 s:
 
     python tools/run_gates.py --waves skew --json /tmp/skew.json
 """

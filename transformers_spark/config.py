@@ -34,14 +34,6 @@ class LoadMethod(Enum):
     REPLACE_ALL = "REPLACE_ALL"
     MERGE = "MERGE"
 
-    @property
-    def write_mode(self) -> str:
-        if self is LoadMethod.APPEND:
-            return "append"
-        if self in (LoadMethod.REPLACE, LoadMethod.REPLACE_MERGE, LoadMethod.REPLACE_ALL):
-            return "overwrite"
-        raise ValueError("write mode is only defined for APPEND/REPLACE load methods")
-
 
 def _validate_timezone(name: str) -> str:
     ZoneInfo(name)  # raises on unknown zone

@@ -692,7 +692,6 @@ def split_statements(sql: str) -> list[str]:
     return [s for s in stmts if s]
 
 
-_DDL_HEAD_RE = re.compile(r"^\s*(CREATE|DECLARE|DROP|ALTER)\b", re.IGNORECASE)
 _STMT_KIND_RES = [
     ("create_temp_function", re.compile(r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+FUNCTION\b", re.IGNORECASE)),
     ("create_temp_table_function", re.compile(r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+TABLE\s+FUNCTION\b", re.IGNORECASE)),
@@ -723,20 +722,6 @@ def classify_statement(stmt: str) -> str:
         if pattern.match(stmt):
             return kind
     return "other"
-
-
-def split_headers_and_body(sql: str) -> tuple[list[str], str]:
-    """DDL headers (CREATE FUNCTION/DECLARE/...) vs the single DML/CTE
-    body — reference query.py:155-179 semantics."""
-    stmts = split_statements(sql)
-    if len(stmts) == 1:
-        return [], stmts[0]
-    headers, body = [], []
-    for stmt in stmts:
-        (headers if _DDL_HEAD_RE.match(stmt) else body).append(stmt)
-    if len(body) != 1:
-        raise ValueError("invalid replace query, should have exactly one DML/CTE statement")
-    return headers, body[0]
 
 
 # --- table reference extraction (regex layer) -------------------------------

@@ -29,12 +29,12 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import Catalog
+from .catalog import Catalog, PartitionKind
 from .config import LoadMethod, TaskConfig
 from .dialect import (
     classify_statement,
     split_statements,
-    table_references,
+    table_references,  # noqa: F401 — perfbench/tracer.py wraps engine.table_references
     transpile,
 )
 from .dml import (
@@ -46,7 +46,7 @@ from .dml import (
     parse_merge,
     parse_update,
 )
-from .loaders import Writer
+from .loaders import Writer, table_write_lock
 from .macros import render_macros
 from .session import apply_engine_conf
 from .windowing import CustomWindow, Window, localise_datetime
@@ -161,20 +161,15 @@ class Engine:
         dry_run: bool = False,
     ) -> TransformResult:
         tz = task_config.timezone
-        l_dstart = localise_datetime(dstart, tz)
-        l_dend = localise_datetime(dend, tz)
         l_exec = localise_datetime(execution_time, tz)
+        window = CustomWindow(localise_datetime(dstart, tz), localise_datetime(dend, tz))
         dest = task_config.destination_table
         method = task_config.load_method
         result = TransformResult(load_method=method, destination=dest, dry_run=dry_run)
         self.writer.reset_rows_written()
-        if method is not LoadMethod.MERGE and not dry_run:
-            # finish the destination's interrupted commit before any
-            # plan below reads it (MERGE scripts' DML does its own)
-            self.writer.prepare(dest)
 
         if method is LoadMethod.MERGE:
-            window = CustomWindow(l_dstart, l_dend)
+            # the script's DML locks and prepares its own targets
             rendered = render_macros(
                 sql_query, window=window, execution_time=l_exec,
                 destination_table=dest, strict=True,
@@ -186,157 +181,122 @@ class Engine:
                 self._dry_run_validate(rendered)
             return result
 
-        if method is LoadMethod.APPEND:
-            window = CustomWindow(l_dstart, l_dend)
-            df, rendered = self._render_and_plan(sql_query, window, l_exec, dest)
-            result.rendered_queries.append(rendered)
-            if dry_run:
-                return result
-            self.writer.append(
-                dest,
-                df,
-                partition_date=l_exec.date(),
-                allow_field_addition=task_config.allow_field_addition,
-            )
+        if dry_run:  # plans without locking or preparing
+            self._load(task_config, sql_query, window, l_exec, result, dry_run)
             return result
+        # One critical section per load: the destination's lock is held
+        # from the entry step (which finishes an interrupted commit)
+        # through plan build, version write and commit, so a query that
+        # reads its own destination plans the state its commit replaces,
+        # and concurrent in-process loads of one table end in SOME
+        # serial order (loaders.py).
+        with table_write_lock(self.catalog.spark_name(dest)):
+            self.writer.prepare(dest)
+            self._load(task_config, sql_query, window, l_exec, result, dry_run)
+        return result
 
-        meta = self.catalog.get_table(dest)  # CREATE_NEVER: must exist
-
-        if method is LoadMethod.REPLACE:
-            if not meta.partition.is_partitioned:
-                first_query = sql_query.split(BREAK_MARKER)[0]
-                window = CustomWindow(l_dstart, l_dend)
-                df, rendered = self._render_and_plan(first_query, window, l_exec, dest)
-                result.rendered_queries.append(rendered)
-                if not dry_run:
-                    # detect self-reads on the RENDERED text: the
-                    # __destination_table__ macro only becomes a table
-                    # reference after rendering
-                    reads_dest = dest in table_references(rendered)
-                    self.writer.overwrite_table(
-                        dest,
-                        df,
-                        allow_field_addition=task_config.allow_field_addition,
-                        reads_destination=reads_dest,
-                    )
-                return result
-            # DAY-partitioned: per-day fan-out (reference
-            # MultiPartitionTransformation, transformation.py:362-428)
-            days = CustomWindow(l_dstart, l_dend).days()
-            task_queries = sql_query.split(BREAK_MARKER)
-            if len(task_queries) < len(days):
+    def _load(
+        self,
+        task_config: TaskConfig,
+        sql_query: str,
+        window: CustomWindow,
+        l_exec: datetime,
+        result: TransformResult,
+        dry_run: bool,
+    ) -> None:
+        """Render and plan a non-MERGE load's frames, then make its one
+        write: the query's first break-split part, or one frame per day
+        for a day-partitioned REPLACE (reference
+        MultiPartitionTransformation, transformation.py:362-428)."""
+        dest = task_config.destination_table
+        method = task_config.load_method
+        allow = task_config.allow_field_addition
+        # CREATE_NEVER: the destination must exist (an APPEND plans
+        # without its metadata)
+        meta = None if method is LoadMethod.APPEND else self.catalog.get_table(dest)
+        partitioned = meta is not None and meta.partition.is_partitioned
+        if (
+            method is LoadMethod.REPLACE_MERGE
+            and partitioned
+            and meta.partition.kind == PartitionKind.INGESTION_DAY
+            and task_config.filter_expression is None
+        ):
+            raise ValueError(
+                "partition filter is required for tables partitioned with "
+                "INGESTION TIME, e.g. date(`_PARTITIONTIME`) >= date('{{.DSTART}}')"
+            )
+        parts = sql_query.split(BREAK_MARKER)
+        if method is LoadMethod.REPLACE and partitioned:
+            days = window.days()
+            if len(parts) < len(days):
                 raise ValueError(
                     f"query needs to be broken using {BREAK_MARKER}, "
-                    f"{len(task_queries)} queries found, needed {len(days)}"
+                    f"{len(parts)} queries found, needed {len(days)}"
                 )
+            jobs = [
+                (part, CustomWindow(day, day + timedelta(days=1)))
+                for part, day in zip(parts, days)
+            ]
+            result.partitions_written.extend(
+                day.date() if isinstance(day, datetime) else day for day in days
+            )
+        elif method in (LoadMethod.REPLACE, LoadMethod.REPLACE_ALL) and not partitioned:
+            jobs = [(parts[0], window)]
+        else:
+            jobs = [(sql_query, window)]
+        frames = []
+        for query, job_window in jobs:
+            df, rendered = self._render_and_plan(query, job_window, l_exec, dest)
+            frames.append(df)
+            result.rendered_queries.append(rendered)
+        if dry_run:
+            return
 
-            # Plan all per-day sub-queries, then write them as ONE
-            # write job (the reference fans out N
-            # concurrent per-partition BQ jobs; in Spark a single union
-            # job scans the source once and parallelizes internally, so
-            # CONCURRENCY maps to executor parallelism, not driver
-            # threads). Orchestrator-level concurrency (a scheduler
-            # running N transforms at once against one table) needs no
-            # session isolation from the loaders: they set no session
-            # conf, each load writes its own version directory and only
-            # the catalog commit serializes (loaders.py). Soaked with
-            # 8 workers at 10x in round 9; regression in
-            # tests/test_concurrency.py.
-            day_dfs: dict[date, DataFrame] = {}
-            for i, day in enumerate(days):
-                day_window = CustomWindow(day, day + timedelta(days=1))
-                df, rendered = self._render_and_plan(task_queries[i], day_window, l_exec, dest)
-                day_date = day.date() if isinstance(day, datetime) else day
-                day_dfs[day_date] = df
-                result.rendered_queries.append(rendered)
-                result.partitions_written.append(day_date)
-            if not dry_run:
-                self.writer.overwrite_partitions(
-                    dest, day_dfs, allow_field_addition=task_config.allow_field_addition
-                )
-            return result
-
-        if method is LoadMethod.REPLACE_ALL:
-            if not meta.partition.is_partitioned:
-                first_query = sql_query.split(BREAK_MARKER)[0]
-                window = CustomWindow(l_dstart, l_dend)
-                df, rendered = self._render_and_plan(first_query, window, l_exec, dest)
-                result.rendered_queries.append(rendered)
-                if not dry_run:
-                    self.writer.overwrite_table(
-                        dest,
-                        df,
-                        allow_field_addition=task_config.allow_field_addition,
-                        reads_destination=dest in table_references(rendered),
-                    )
-                return result
+        # One write job even for a multi-day REPLACE: the reference fans
+        # out N concurrent per-partition BQ jobs; in Spark a single union
+        # job scans the source once and parallelizes internally, so
+        # CONCURRENCY maps to executor parallelism, not driver threads.
+        # Orchestrator-level concurrency (N transforms at once against
+        # one table) needs no session isolation: the loaders set no
+        # session conf, and the table lock _transform holds serializes
+        # the loads of one table
+        # (tests/test_concurrency.py, tests/test_concurrent_dml.py).
+        if method is LoadMethod.APPEND:
+            self.writer.append(
+                dest, frames[0], partition_date=l_exec.date(), allow_field_addition=allow
+            )
+        elif not partitioned:
+            self.writer.overwrite_table(dest, frames[0], allow_field_addition=allow)
+        elif method is LoadMethod.REPLACE:
+            self.writer.overwrite_partitions(
+                dest, dict(zip(result.partitions_written, frames)),
+                allow_field_addition=allow,
+            )
+        elif method is LoadMethod.REPLACE_ALL:
             # destination partition = window START (aggregations whose
             # source partitions don't map 1:1; reference
             # SinglePartitionTransformation, transformation.py:235-270)
-            window = CustomWindow(l_dstart, l_dend)
-            df, rendered = self._render_and_plan(sql_query, window, l_exec, dest)
-            result.rendered_queries.append(rendered)
-            if not dry_run:
-                self.writer.overwrite_partition(
-                    dest,
-                    df,
-                    partition_date=window.start.date(),
-                    allow_field_addition=task_config.allow_field_addition,
-                    reads_destination=dest in table_references(rendered),
+            self.writer.overwrite_partition(
+                dest, frames[0], partition_date=window.start.date(),
+                allow_field_addition=allow,
+            )
+            result.partitions_written.append(window.start.date())
+        elif task_config.filter_expression is not None:
+            filter_expr = transpile(
+                render_macros(
+                    task_config.filter_expression, window=window,
+                    execution_time=l_exec, destination_table=dest, strict=True,
                 )
-                result.partitions_written.append(window.start.date())
-            return result
-
-        if method is LoadMethod.REPLACE_MERGE:
-            window = CustomWindow(l_dstart, l_dend)
-            if not meta.partition.is_partitioned:
-                df, rendered = self._render_and_plan(sql_query, window, l_exec, dest)
-                result.rendered_queries.append(rendered)
-                if not dry_run:
-                    self.writer.overwrite_table(
-                        dest, df, allow_field_addition=task_config.allow_field_addition
-                    )
-                return result
-            from .catalog import PartitionKind
-
-            if (
-                meta.partition.kind == PartitionKind.INGESTION_DAY
-                and task_config.filter_expression is None
-            ):
-                raise ValueError(
-                    "partition filter is required for tables partitioned with "
-                    "INGESTION TIME, e.g. date(`_PARTITIONTIME`) >= date('{{.DSTART}}')"
-                )
-            df, rendered = self._render_and_plan(sql_query, window, l_exec, dest)
-            result.rendered_queries.append(rendered)
-            if dry_run:
-                return result
-            if task_config.filter_expression is not None:
-                filter_expr = transpile(
-                    render_macros(
-                        task_config.filter_expression,
-                        window=window,
-                        execution_time=l_exec,
-                        destination_table=dest,
-                        strict=True,
-                    )
-                )
-                self.writer.delete_insert(
-                    dest,
-                    df,
-                    filter_expression=filter_expr,
-                    allow_field_addition=task_config.allow_field_addition,
-                    # ingestion-time tables stamp inserted rows with the
-                    # load day (BigQuery's _PARTITIONTIME semantics)
-                    partition_date=l_exec,
-                )
-            else:
-                self.writer.overwrite_dynamic(
-                    dest, df, allow_field_addition=task_config.allow_field_addition
-                )
-            return result
-
-        raise ValueError(f"unsupported load method {method}")
+            )
+            self.writer.delete_insert(
+                dest, frames[0], filter_expression=filter_expr,
+                allow_field_addition=allow,
+                # ingestion-time tables stamp inserted rows with the
+                # load day (BigQuery's _PARTITIONTIME semantics)
+                partition_date=l_exec,
+            )
+        else:
+            self.writer.overwrite_dynamic(dest, frames[0], allow_field_addition=allow)
 
     # ------------------------------------------------------------------
     def collect_spillover_dates(

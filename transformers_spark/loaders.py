@@ -49,8 +49,8 @@ Applying a record twice is harmless, so:
   rolls the record forward: the table reads wholly new.
 
 Re-running the load converges from every window. The hot path makes no
-catalog scan: a load's recovery check is one ``os.path.exists`` unless
-a record is there. Fault injection: tests/test_crash_atomicity.py kills
+catalog scan: a load's recovery check is one file open unless a record
+is there. Fault injection: tests/test_crash_atomicity.py kills
 a real process in each window above.
 
 Old versions. A commit never deletes what it replaces: it records the
@@ -63,19 +63,18 @@ the next commit of their days; ``Writer.recover()`` (quiesced-only)
 deletes every directory no table references. ``Catalog.drop_table``
 deletes the table's ``_versions`` directory, record included.
 
-Concurrency. Within one process, loads on one table take a per-table
-re-entrant lock (``table_write_lock``) for their catalog changes.
-Read-modify-write loads — MERGE / DELETE / UPDATE emulation,
-delete_insert, and a REPLACE whose query reads its own destination —
-hold it across plan build, version write and commit, so N concurrent
-in-process loads on one table produce the state of SOME serial order.
-Other REPLACE-family loads write their version outside the lock, so
-they overlap on everything but the commit; a commit never deletes a
-version another in-process load is still writing. Across processes (or
-sessions on a shared metastore) the engine offers no coordination:
-concurrent cross-process loads on one table are unsupported and
-last-writer-wins; serialize them externally, as the reference's
-orchestrator serializes per-table jobs.
+Concurrency. Within one process, every load on a table holds a
+per-table re-entrant lock (``table_write_lock``) from its entry step
+(``prepare``) through plan build, version write and commit, so N
+concurrent in-process loads on one table produce the state of SOME
+serial order, and a version is only ever written under its table's
+lock: no commit can delete a version that is still being written. A
+caller whose frame reads the destination (the engine, MERGE emulation)
+takes the same lock before it prepares and builds that frame. Across
+processes (or sessions on a shared metastore) the engine offers no
+coordination: concurrent cross-process loads on one table are
+unsupported and last-writer-wins; serialize them externally, as the
+reference's orchestrator serializes per-table jobs.
 """
 
 from __future__ import annotations
@@ -105,15 +104,13 @@ _NULL_DAY = "__HIVE_DEFAULT_PARTITION__"  # partitionBy's dir for dt NULL
 
 _TABLE_LOCKS: dict[str, threading.RLock] = {}
 _LOCKS_GUARD = threading.Lock()
-_IN_FLIGHT: set[str] = set()  # version directories being written
-_IN_FLIGHT_GUARD = threading.Lock()
 
 __all__ = ["Writer", "table_write_lock"]
 
 
 def table_write_lock(spark_name: str) -> threading.RLock:
-    """Per-table re-entrant lock serializing in-process commits and
-    read-modify-write loads (see the concurrency contract above)."""
+    """Per-table re-entrant lock serializing in-process loads (see the
+    concurrency contract above)."""
     with _LOCKS_GUARD:
         return _TABLE_LOCKS.setdefault(
             spark_name.lower(), threading.RLock()
@@ -272,6 +269,13 @@ class Writer:
 
     # -- write modes ----------------------------------------------------
 
+    @contextlib.contextmanager
+    def _load(self, fqn: str):
+        """Every load's critical section: the table lock, held from the
+        entry step through the commit (module docstring)."""
+        with table_write_lock(self.catalog.spark_name(fqn)):
+            yield self.prepare(fqn)
+
     def append(
         self,
         fqn: str,
@@ -279,10 +283,11 @@ class Writer:
         partition_date: date | datetime | None = None,
         allow_field_addition: bool = False,
     ) -> None:
-        meta = self.prepare(fqn)
-        out = self._with_dt(self._align(df, meta, allow_field_addition), meta, partition_date)
-        out, obs = self._observed(out)
-        with table_write_lock(meta.spark_name):
+        with self._load(fqn) as meta:
+            out = self._with_dt(
+                self._align(df, meta, allow_field_addition), meta, partition_date
+            )
+            out, obs = self._observed(out)
             out.write.insertInto(meta.spark_name, overwrite=False)
         self._record(obs)
 
@@ -292,13 +297,9 @@ class Writer:
         df: DataFrame,
         partition_date: date | datetime | None = None,
         allow_field_addition: bool = False,
-        reads_destination: bool = False,
     ) -> None:
-        """WRITE_TRUNCATE of the whole table (all partitions).
-        ``reads_destination`` makes it a read-modify-write load: the
-        table lock is held across the version write and the commit."""
-        meta = self.prepare(fqn)
-        with _locked_if(reads_destination, meta):
+        """WRITE_TRUNCATE of the whole table (all partitions)."""
+        with self._load(fqn) as meta:
             out = self._with_dt(
                 self._align(df, meta, allow_field_addition), meta, partition_date
             )
@@ -310,15 +311,13 @@ class Writer:
         df: DataFrame,
         partition_date: date | datetime,
         allow_field_addition: bool = False,
-        reads_destination: bool = False,
     ) -> None:
         """Partition-decorator write ``table$YYYYMMDD`` — truncate and
         load exactly one day partition; every row lands in that day."""
-        meta = self.prepare(fqn)
-        _require_partitioned(meta)
         if isinstance(partition_date, datetime):
             partition_date = partition_date.date()
-        with _locked_if(reads_destination, meta):
+        with self._load(fqn) as meta:
+            _require_partitioned(meta)
             out = self._align(df, meta, allow_field_addition).withColumn(
                 PARTITION_COL, F.lit(partition_date.isoformat()).cast("date")
             )
@@ -340,18 +339,18 @@ class Writer:
         parallelism Spark schedules internally — at 100 TB, one job
         reading the source once beats 30 jobs re-scanning it.
         """
-        meta = self.prepare(fqn)
-        _require_partitioned(meta)
-        if not day_dfs:
-            return  # empty day window: nothing to replace
-        pieces = [
-            self._align(df, meta, allow_field_addition).withColumn(
-                PARTITION_COL, F.lit(day.isoformat()).cast("date")
-            )
-            for day, df in day_dfs.items()
-        ]
-        combined = functools.reduce(DataFrame.unionByName, pieces)
-        self._commit(meta, combined, days=sorted(day_dfs))
+        with self._load(fqn) as meta:
+            _require_partitioned(meta)
+            if not day_dfs:
+                return  # empty day window: nothing to replace
+            pieces = [
+                self._align(df, meta, allow_field_addition).withColumn(
+                    PARTITION_COL, F.lit(day.isoformat()).cast("date")
+                )
+                for day, df in day_dfs.items()
+            ]
+            combined = functools.reduce(DataFrame.unionByName, pieces)
+            self._commit(meta, combined, days=sorted(day_dfs))
 
     def overwrite_dynamic(
         self, fqn: str, df: DataFrame, allow_field_addition: bool = False
@@ -359,10 +358,10 @@ class Writer:
         """Replace exactly the day-partitions present in the result
         (REPLACE_MERGE auto semantics) — one pass, no temp table, no
         driver-side partition collection."""
-        meta = self.prepare(fqn)
-        _require_partitioned(meta)
-        out = self._with_dt(self._align(df, meta, allow_field_addition), meta, None)
-        self._commit(meta, out)
+        with self._load(fqn) as meta:
+            _require_partitioned(meta)
+            out = self._with_dt(self._align(df, meta, allow_field_addition), meta, None)
+            self._commit(meta, out)
 
     def delete_insert(
         self,
@@ -386,8 +385,7 @@ class Writer:
         at 100 TB a date-scoped PARTITION_FILTER touches the window's
         partitions, not the table.
         """
-        meta = self.prepare(fqn)
-        with table_write_lock(meta.spark_name):
+        with self._load(fqn) as meta:
             new = self._with_dt(
                 self._align(df, meta, allow_field_addition), meta, partition_date
             )
@@ -411,8 +409,7 @@ class Writer:
         tables: only partitions containing matching rows are rewritten,
         so a date-scoped predicate touches the window's partitions, not
         the table."""
-        meta = self.prepare(fqn)
-        with table_write_lock(meta.spark_name):
+        with self._load(fqn) as meta:
             dest = self.spark.table(meta.spark_name)
             matches = F.coalesce(F.expr(predicate), F.lit(False))
             if not meta.partition.is_partitioned:
@@ -432,8 +429,7 @@ class Writer:
         Partition-scoped on partitioned tables UNLESS an assignment can
         change the partition column (then rows may move between
         partitions, so the whole table is rewritten)."""
-        meta = self.prepare(fqn)
-        with table_write_lock(meta.spark_name):
+        with self._load(fqn) as meta:
             dest = self.spark.table(meta.spark_name)
             matches = F.coalesce(F.expr(predicate), F.lit(False))
             assigned = {c.lower() for c in assignments}
@@ -491,13 +487,11 @@ class Writer:
 
     def overwrite_from_plan_reading_destination(self, fqn: str, df: DataFrame) -> None:
         """Full overwrite where df's plan scans the destination (DML
-        emulation). Re-entrant lock: dml.execute_merge already holds
-        the table lock around plan build + this write, so the plan
-        reads the state the commit replaces and no other in-process
-        commit lands in between; direct callers get the same guarantee
-        only if they BUILD df while holding table_write_lock too."""
-        meta = self.prepare(fqn)
-        with table_write_lock(meta.spark_name):
+        emulation). dml.execute_merge holds the table lock around plan
+        build + this write, so the plan reads the state the commit
+        replaces; a direct caller gets the same guarantee only if it
+        BUILDS df while holding table_write_lock too."""
+        with self._load(fqn) as meta:
             self._commit(meta, df, whole=True)
 
     # -- the commit protocol (module docstring) --------------------------
@@ -505,16 +499,11 @@ class Writer:
     def prepare(self, fqn: str) -> TableMeta:
         """Look the destination up and finish its interrupted commit,
         if any — every load's entry step. A caller whose frame reads
-        the destination calls it before building the frame, so the
-        plan reads the finished state (the engine does)."""
+        the destination takes the table lock, then calls it before
+        building the frame, so the plan reads the finished state."""
         meta = self.catalog.get_table(fqn)
-        # the unlocked check keeps the hot path free of catalog calls;
-        # _finish re-reads the record under the lock, where no
-        # in-process commit can still be holding it
-        path = os.path.join(self._versions_dir(meta.spark_name), _INTENT)
-        if os.path.exists(path):
-            with table_write_lock(meta.spark_name):
-                self._finish(path)
+        with table_write_lock(meta.spark_name):
+            self._finish(os.path.join(self._versions_dir(meta.spark_name), _INTENT))
         return meta
 
     def _commit(
@@ -525,55 +514,51 @@ class Writer:
         whole: bool = False,
     ) -> None:
         """Write ``df`` once into a fresh version directory, then point
-        the catalog at it. Partitioned tables replace the days ``df``
-        writes, plus the listed ``days`` and — when ``whole`` — every
-        existing day; a replaced day without new rows is emptied."""
+        the catalog at it (caller holds the table lock since its entry
+        step, so no other in-process record or version can appear).
+        Partitioned tables replace the days ``df`` writes, plus the
+        listed ``days`` and — when ``whole`` — every existing day; a
+        replaced day without new rows is emptied."""
         name = meta.spark_name
         partitioned = meta.partition.is_partitioned
         cols = meta.column_names + ([PARTITION_COL] if partitioned else [])
         tdir = self._versions_dir(name)
         version = os.path.join(tdir, uuid.uuid4().hex)
-        path = os.path.join(tdir, _INTENT)
         out, obs = self._observed(df.select(*[F.col(f"`{c}`") for c in cols]))
         writer = out.write.format("parquet")
         if partitioned:
             writer = writer.partitionBy(PARTITION_COL)
-        with _writing(version):
-            try:
-                writer.save(version)
-            except BaseException:
-                shutil.rmtree(version, ignore_errors=True)  # never referenced
-                raise
-            self._record(obs)
-            with table_write_lock(name):
-                # an in-process load that failed after its record was
-                # written: finish it before this record replaces it
-                if os.path.exists(path):
-                    self._finish(path)
-                if partitioned:
-                    prefix = f"{PARTITION_COL}="
-                    written = {
-                        d[len(prefix):] for d in os.listdir(version) if d.startswith(prefix)
-                    }
-                    existing = {
-                        r[0].split("=", 1)[1]
-                        for r in self.catalog._run_ddl(f"SHOW PARTITIONS {_q(name)}").collect()
-                    }
-                    touched = written | {d.isoformat() for d in days}
-                    if whole:
-                        touched |= existing
-                    intent = {
-                        "table": name,
-                        "version": version,
-                        "add": sorted(written - existing),
-                        "set": sorted(touched & existing),
-                    }
-                else:
-                    intent = {"table": name, "location": version}
-                _write_json(path, intent)
-                self._apply(intent)
-                os.remove(path)
-                garbage = self._supersede(meta, intent)
+        try:
+            writer.save(version)
+        except BaseException:
+            shutil.rmtree(version, ignore_errors=True)  # never referenced
+            raise
+        self._record(obs)
+        if partitioned:
+            prefix = f"{PARTITION_COL}="
+            written = {
+                d[len(prefix):] for d in os.listdir(version) if d.startswith(prefix)
+            }
+            existing = {
+                r[0].split("=", 1)[1]
+                for r in self.catalog._run_ddl(f"SHOW PARTITIONS {_q(name)}").collect()
+            }
+            touched = written | {d.isoformat() for d in days}
+            if whole:
+                touched |= existing
+            intent = {
+                "table": name,
+                "version": version,
+                "add": sorted(written - existing),
+                "set": sorted(touched & existing),
+            }
+        else:
+            intent = {"table": name, "location": version}
+        path = os.path.join(tdir, _INTENT)
+        _write_json(path, intent)
+        self._apply(intent)
+        os.remove(path)
+        garbage = self._supersede(meta, intent)
         self.spark.catalog.refreshTable(name)
         for old in garbage:
             shutil.rmtree(old, ignore_errors=True)
@@ -618,19 +603,17 @@ class Writer:
         that planned against a version keeps it for one more commit.
 
         Every directory of a replaced day other than the new one is
-        unreferenced once the catalog points at the new one — except a
-        version another in-process load is still writing, which is
-        skipped. Leftovers of a killed load are swept with the next
-        commit of their days."""
+        unreferenced once the catalog points at the new one: no other
+        in-process load can be writing a version of the table while
+        this one holds its lock. Leftovers of a killed load are swept
+        with the next commit of their days."""
         tdir = self._versions_dir(meta.spark_name)
         root = os.path.join(os.path.dirname(os.path.dirname(tdir)), os.path.basename(tdir))
-        with _IN_FLIGHT_GUARD:
-            skip = set(_IN_FLIGHT)
         if "location" in intent:
-            skip.add(intent["location"])
+            new = intent["location"]
             replaced = [root, *glob.glob(os.path.join(tdir, "*", ""))]
         else:
-            skip.add(intent["version"])
+            new = intent["version"]
             days = {f"{PARTITION_COL}={d}" for d in intent["set"]}
             replaced = [
                 d
@@ -645,9 +628,7 @@ class Writer:
         except FileNotFoundError:
             previous = []
         replaced = {p.rstrip("/") for p in replaced if os.path.isdir(p)} - set(previous)
-        _write_json(path, sorted(
-            p for p in replaced if not any(_overlaps(p, s) for s in skip)
-        ))
+        _write_json(path, sorted(p for p in replaced if not _overlaps(p, new)))
         return previous
 
     def _finish(self, path: str) -> None:
@@ -657,7 +638,7 @@ class Writer:
             with open(path) as fh:
                 intent = json.load(fh)
         except FileNotFoundError:
-            return  # finished by the commit that held the lock
+            return  # no interrupted commit
         exists = self.spark.catalog.tableExists(intent["table"])
         if exists:
             self._apply(intent)
@@ -729,23 +710,6 @@ class Writer:
 def _require_partitioned(meta: TableMeta) -> None:
     if not meta.partition.is_partitioned:
         raise ValueError(f"{meta.fqn} is not partitioned")
-
-
-@contextlib.contextmanager
-def _writing(version: str):
-    """Mark a version as in flight — no commit may delete it — until
-    the commit that writes it ends."""
-    with _IN_FLIGHT_GUARD:
-        _IN_FLIGHT.add(version)
-    try:
-        yield
-    finally:
-        with _IN_FLIGHT_GUARD:
-            _IN_FLIGHT.discard(version)
-
-
-def _locked_if(hold: bool, meta: TableMeta):
-    return table_write_lock(meta.spark_name) if hold else contextlib.nullcontext()
 
 
 def _days(frame: DataFrame) -> list[date]:

@@ -880,22 +880,6 @@ def _dup_islands(pos: DataFrame, dup: DataFrame) -> DataFrame:
     )
 
 
-def _sliding_dup_flags(
-    df: DataFrame, text_col: str, id_col: str, span_len: int,
-    hasher: str = "portable",
-) -> DataFrame:
-    """(doc, pos, is_dup) for every sliding k-token window position:
-    is_dup iff the window's hash occurs in >= 2 distinct documents.
-    Map-only window hashing (see sliding_window_hashes), one per-hash
-    aggregate, one hash join back. Docs shorter than k have no window
-    and produce no row."""
-    pos = sliding_window_hashes(df, text_col, id_col, span_len, hasher)
-    dup = _cross_doc_hashes(pos).withColumn("__dup", F.lit(True))
-    return pos.join(dup, "h", "left").select(
-        "doc", "pos", F.col("__dup").isNotNull().alias("is_dup")
-    )
-
-
 def sliding_span_dup_profile(
     df: DataFrame,
     text_col: str = "text",

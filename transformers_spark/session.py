@@ -26,8 +26,9 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for any pandas UDF / toPandas path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Partition-scoped overwrites replace only touched partitions
-    # (the engine's stand-in for BigQuery's `table$YYYYMMDD`).
+    # An `insertInto(..., overwrite=True)` replaces only the partitions
+    # it writes (the sample fixtures load that way). The loaders do not
+    # rely on it: they commit by pointing partitions at new versions.
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # ANSI off: BigQuery-style permissive casts in ported queries.
     "spark.sql.ansi.enabled": "false",
