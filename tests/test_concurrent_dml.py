@@ -7,10 +7,12 @@ docs): in-process loads on one table SERIALIZE on a per-table lock,
 so N concurrent MERGEs produce the state of SOME serial execution
 order; cross-process concurrency is unsupported. This module races
 two real threads through dml.execute_merge and asserts exactly that,
-plus that no orphan __stage_ tables survive."""
+plus that the commits leave no intent record behind and keep at most
+the current version and one replaced one."""
 
 from __future__ import annotations
 
+import os
 import threading
 
 import pytest
@@ -104,17 +106,12 @@ def test_concurrent_merges_serialize_to_a_serial_outcome(
         sorted(serial_ba.items()),
     ), f"not a serial outcome: {final}"
 
-    # both loads completed normally, so their try/finally dropped the
-    # stages. Assert on THIS table's stage prefix only — a catalog-wide
-    # recover_orphan_stages() here would race (and drop) live stages
-    # belonging to other tests sharing the session (r10 ADVICE item 4).
-    db, table = sname.replace("`", "").rsplit(".", 1)
-    leftover = [
-        t.name
-        for t in spark.catalog.listTables(db)
-        if t.name.startswith(f"{table}__stage_")
-    ]
-    assert leftover == []
+    # both commits finished: no intent record is left, and each deleted
+    # what the commit before it replaced (loaders.py, "Old versions")
+    tdir = cat.versions_dir(sname)
+    assert not os.path.exists(os.path.join(tdir, "intent.json"))
+    versions = [d for d in os.listdir(tdir) if os.path.isdir(os.path.join(tdir, d))]
+    assert len(versions) <= 2, versions
 
 
 REPLACE_FQN = "g-project.playground.conc_replace_t"

@@ -855,6 +855,63 @@ def test_rows_written_consistent_for_staged_paths(spark, engine):
     assert engine.writer.rows_written is not None and engine.writer.rows_written >= 2
 
 
+def test_replace_merge_filter_runs_its_query_once(spark, engine):
+    """REPLACE_MERGE with a filter reads the days it inserts from the
+    written version, so the query runs once: a UDF in the query's
+    filter sees each input row exactly once, and rows_written still
+    counts kept plus inserted rows."""
+    from pyspark.sql import functions as F
+
+    dest = "g-project.playground.merge_filter_once_dest"
+    engine.catalog.create_table(
+        dest,
+        [("event_ts", "timestamp"), ("n", "bigint")],
+        PartitionSpec(kind=PartitionKind.COLUMN_DAY, field="event_ts"),
+    )
+    engine.writer.append(dest, spark.createDataFrame(
+        [(datetime(2024, 1, 1, 5), 1), (datetime(2024, 1, 1, 6), 2),
+         (datetime(2024, 1, 9), 9)],
+        "event_ts timestamp, n bigint",
+    ))
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def counted(n):
+        seen.add(1)
+        return True
+
+    new = spark.createDataFrame(
+        [(datetime(2024, 1, 2, h), 10 + h) for h in range(3)],
+        "event_ts timestamp, n bigint",
+    ).filter(counted("n"))
+    engine.writer.reset_rows_written()
+    engine.writer.delete_insert(dest, new, filter_expression="n = 1")
+    assert seen.value == 3
+    assert engine.writer.rows_written == 4  # kept (2024-01-01, 2) + 3 inserts
+    assert sorted(r["n"] for r in engine.catalog.read(dest).collect()) == [
+        2, 9, 10, 11, 12
+    ]
+
+
+def test_replace_merge_filter_keeps_rows_of_the_null_day(spark, engine):
+    """Inserting rows whose partition field is NULL replaces the NULL
+    day; its rows outside the filter are kept, as on any other day."""
+    dest = "g-project.playground.merge_filter_null_day_dest"
+    engine.catalog.create_table(
+        dest,
+        [("event_ts", "timestamp"), ("n", "bigint")],
+        PartitionSpec(kind=PartitionKind.COLUMN_DAY, field="event_ts"),
+    )
+    schema = "event_ts timestamp, n bigint"
+    engine.writer.append(dest, spark.createDataFrame(
+        [(None, 5), (datetime(2024, 1, 1), 999)], schema
+    ))
+    engine.writer.delete_insert(
+        dest, spark.createDataFrame([(None, 7)], schema), filter_expression="n = 999"
+    )
+    assert sorted(r["n"] for r in engine.catalog.read(dest).collect()) == [5, 7]
+
+
 def test_script_select_with_comment_header_returns_rows(spark):
     """A comment-prefixed SELECT in a script must classify as select
     and return rows (BQ returns them)."""

@@ -12,7 +12,11 @@ from __future__ import annotations
 
 import pytest
 
-from transformers_spark.session import ENGINE_CONF, apply_engine_conf
+from transformers_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    ENGINE_CONF,
+    apply_engine_conf,
+)
 
 # Every conf the engine's SEMANTICS (not just performance) relies on,
 # with the value queries assume. A failure here means some catalog
@@ -58,6 +62,30 @@ def test_live_session_honors_semantic_conf(spark):
         assert spark.conf.get(key) == value, f"{key} drifted on live session"
     for key, value in PERF_CONF.items():
         assert spark.conf.get(key) == value, f"{key} drifted on live session"
+
+
+def test_live_session_sizes_the_codegen_cache(spark):
+    """The shared test session (built by get_spark) carries the engine's
+    generated-code cache size, not Spark's default of 100."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_a_compiled_query_shape_survives_a_working_set_of_others(spark):
+    """A query shape compiled once is not compiled again after 120
+    other shapes ran: the cache holds more than one pass of the
+    engine's working set (with Spark's 100 entries it is evicted)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run(i: int) -> None:
+        spark.range(4).selectExpr(f"id * 7 + {i} AS v").collect()
+
+    for i in range(121):
+        run(i)
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    run(0)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled
 
 
 def test_apply_engine_conf_restores_flipped_conf(spark):

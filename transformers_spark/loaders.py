@@ -394,14 +394,22 @@ class Writer:
             if not meta.partition.is_partitioned:
                 self._commit(meta, dest.filter(~matches).unionByName(new))
                 return
-            # affected = partitions with deletions ∪ partitions of inserts
-            days = _days(
-                dest.filter(matches)
-                .select(PARTITION_COL)
-                .union(new.select(PARTITION_COL))
+            # affected = partitions with deletions ∪ partitions of inserts.
+            # The inserts' days come from the version's dt= directories,
+            # so the query runs once: for the write.
+            matched = _days(dest.filter(matches).select(PARTITION_COL))
+            version = self._new_version(meta)
+            self._write(meta, new, version)
+            written = _version_days(version)
+            days = sorted(
+                set(matched)
+                | {date.fromisoformat(d) for d in written if d != _NULL_DAY}
             )
-            kept = _in_days(dest, days).filter(~matches)
-            self._commit(meta, kept.unionByName(new), days=days)
+            scope = F.col(PARTITION_COL).isin(days)
+            if _NULL_DAY in written:  # the commit replaces the NULL day too
+                scope = scope | F.col(PARTITION_COL).isNull()
+            self._write(meta, dest.filter(scope & ~matches), version, append=True)
+            self._swap(meta, version, days)
 
     def delete_where(self, fqn: str, predicate: str) -> None:
         """``DELETE FROM t WHERE pred`` (reference:
@@ -515,30 +523,49 @@ class Writer:
     ) -> None:
         """Write ``df`` once into a fresh version directory, then point
         the catalog at it (caller holds the table lock since its entry
-        step, so no other in-process record or version can appear).
-        Partitioned tables replace the days ``df`` writes, plus the
-        listed ``days`` and — when ``whole`` — every existing day; a
-        replaced day without new rows is emptied."""
-        name = meta.spark_name
+        step, so no other in-process record or version can appear)."""
+        version = self._new_version(meta)
+        self._write(meta, df, version)
+        self._swap(meta, version, days, whole)
+
+    def _new_version(self, meta: TableMeta) -> str:
+        return os.path.join(self._versions_dir(meta.spark_name), uuid.uuid4().hex)
+
+    def _write(
+        self, meta: TableMeta, df: DataFrame, version: str, append: bool = False
+    ) -> None:
+        """Write ``df`` into the version directory, counting its rows.
+        A failed write deletes the version: nothing references it yet."""
         partitioned = meta.partition.is_partitioned
         cols = meta.column_names + ([PARTITION_COL] if partitioned else [])
-        tdir = self._versions_dir(name)
-        version = os.path.join(tdir, uuid.uuid4().hex)
         out, obs = self._observed(df.select(*[F.col(f"`{c}`") for c in cols]))
         writer = out.write.format("parquet")
+        if append:
+            writer = writer.mode("append")
         if partitioned:
             writer = writer.partitionBy(PARTITION_COL)
         try:
             writer.save(version)
         except BaseException:
-            shutil.rmtree(version, ignore_errors=True)  # never referenced
+            shutil.rmtree(version, ignore_errors=True)
             raise
         self._record(obs)
-        if partitioned:
-            prefix = f"{PARTITION_COL}="
-            written = {
-                d[len(prefix):] for d in os.listdir(version) if d.startswith(prefix)
-            }
+
+    def _swap(
+        self,
+        meta: TableMeta,
+        version: str,
+        days: list[date] = (),
+        whole: bool = False,
+    ) -> None:
+        """Point the catalog at a written version. Partitioned tables
+        replace the days the version holds, plus the listed ``days``
+        and — when ``whole`` — every existing day; a replaced day
+        without new rows is emptied."""
+        name = meta.spark_name
+        tdir = self._versions_dir(name)
+        if meta.partition.is_partitioned:
+            written = _version_days(version)
             existing = {
                 r[0].split("=", 1)[1]
                 for r in self.catalog._run_ddl(f"SHOW PARTITIONS {_q(name)}").collect()
@@ -715,6 +742,12 @@ def _require_partitioned(meta: TableMeta) -> None:
 def _days(frame: DataFrame) -> list[date]:
     """The distinct non-NULL ``dt`` values of a one-column frame."""
     return sorted(r[0] for r in frame.distinct().collect() if r[0] is not None)
+
+
+def _version_days(version: str) -> set[str]:
+    """The days a version holds, from its ``dt=`` directories."""
+    prefix = f"{PARTITION_COL}="
+    return {d[len(prefix):] for d in os.listdir(version) if d.startswith(prefix)}
 
 
 def _in_days(df: DataFrame, days: list[date]) -> DataFrame:

@@ -11,7 +11,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "ENGINE_CONF"]
+__all__ = ["get_spark", "ENGINE_CONF", "CODEGEN_CACHE_ENTRIES"]
+
+# Generated classes Spark keeps compiled per JVM (static conf
+# spark.sql.codegen.cache.maxEntries, see get_spark).
+CODEGEN_CACHE_ENTRIES = 1000
 
 # Conf we apply everywhere: these are scale-oriented defaults.
 ENGINE_CONF: dict[str, str] = {
@@ -109,6 +113,19 @@ def get_spark(
     # sf0.1 across the catalog's shuffle-heavy queries. On a real
     # cluster this is overridden (or left to AQE).
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
+    # Spark compiles each distinct generated class with Janino and keeps
+    # it in an LRU cache of 100 entries by default. The engine runs the
+    # same job templates and catalog specs again and again, and one pass
+    # of them asks for more classes than that (perfbench, seed 7, at the
+    # default): ~130 for the 5 catalog specs of operator_queries and ~50
+    # for the 7 templates of daily_jobs, ~20 of which are new in every
+    # window because literals are compiled into the code. At 100 each
+    # class is evicted before its next use and every op recompiles; at
+    # 1,000 a pass of either fits several times over, and no more than
+    # 1,000 classes stay loaded. Static conf: a session not built here
+    # (one handed to __spark_entry__) keeps Spark's default of 100, and
+    # apply_engine_conf cannot change it.
+    conf["spark.sql.codegen.cache.maxEntries"] = str(CODEGEN_CACHE_ENTRIES)
     if warehouse_dir:
         conf["spark.sql.warehouse.dir"] = warehouse_dir
     if extra_conf:
