@@ -457,6 +457,33 @@ def test_catalyst_dml_parse_failure_falls_back_to_regex(spark, monkeypatch):
     assert any("regex" in str(w.message) for w in caught)
 
 
+def test_catalyst_parses_merge_without_into(spark):
+    """BigQuery's `MERGE t ...` (no INTO, the shape of the MERGE job
+    templates) resolves through Spark's parser: Spark rejects the form
+    as written, so the optional INTO is supplied for the parse-only
+    path, and no statement goes to the regex fallback."""
+    import warnings as _warnings
+
+    sql = (
+        "MERGE `proj-x.mart.order_status` T\n"
+        "USING (\n"
+        "  SELECT o_orderkey, o_orderstatus FROM `proj-x.src.orders`\n"
+        "  WHERE o_orderdate >= '2024-01-01'\n"
+        ") S\n"
+        "ON T.orderkey = S.o_orderkey\n"
+        "WHEN MATCHED THEN UPDATE SET status = S.o_orderstatus\n"
+        "WHEN NOT MATCHED THEN INSERT (orderkey, status) "
+        "VALUES (S.o_orderkey, S.o_orderstatus)"
+    )
+    with _warnings.catch_warnings(record=True) as caught:
+        _warnings.simplefilter("always")
+        deps = resolve_with_catalyst(
+            spark, sql, destination="proj-x.mart.order_status"
+        )
+    assert deps == ["proj_x_src.orders"]
+    assert not [w for w in caught if "regex" in str(w.message)]
+
+
 def test_dml_fallback_scoped_to_failed_statement(spark, monkeypatch):
     """The regex fallback runs over the FAILED statement's original
     text, not the whole script — whole-script extraction attributed

@@ -14,6 +14,7 @@ import pytest
 
 from transformers_spark.session import (
     CODEGEN_CACHE_ENTRIES,
+    DATAFRAME_DEBUGGING,
     ENGINE_CONF,
     apply_engine_conf,
 )
@@ -70,6 +71,18 @@ def test_live_session_sizes_the_codegen_cache(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_ENTRIES
     )
+
+
+def test_live_session_turns_off_dataframe_debugging(spark):
+    """The shared test session (built by get_spark) does not capture
+    the Python call site of every DataFrame and Column call, and
+    PySpark read that setting from it."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == str(
+        DATAFRAME_DEBUGGING
+    ).lower()
+    assert is_debugging_enabled() == DATAFRAME_DEBUGGING
 
 
 def test_a_compiled_query_shape_survives_a_working_set_of_others(spark):

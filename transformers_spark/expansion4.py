@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 
 from . import cache
 from .operators.dedup import DEMO_BANDS, DEMO_NUM_PERM
-from .operators.hashing import duck_h32, duck_perm_hash, lcg_constants
+from .operators.hashing import duck_h32, lcg_constants, perm_hash_sql
 from .operators.specs import DUCK_TOKENS, N_QUERY_VECS, _duck_grams
 from .sources.testdata import register_tables
 
@@ -89,7 +89,7 @@ def _duck_lsh_index_ctes() -> str:
     consts = lcg_constants(DEMO_NUM_PERM)
     rows_per_band = DEMO_NUM_PERM // DEMO_BANDS
     sig_exprs = ",\n    ".join(
-        f"MIN({duck_perm_hash(duck_h32('gram'), a, b)}) AS sig_{i}"
+        f"MIN({perm_hash_sql(duck_h32('gram'), a, b)}) AS sig_{i}"
         for i, (a, b) in enumerate(consts)
     )
     band_selects = " UNION ALL ".join(

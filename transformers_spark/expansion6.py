@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from . import cache
 from .operators.frames import literal_frame
-from .operators.hashing import duck_h32, duck_perm_hash, lcg_constants
+from .operators.hashing import duck_h32, lcg_constants, perm_hash_sql
 from .operators.similarity import _dot, _norm
 from .operators.skew import fan_out
 from .operators.specs import (
@@ -814,7 +814,7 @@ def q_lsh_scurve_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_lsh_scurve_calibration() -> str:
     consts = lcg_constants(SCURVE_NUM_PERM)
     sig_exprs = ",\n    ".join(
-        f"MIN({duck_perm_hash(duck_h32('gram'), a, b)}) AS sig_{i}"
+        f"MIN({perm_hash_sql(duck_h32('gram'), a, b)}) AS sig_{i}"
         for i, (a, b) in enumerate(consts)
     )
     selects = []

@@ -2,13 +2,12 @@
 plus Python implementations for the reference's JS temp-function
 surface (register via Engine(udf_registry=...))."""
 
-from ..operators.hashing import h32, perm_hash
+from ..operators.hashing import h32
 from ..operators.text import doc_fingerprint, normalized_text, tokens
 from .bigquery_compat import standard_rule
 
 __all__ = [
     "h32",
-    "perm_hash",
     "doc_fingerprint",
     "normalized_text",
     "tokens",

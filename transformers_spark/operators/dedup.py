@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import MERSENNE_P, hash32, lcg_constants, perm_hash
+from .hashing import MERSENNE_P, hash32, lcg_constants, perm_hash_sql
 from .skew import fan_out
 from .text import doc_fingerprint, tokens
 
@@ -153,17 +153,20 @@ def minhash_signatures(
         "doc",
         F.transform(_word_ngrams(F.col("toks"), shingle_n), hash32(hasher)).alias("hs"),
     )
-    sig_cols = [
-        F.coalesce(
-            # perm_hash is THE canonical permutation formula (mirrored
-            # by hashing.duck_perm_hash for the oracles) — never inline
-            # a copy here, it must stay single-sourced
-            F.array_min(F.transform(F.col("hs"), lambda h: perm_hash(h, a, b))),
-            F.lit(MERSENNE_P).cast("long"),  # no shingles → the fold identity
-        ).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(consts)
-    ]
-    return hashed.select("doc", *sig_cols)
+    # The K signature columns reach Catalyst as SQL text in one call,
+    # as do the bands and pairs below: built from Column lambdas, the
+    # dedup_minhash_lsh plan took 1,471 py4j round trips to build, as
+    # SQL text 251. perm_hash_sql is THE permutation formula (the
+    # oracles emit the same text) — never inline a copy here.
+    return hashed.selectExpr(
+        "doc",
+        *(
+            f"coalesce(array_min(transform(hs, h -> {perm_hash_sql('h', a, b)})), "
+            # no shingles → the fold identity
+            f"CAST({MERSENNE_P} AS BIGINT)) AS sig_{i}"
+            for i, (a, b) in enumerate(consts)
+        ),
+    )
 
 
 def _band_buckets(
@@ -172,25 +175,22 @@ def _band_buckets(
     """(doc, band, bucket) rows from a signature frame — the shared
     banding step of the self-join (:func:`minhash_lsh_pairs`) and
     incremental (:func:`incremental_lsh_matches`) LSH paths."""
-    band_cols = []
-    for band in range(bands):
-        members = [
-            F.col(f"sig_{band * rows_per_band + j}") for j in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.struct(
-                F.lit(band).alias("band"),
-                (
-                    F.md5(F.concat_ws("-", *members))
-                    if hasher == "portable"
-                    # fast path: 64-bit bucket id, no hex string
-                    else F.xxhash64(*members).cast("string")
-                ).alias("bucket"),
-            )
+
+    def bucket(band: int) -> str:
+        members = ", ".join(
+            f"sig_{band * rows_per_band + j}" for j in range(rows_per_band)
         )
-    return sigs.select(
-        F.col("doc"), F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        if hasher == "portable":
+            return f"md5(concat_ws('-', {members}))"
+        return f"CAST(xxhash64({members}) AS STRING)"  # 64-bit id, no hex string
+
+    structs = ", ".join(
+        f"struct({band} AS band, {bucket(band)} AS bucket)"
+        for band in range(bands)
+    )
+    return sigs.selectExpr("doc", f"explode(array({structs})) AS bb").selectExpr(
+        "doc", "bb.band AS band", "bb.bucket AS bucket"
+    )
 
 
 def minhash_lsh_pairs(
@@ -236,37 +236,29 @@ def lsh_pairs_from_buckets(
     """
     members = (
         buckets.groupBy("band", "bucket")
-        .agg(
-            F.sort_array(F.array_distinct(F.collect_list("doc"))).alias(
-                "docs"
-            )
-        )
-        .filter(F.size("docs").between(2, max_bucket_size))
+        .agg(F.expr("sort_array(array_distinct(collect_list(doc))) AS docs"))
+        .where(f"size(docs) >= 2 AND size(docs) <= {int(max_bucket_size)}")
     )
-    pair_array = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size("docs") - 2),
-            lambda i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size("docs")),
-                lambda d2: F.struct(F.col("docs")[i].alias("d1"), d2.alias("d2")),
-            ),
-        )
+    pair_array = (
+        "flatten(transform(sequence(0, size(docs) - 2), "
+        "i -> transform(slice(docs, i + 2, size(docs)), "
+        "d2 -> struct(docs[i] AS d1, d2 AS d2))))"
     )
     # (band, d1, d2) is already unique — a doc has exactly one bucket
     # per band — so a plain count equals COUNT(DISTINCT band) without
     # the two-shuffle distinct-aggregate expansion.
     return (
-        members.select(F.col("band"), F.explode(pair_array).alias("p"))
-        .select("band", F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
+        members.selectExpr("band", f"explode({pair_array}) AS p")
+        .selectExpr("band", "p.d1 AS d1", "p.d2 AS d2")
         # duplicate doc_id input rows would expand to d1 == d2
         # self-pairs (sorted-list slice pairing only guarantees
         # d1 <= d2) — drop them so the documented d1 < d2 contract
         # holds even on dirty re-ingests; ids appearing twice should
         # still be exact-deduped upstream (matching_bands can
         # otherwise double-count a pair within one band)
-        .filter(F.col("d1") != F.col("d2"))
+        .where("d1 != d2")
         .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("matching_bands"))
+        .agg(F.expr("count(1) AS matching_bands"))
     )
 
 

@@ -72,8 +72,14 @@ def hash32(hasher: str):
         raise ValueError(f"unknown hasher {hasher!r}: use 'portable' or 'fast'")
 
 
-def perm_hash(h: Column, a: int, b: int) -> Column:
-    return (F.lit(a) * (h % F.lit(MERSENNE_P)) + F.lit(b)) % F.lit(MERSENNE_P)
+# -- SQL text, shared by Spark and the DuckDB oracles --------------------
+
+
+def perm_hash_sql(h_expr: str, a: int, b: int) -> str:
+    """The permutation formula as SQL text. It parses in Spark
+    (``minhash_signatures``) and DuckDB (the oracles) alike, so both
+    engines read the one formula."""
+    return f"(({a} * (({h_expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"
 
 
 # -- oracle (DuckDB SQL fragment) side ---------------------------------
@@ -85,7 +91,3 @@ def duck_h32(expr: str) -> str:
 
 def duck_h60(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
-def duck_perm_hash(h_expr: str, a: int, b: int) -> str:
-    return f"(({a} * (({h_expr}) % {MERSENNE_P}) + {b}) % {MERSENNE_P})"

@@ -114,16 +114,15 @@ def _with_ntile_from_total(
     near exact integer quotients). When base = 0, thr == total so the
     first CASE arm always applies and the ELSE's div-by-zero is never
     evaluated (CASE is lazy in both Spark and the SQL standard)."""
-    ntile_sql = (
-        f"CAST(CASE WHEN {rn_col} <= __thr THEN ({rn_col} + __base) div (__base + 1) "
-        f"ELSE __rem + ({rn_col} - __thr + __base - 1) div __base END AS INT)"
-    )
-    return (
-        df.withColumn("__base", F.expr(f"{total_col} div {k}"))
-        .withColumn("__rem", F.expr(f"{total_col} % {k}"))
-        .withColumn("__thr", F.expr("__rem * (__base + 1)"))
-        .withColumn(out_col, F.expr(ntile_sql))
-        .drop("__base", "__rem", "__thr")
+    base = f"({total_col} div {k})"
+    rem = f"({total_col} % {k})"
+    thr = f"({rem} * ({base} + 1))"
+    return df.withColumn(
+        out_col,
+        F.expr(
+            f"CAST(CASE WHEN {rn_col} <= {thr} THEN ({rn_col} + {base}) div ({base} + 1) "
+            f"ELSE {rem} + ({rn_col} - {thr} + {base} - 1) div {base} END AS INT)"
+        ),
     )
 
 
@@ -170,7 +169,7 @@ def ntiles_wide(
     generator fans rows d ways map-side) instead of d.
     """
 
-    def _checked_key(out: str, key: Column) -> Column:
+    def _checked_key(out: str, key: Column, ktype) -> Column:
         # Enforce the documented contract JVM-side (no extra pass): the
         # key must be non-null and exactly double-representable, i.e.
         # round-trip through double back to its own type unchanged.
@@ -180,7 +179,6 @@ def ntiles_wide(
         # digits don't survive the double cast — two distinct decimals
         # colliding on one double cannot both round-trip.
         kd = key.cast("double")
-        ktype = df.select(key.alias("__k")).schema[0].dataType
         guard = F.assert_true(
             key.isNotNull() & (kd.cast(ktype) == key),
             F.lit(
@@ -193,6 +191,10 @@ def ntiles_wide(
         # away by SimplifyConditionals, silently dropping the check
         return F.coalesce(guard.cast("double"), kd)
 
+    # one analysis types every key (a select per key costs one each)
+    keys = df.select(*[key.alias(f"__k{i}") for i, (_, key) in enumerate(dims)])
+    ktypes = [field.dataType for field in keys.schema]
+
     # posexplode, NOT a union of d per-dimension legs: each union leg
     # re-evaluates the INPUT PLAN (for customer_rfm_segments that was
     # d = 3 full orders aggregations — no exchange reuse fires across
@@ -201,7 +203,9 @@ def ntiles_wide(
     # position IS the dimension index, matching enumerate(dims).
     u = df.select(
         F.posexplode(
-            F.array(*[_checked_key(out, key) for out, key in dims])
+            F.array(
+                *[_checked_key(out, key, t) for (out, key), t in zip(dims, ktypes)]
+            )
         ).alias("__dim", "__key"),
         F.col(id_col),
     )

@@ -31,7 +31,7 @@ from .dedup import (
     ngram_jaccard_pairs,
     simhash_fingerprints,
 )
-from .hashing import MERSENNE_P, duck_h32, duck_perm_hash, lcg_constants
+from .hashing import MERSENNE_P, duck_h32, lcg_constants, perm_hash_sql
 from .multimodal import (
     decode_audio_features,
     decode_image_features,
@@ -118,7 +118,7 @@ def _oracle_minhash() -> str:
     consts = lcg_constants(DEMO_NUM_PERM)
     rows_per_band = DEMO_NUM_PERM // DEMO_BANDS
     sig_exprs = ",\n    ".join(
-        f"MIN({duck_perm_hash(duck_h32('gram'), a, b)}) AS sig_{i}"
+        f"MIN({perm_hash_sql(duck_h32('gram'), a, b)}) AS sig_{i}"
         for i, (a, b) in enumerate(consts)
     )
     band_selects = " UNION ALL ".join(
@@ -2000,7 +2000,7 @@ def _oracle_dedup_incremental() -> str:
     consts = lcg_constants(DEMO_NUM_PERM)
     rows_per_band = DEMO_NUM_PERM // DEMO_BANDS
     sig_exprs = ",\n    ".join(
-        f"MIN({duck_perm_hash(duck_h32('gram'), a, b)}) AS sig_{i}"
+        f"MIN({perm_hash_sql(duck_h32('gram'), a, b)}) AS sig_{i}"
         for i, (a, b) in enumerate(consts)
     )
     band_selects = " UNION ALL ".join(

@@ -49,6 +49,8 @@ CACHE_TTL_SECONDS = 24 * 3600
 
 _UNRESOLVED_RE = re.compile(r"'UnresolvedRelation \[([^\]]+)\]")
 _RESOLVED_RE = re.compile(r"\bRelation (\S+?)\[")
+# BigQuery allows `MERGE t ...` without INTO; Spark's parser does not
+_MERGE_WITHOUT_INTO_RE = re.compile(r"^(\s*MERGE)\s+(?!INTO\b)", re.IGNORECASE)
 
 
 def destination_urn(fqn: str) -> str:
@@ -143,7 +145,9 @@ def _catalyst_relations(
                 names = _parsed_relations(spark, stmt)
         else:
             try:
-                names = _parsed_relations(spark, stmt)
+                names = _parsed_relations(
+                    spark, _MERGE_WITHOUT_INTO_RE.sub(r"\1 INTO ", head, count=1)
+                )
             except Exception:
                 # A DML statement Spark's parser rejects must not
                 # silently lose its upstream edges (the scheduler would

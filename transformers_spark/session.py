@@ -11,11 +11,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "ENGINE_CONF", "CODEGEN_CACHE_ENTRIES"]
+__all__ = ["get_spark", "ENGINE_CONF", "CODEGEN_CACHE_ENTRIES", "DATAFRAME_DEBUGGING"]
 
 # Generated classes Spark keeps compiled per JVM (static conf
 # spark.sql.codegen.cache.maxEntries, see get_spark).
 CODEGEN_CACHE_ENTRIES = 1000
+
+# Whether PySpark records the Python call site of every DataFrame and
+# Column call (static conf spark.python.sql.dataFrameDebugging.enabled,
+# see get_spark).
+DATAFRAME_DEBUGGING = False
 
 # Conf we apply everywhere: these are scale-oriented defaults.
 ENGINE_CONF: dict[str, str] = {
@@ -126,6 +131,21 @@ def get_spark(
     # (one handed to __spark_entry__) keeps Spark's default of 100, and
     # apply_engine_conf cannot change it.
     conf["spark.sql.codegen.cache.maxEntries"] = str(CODEGEN_CACHE_ENTRIES)
+    # With DataFrame debugging on (Spark's default), every F.* function
+    # and Column method walks the Python stack and makes extra py4j
+    # calls (getActiveSession, a conf read, PySparkCurrentOrigin
+    # set/clear). Building the five catalog specs of operator_queries
+    # took 6,605 round trips with it on and 2,885 with it off (56%
+    # fewer; sf0.01, warm session, releases of Java objects not
+    # counted). The price is that errors lose their Python call-site
+    # context; pass {"spark.python.sql.dataFrameDebugging.enabled":
+    # "true"} as extra_conf to get it back while debugging. Static conf,
+    # and PySpark caches its value per process on first use: a session
+    # not built here (one handed to __spark_entry__) keeps capture on,
+    # and apply_engine_conf cannot change it.
+    conf["spark.python.sql.dataFrameDebugging.enabled"] = str(
+        DATAFRAME_DEBUGGING
+    ).lower()
     if warehouse_dir:
         conf["spark.sql.warehouse.dir"] = warehouse_dir
     if extra_conf:
