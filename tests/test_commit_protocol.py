@@ -180,6 +180,48 @@ def test_hot_path_makes_no_catalog_listing(spark, monkeypatch):
     pcat.drop_table(part)
 
 
+def test_commit_makes_no_sql_call(spark, monkeypatch):
+    """A commit is metadata calls on the external catalog: no SQL
+    statement and no refreshTable, for a partitioned commit that adds a
+    day, one that moves an existing day and an unpartitioned one. A
+    read after each commit still sees its rows."""
+    from pyspark.sql import SparkSession
+
+    flat = "g-project.playground.nosql_flat"
+    part = "g-project.playground.nosql_part"
+    fcat, fwriter = _flat(spark, flat)
+    pcat, pwriter = _part(spark, part)
+    assert _ids(fcat, flat) == [1, 2] and _ids(pcat, part) == [1, 2]
+    calls = []
+
+    def spy(name, original):
+        def call(*args, **kwargs):
+            calls.append(name)
+            return original(*args, **kwargs)
+        return call
+
+    commits = [
+        (pcat, part, lambda: pwriter.overwrite_partition(
+            part, _days(spark, [(3, "2024-01-03")]), date(2024, 1, 3)), [1, 2, 3]),
+        (pcat, part, lambda: pwriter.overwrite_partition(
+            part, _days(spark, [(11, "2024-01-01")]), date(2024, 1, 1)), [2, 3, 11]),
+        (fcat, flat, lambda: fwriter.overwrite_table(
+            flat, spark.createDataFrame([(4, "d")], "id bigint, v string")), [4]),
+    ]
+    for cat, fqn, commit, want in commits:
+        monkeypatch.setattr(SparkSession, "sql", spy("sql", SparkSession.sql))
+        monkeypatch.setattr(
+            pyspark_catalog.Catalog, "refreshTable",
+            spy("refreshTable", pyspark_catalog.Catalog.refreshTable),
+        )
+        commit()
+        monkeypatch.undo()
+        assert calls == []
+        assert _ids(cat, fqn) == want
+    fcat.drop_table(flat)
+    pcat.drop_table(part)
+
+
 def test_reader_planned_before_a_swap_finishes_on_the_old_version(spark):
     fqn = "g-project.playground.old_reader"
     cat, writer = _flat(spark, fqn)

@@ -14,8 +14,9 @@ process then recovers and checks the table. The kill points:
 * ``intent``   — after the intent record, before the first catalog
   change;
 * ``between``  — between the two catalog changes of one multi-day
-  commit, the ADD of its new day and the move of its existing days (the
-  table reads half old, half new until recovery);
+  commit, the external-catalog call that adds its new day
+  (``Catalog.add_partitions``) and the one that moves its existing days
+  (the table reads half old, half new until recovery);
 * ``unlinked`` — after the last catalog change, before the record is
   deleted.
 
@@ -122,16 +123,17 @@ elif point in ("intent", "unlinked"):
 
     Writer._apply = apply
 else:
-    original_ddl = Catalog._run_ddl
+    original_add = Catalog.add_partitions
 
-    def run_ddl(self, sql):
-        out = original_ddl(self, sql)
-        if sql.startswith("ALTER TABLE"):
-            assert " ADD " in sql, sql  # the new day comes first
-            die("KILLED_BETWEEN_SWAPS")
-        return out
+    def add_partitions(self, spark_name, locations):
+        original_add(self, spark_name, locations)
+        die("KILLED_BETWEEN_SWAPS")
 
-    Catalog._run_ddl = run_ddl
+    def set_partition_locations(self, spark_name, locations):
+        raise AssertionError("the new day must be added first")
+
+    Catalog.add_partitions = add_partitions
+    Catalog.set_partition_locations = set_partition_locations
 load()
 raise SystemExit("unreachable: the commit should have killed us")
 """

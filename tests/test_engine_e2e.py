@@ -912,6 +912,87 @@ def test_replace_merge_filter_keeps_rows_of_the_null_day(spark, engine):
     assert sorted(r["n"] for r in engine.catalog.read(dest).collect()) == [5, 7]
 
 
+def test_delete_reaches_rows_of_the_null_day(spark, engine):
+    """A DELETE whose predicate matches rows with a NULL partition field
+    rewrites the NULL day too, as it does any other matched day."""
+    dest = "g-project.playground.delete_null_day_dest"
+    engine.catalog.create_table(
+        dest,
+        [("event_ts", "timestamp"), ("n", "bigint")],
+        PartitionSpec(kind=PartitionKind.COLUMN_DAY, field="event_ts"),
+    )
+    engine.writer.append(dest, spark.createDataFrame(
+        [(None, 5), (None, 6), (datetime(2024, 1, 1), 1)], "event_ts timestamp, n bigint"
+    ))
+    engine.writer.delete_where(dest, "n = 5")
+    assert sorted(r["n"] for r in engine.catalog.read(dest).collect()) == [1, 6]
+
+
+def _counted_writes(monkeypatch):
+    from transformers_spark.loaders import Writer
+
+    writes = []
+    original = Writer._write
+
+    def write(self, *args, **kwargs):
+        writes.append(kwargs.get("append", False))
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(Writer, "_write", write)
+    return writes
+
+
+def test_replace_merge_filter_into_matched_days_writes_once(spark, engine, monkeypatch):
+    """New rows that all land in days the filter matched need one
+    version write: the new rows and the kept rows of those days go out
+    in the same save."""
+    dest = "g-project.playground.merge_filter_one_write_dest"
+    engine.catalog.create_table(
+        dest,
+        [("event_ts", "timestamp"), ("n", "bigint")],
+        PartitionSpec(kind=PartitionKind.COLUMN_DAY, field="event_ts"),
+    )
+    schema = "event_ts timestamp, n bigint"
+    engine.writer.append(dest, spark.createDataFrame(
+        [(datetime(2024, 1, 1, 5), 1), (datetime(2024, 1, 1, 6), 2),
+         (datetime(2024, 1, 9), 9)], schema,
+    ))
+    writes = _counted_writes(monkeypatch)
+    engine.writer.reset_rows_written()
+    engine.writer.delete_insert(
+        dest, spark.createDataFrame([(datetime(2024, 1, 1, 7), 3)], schema),
+        filter_expression="n = 1",
+    )
+    assert writes == [False]
+    assert engine.writer.rows_written == 2  # kept (2024-01-01, 2) + 1 insert
+    assert sorted(r["n"] for r in engine.catalog.read(dest).collect()) == [2, 3, 9]
+
+
+def test_replace_merge_filter_keeps_rows_of_an_unmatched_day_it_writes(
+    spark, engine, monkeypatch
+):
+    """New rows that land on an existing day with no matching rows keep
+    that day's other rows: a second, appending write adds them."""
+    dest = "g-project.playground.merge_filter_unmatched_day_dest"
+    engine.catalog.create_table(
+        dest,
+        [("event_ts", "timestamp"), ("n", "bigint")],
+        PartitionSpec(kind=PartitionKind.COLUMN_DAY, field="event_ts"),
+    )
+    schema = "event_ts timestamp, n bigint"
+    engine.writer.append(dest, spark.createDataFrame(
+        [(datetime(2024, 1, 1), 1), (datetime(2024, 1, 2, 5), 5),
+         (datetime(2024, 1, 9), 9)], schema,
+    ))
+    writes = _counted_writes(monkeypatch)
+    engine.writer.delete_insert(
+        dest, spark.createDataFrame([(datetime(2024, 1, 2, 6), 6)], schema),
+        filter_expression="n = 1",
+    )
+    assert writes == [False, True]
+    assert sorted(r["n"] for r in engine.catalog.read(dest).collect()) == [5, 6, 9]
+
+
 def test_script_select_with_comment_header_returns_rows(spark):
     """A comment-prefixed SELECT in a script must classify as select
     and return rows (BQ returns them)."""

@@ -376,14 +376,15 @@ def main() -> None:
 
     # The CDC query's returned frame is just a post-merge scan+rollup,
     # so the load-bearing evidence is the MERGE executor's own plan
-    # (round-7 verdict ask 3): row-id pass-through anti-join, in-plan
-    # duplicate-match guard, no cartesian. Documented here; the live
-    # assertions run in tests/test_plan_pins.py::test_merge_plan_properties.
+    # (round-7 verdict ask 3): pass-through anti-join against the
+    # source, in-plan duplicate-match guard, no cartesian, no shuffle or
+    # broadcast of the target. Documented here; the live assertions run
+    # in tests/test_plan_pins.py::test_merge_plan_properties.
     from transformers_spark.dml import build_merge_plan
     from transformers_spark.expansion4 import _cdc_merge_setup
 
-    cat, writer, stmt, fqn = _cdc_merge_setup(spark, sf)
-    df = build_merge_plan(spark, cat, writer, stmt, fqn)
+    cat, _, stmt, fqn = _cdc_merge_setup(spark, sf)
+    df = build_merge_plan(spark, cat, stmt, fqn)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -391,9 +392,12 @@ def main() -> None:
     out.append("## dedup_cdc_merge__merge_plan\n")
     out.append(
         "MERGE executor plan for dedup_cdc_merge (dml.build_merge_plan on "
-        "the CDC fixture) — the pass-through is a row-id LeftAnti join "
-        "(only ids shuffle), the multi-match guard is an in-plan "
-        "raise_error over a window count, and there is no cartesian "
+        "the CDC fixture) — the source is materialized once and "
+        "broadcast; target rows without a match pass through a LeftAnti "
+        "join against it; only matched pairs and source rows are "
+        "shuffled, once, and the multi-match guard is an in-plan "
+        "raise_error over a window count; the target is scanned twice, "
+        "never shuffled or broadcast, and there is no cartesian "
         "stage. Properties asserted live in tests/test_plan_pins.py; "
         "the skeleton below is evidence, not a freshness pin (AQE stage "
         "markers in it depend on which setup stages already ran).\n"

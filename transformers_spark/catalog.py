@@ -26,6 +26,7 @@ import shutil
 import time
 from dataclasses import dataclass
 from datetime import date
+from types import SimpleNamespace
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,6 +100,7 @@ class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._meta: dict[str, TableMeta] = {}
+        self._tables: dict[str, SimpleNamespace] = {}  # see _table
 
     # -- naming ---------------------------------------------------------
 
@@ -169,12 +171,14 @@ class Catalog:
             self._run_ddl(ddl)
         meta = TableMeta(fqn=fqn, spark_name=name, columns=list(columns), partition=partition)
         self._meta[fqn] = meta
+        self._tables.pop(name.lower(), None)
         return meta
 
     def drop_table(self, fqn: str) -> None:
         name = self.spark_name(fqn)
         self._run_ddl(f"DROP TABLE IF EXISTS {_q(name)}")
         self._meta.pop(fqn, None)
+        self._tables.pop(name.lower(), None)
         self._drop_versions(name)
 
     # -- version directories (loaders.py commit protocol) ---------------
@@ -206,35 +210,123 @@ class Catalog:
         if self.local_warehouse is not None:
             shutil.rmtree(self.versions_dir(spark_name), ignore_errors=True)
 
+    # -- commits through the external catalog (loaders.py) ---------------
+    #
+    # A commit changes metadata only, so it talks to the external catalog
+    # directly: listing a table's partitions there takes ~2 ms against
+    # ~32 ms for SHOW PARTITIONS, and each SQL DDL statement costs 10-60 ms
+    # of parsing, analysis and a relation refresh on top of its one
+    # catalog call.
+
+    @functools.cached_property
+    def _jvm(self) -> SimpleNamespace:
+        """Session-wide JVM handles the commit calls reuse."""
+        jvm = self.spark._jvm
+        session = self.spark._jsparkSession
+        catalog = jvm.org.apache.spark.sql.catalyst.catalog
+        return SimpleNamespace(
+            session_catalog=session.sessionState().catalog(),
+            external=session.sessionState().catalog().externalCatalog(),
+            partition=catalog.CatalogTablePartition,
+            uri=catalog.CatalogUtils.stringToURI,
+            spec=jvm.org.apache.spark.sql.execution.datasources.PartitioningUtils.parsePathFragment,
+            some=jvm.scala.Option.apply,
+            none=jvm.scala.Option.empty(),
+            no_params=jvm.scala.Predef.Map().empty(),
+            array_list=jvm.java.util.ArrayList,
+            as_scala=jvm.scala.jdk.javaapi.CollectionConverters.asScala,
+            identifier=jvm.org.apache.spark.sql.catalyst.TableIdentifier,
+        )
+
+    def _table(self, spark_name: str) -> SimpleNamespace:
+        """Per-table JVM handles: the table's storage format (what a new
+        partition inherits) and its identifier. Storage formats never
+        change under a table, so the handles live until the table is
+        created or dropped through this catalog."""
+        key = spark_name.lower()
+        if key not in self._tables:
+            j = self._jvm
+            db, table = key.split(".")
+            storage = j.external.getTable(db, table).storage()
+            self._tables[key] = SimpleNamespace(
+                db=db,
+                table=table,
+                storage=storage,
+                formats=(
+                    storage.inputFormat(), storage.outputFormat(), storage.serde(),
+                    storage.compressed(), storage.properties(),
+                ),
+                ident=j.identifier(table, j.some(db)),
+            )
+        return self._tables[key]
+
+    def partition_names(self, spark_name: str) -> set[str]:
+        """The table's ``dt`` partition values, as they appear in ``dt=``
+        directory names (``__HIVE_DEFAULT_PARTITION__`` for NULL)."""
+        t = self._table(spark_name)
+        names = self._retry(
+            lambda: self._jvm.external.listPartitionNames(t.db, t.table, self._jvm.none)
+        ).mkString("\n")
+        prefix = f"{PARTITION_COL}="
+        return {n[len(prefix):] for n in names.split("\n") if n.startswith(prefix)}
+
+    def _partitions(self, t: SimpleNamespace, locations: dict[str, str]):
+        """A Scala Seq of partitions at local ``locations`` (partition
+        value → path), each inheriting the table's storage format."""
+        j = self._jvm
+        now = int(time.time() * 1000)
+        parts = j.array_list()
+        for value, path in locations.items():
+            where = t.storage.copy(j.some(j.uri("file:" + path)), *t.formats)
+            parts.add(j.partition(
+                j.spec(f"{PARTITION_COL}={value}"), where, j.no_params, now, -1, j.none,
+            ))
+        return j.as_scala(parts).toSeq()
+
+    def add_partitions(self, spark_name: str, locations: dict[str, str]) -> None:
+        """Add ``dt`` partitions at local directories in ONE external-
+        catalog call (partitions that exist already are left as they
+        are). ``locations`` maps a partition value, as it appears in a
+        ``dt=`` directory name, to a path."""
+        t = self._table(spark_name)
+        seq = self._partitions(t, locations)
+        self._retry(lambda: self._jvm.external.createPartitions(t.db, t.table, seq, True))
+
     def set_partition_locations(self, spark_name: str, locations: dict[str, str]) -> None:
         """Point existing ``dt`` partitions at new local directories in
-        ONE external-catalog call. ``locations`` maps a partition value,
-        as it appears in a ``dt=`` directory name, to a path. The SQL
-        form, ``ALTER TABLE … PARTITION … SET LOCATION``, costs one
-        statement per day: 10-20 ms each with the in-memory catalog and
-        about 60 ms with the embedded Hive metastore."""
-        jvm = self.spark._jvm
-        ext = self.spark._jsparkSession.sessionState().catalog().externalCatalog()
-        db, table = spark_name.lower().split(".")
-        storage = ext.getTable(db, table).storage()
-        formats = (
-            storage.inputFormat(), storage.outputFormat(), storage.serde(),
-            storage.compressed(), storage.properties(),
+        ONE external-catalog call; ``locations`` as for
+        ``add_partitions``. The SQL form, ``ALTER TABLE … PARTITION …
+        SET LOCATION``, costs one statement per day: 10-20 ms each with
+        the in-memory catalog and about 60 ms with the embedded Hive
+        metastore."""
+        t = self._table(spark_name)
+        seq = self._partitions(t, locations)
+        self._retry(lambda: self._jvm.external.alterPartitions(t.db, t.table, seq))
+
+    def set_location(self, spark_name: str, path: str) -> None:
+        """Point an unpartitioned table at a local directory: what
+        ``ALTER TABLE … SET LOCATION`` does, in two catalog calls. Like
+        that statement, it drops the table's statistics, which described
+        the old data."""
+        j, t = self._jvm, self._table(spark_name)
+        table = self._retry(lambda: j.external.getTable(t.db, t.table))
+        inputs, outputs, serde, compressed, properties = t.formats
+        moved = table.withNewStorage(
+            j.some(j.uri("file:" + path)), inputs, outputs, compressed, serde, properties
         )
-        partition = jvm.org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
-        uri = jvm.org.apache.spark.sql.catalyst.catalog.CatalogUtils.stringToURI
-        spec = jvm.org.apache.spark.sql.execution.datasources.PartitioningUtils.parsePathFragment
-        no_params = jvm.scala.Predef.Map().empty()
-        now = int(time.time() * 1000)
-        parts = jvm.java.util.ArrayList()
-        for value, path in locations.items():
-            where = storage.copy(jvm.scala.Option.apply(uri("file:" + path)), *formats)
-            parts.add(partition(
-                spec(f"{PARTITION_COL}={value}"), where, no_params, now, -1,
-                jvm.scala.Option.empty(),
-            ))
-        seq = jvm.scala.jdk.javaapi.CollectionConverters.asScala(parts).toSeq()
-        self._retry(lambda: ext.alterPartitions(db, table, seq))
+        self._retry(lambda: j.external.alterTable(moved))
+        if table.stats().isDefined():
+            self._retry(lambda: j.external.alterTableStats(t.db, t.table, j.none))
+
+    def invalidate(self, spark_name: str) -> None:
+        """Make the next read of the table plan against its new
+        locations: drop the session's cached relation of the table.
+        ``refreshTable`` does that too, after resolving the table and
+        listing its files (~10 ms against ~0.1 ms); its other work,
+        refreshing file listings and re-caching cached frames of the
+        table, reads the directories a commit has just stopped
+        referencing."""
+        self._jvm.session_catalog.invalidateCachedTable(self._table(spark_name).ident)
 
     def create_view(self, fqn: str, sql_query: str, replace: bool = True) -> str:
         """Standard (non-materialized) view under catalog coordinates;

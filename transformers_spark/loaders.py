@@ -22,11 +22,15 @@ Re-expresses the reference's loaders + write dispositions
 Commit protocol — one for every load except APPEND. The load writes its
 new content exactly once, into a fresh version directory
 ``<warehouse>/<db>.db/_versions/<table>/<uuid>`` outside the table's
-own root, and commits by changing catalog metadata only: ``ALTER TABLE
-… SET LOCATION`` for an unpartitioned table; for a partitioned one, one
-batched ``ADD PARTITION … LOCATION`` for the new days and one
-external-catalog ``alterPartitions`` call that moves every day that
-already exists. A day the load empties is pointed at an empty directory
+own root, and commits by changing catalog metadata only, through direct
+external-catalog calls rather than SQL DDL (``Catalog.set_location``,
+``add_partitions``, ``set_partition_locations``): ``alterTable`` to a
+new location for an unpartitioned table; for a partitioned one, one
+``createPartitions`` call for the new days and one ``alterPartitions``
+call that moves every day that already exists, which
+``listPartitionNames`` tells apart. The commit then drops the session's
+cached relation of the table (``Catalog.invalidate``) instead of
+running ``refreshTable``. A day the load empties is pointed at an empty directory
 rather than dropped: dropping a managed partition deletes files a
 reader may still scan, and a later APPEND of that day would land in the
 day's old default directory and pick its stale files up again. No load
@@ -43,7 +47,8 @@ Applying a record twice is harmless, so:
 * killed during the version write — there is no record; the table is
   wholly old and the half-written version is garbage.
 * killed after the record is written — before the first catalog
-  change, between the ADD of new days and the move of existing ones,
+  change, between the call that adds new days and the one that moves
+  existing ones,
   or before the record is deleted — the next load of the table (any
   method, at its entry, under the table lock) or ``Writer.recover()``
   rolls the record forward: the table reads wholly new.
@@ -88,6 +93,7 @@ import re
 import shutil
 import threading
 import uuid
+from collections.abc import Iterable
 from datetime import date, datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -394,22 +400,21 @@ class Writer:
             if not meta.partition.is_partitioned:
                 self._commit(meta, dest.filter(~matches).unionByName(new))
                 return
-            # affected = partitions with deletions ∪ partitions of inserts.
-            # The inserts' days come from the version's dt= directories,
-            # so the query runs once: for the write.
-            matched = _days(dest.filter(matches).select(PARTITION_COL))
+            # affected = days with deletions ∪ days of inserts. One job
+            # finds the matched days; one save writes the new rows with
+            # the kept rows of those days, so the query runs once. A
+            # written day outside them that already exists keeps its
+            # rows through a second, appending save; the catalog's
+            # partition list tells which, without a job.
+            matched = _days(dest.filter(matches))
             version = self._new_version(meta)
-            self._write(meta, new, version)
-            written = _version_days(version)
-            days = sorted(
-                set(matched)
-                | {date.fromisoformat(d) for d in written if d != _NULL_DAY}
-            )
-            scope = F.col(PARTITION_COL).isin(days)
-            if _NULL_DAY in written:  # the commit replaces the NULL day too
-                scope = scope | F.col(PARTITION_COL).isNull()
-            self._write(meta, dest.filter(scope & ~matches), version, append=True)
-            self._swap(meta, version, days)
+            kept = _in_days(dest, matched).filter(~matches)
+            self._write(meta, new.unionByName(kept), version)
+            existing = self.catalog.partition_names(meta.spark_name)
+            extra = (_version_days(version) - matched) & existing
+            if extra:
+                self._write(meta, _in_days(dest, extra), version, append=True)
+            self._swap(meta, version, matched)
 
     def delete_where(self, fqn: str, predicate: str) -> None:
         """``DELETE FROM t WHERE pred`` (reference:
@@ -423,7 +428,7 @@ class Writer:
             if not meta.partition.is_partitioned:
                 self._commit(meta, dest.filter(~matches))
                 return
-            days = _days(dest.filter(matches).select(PARTITION_COL))
+            days = _days(dest.filter(matches))
             if not days:
                 self.rows_written = self.rows_written or 0
                 return  # nothing matched: nothing to rewrite
@@ -487,7 +492,7 @@ class Writer:
                     )
                 self._commit(meta, updated, whole=True)
                 return
-            days = _days(dest.filter(matches).select(PARTITION_COL))
+            days = _days(dest.filter(matches))
             if not days:
                 self.rows_written = self.rows_written or 0
                 return  # nothing matched: nothing to rewrite
@@ -518,7 +523,7 @@ class Writer:
         self,
         meta: TableMeta,
         df: DataFrame,
-        days: list[date] = (),
+        days: Iterable[date | str] = (),
         whole: bool = False,
     ) -> None:
         """Write ``df`` once into a fresh version directory, then point
@@ -555,22 +560,20 @@ class Writer:
         self,
         meta: TableMeta,
         version: str,
-        days: list[date] = (),
+        days: Iterable[date | str] = (),
         whole: bool = False,
     ) -> None:
         """Point the catalog at a written version. Partitioned tables
         replace the days the version holds, plus the listed ``days``
-        and — when ``whole`` — every existing day; a replaced day
-        without new rows is emptied."""
+        (dates, or names as in ``dt=`` directories) and — when
+        ``whole`` — every existing day; a replaced day without new rows
+        is emptied."""
         name = meta.spark_name
         tdir = self._versions_dir(name)
         if meta.partition.is_partitioned:
             written = _version_days(version)
-            existing = {
-                r[0].split("=", 1)[1]
-                for r in self.catalog._run_ddl(f"SHOW PARTITIONS {_q(name)}").collect()
-            }
-            touched = written | {d.isoformat() for d in days}
+            existing = self.catalog.partition_names(name)
+            touched = written | {d if isinstance(d, str) else d.isoformat() for d in days}
             if whole:
                 touched |= existing
             intent = {
@@ -586,7 +589,7 @@ class Writer:
         self._apply(intent)
         os.remove(path)
         garbage = self._supersede(meta, intent)
-        self.spark.catalog.refreshTable(name)
+        self.catalog.invalidate(name)
         for old in garbage:
             shutil.rmtree(old, ignore_errors=True)
         for old in {os.path.dirname(g) for g in garbage}:
@@ -601,9 +604,7 @@ class Writer:
         step is idempotent, so a record may be applied again."""
         name = intent["table"]
         if "location" in intent:
-            self.catalog._run_ddl(
-                f"ALTER TABLE {_q(name)} SET LOCATION {_lit(intent['location'])}"
-            )
+            self.catalog.set_location(name, intent["location"])
             return
 
         def location(day: str) -> str:
@@ -612,11 +613,7 @@ class Writer:
             return path
 
         if intent["add"]:
-            specs = " ".join(
-                f"PARTITION ({_spec(d)}) LOCATION {_lit(location(d))}"
-                for d in intent["add"]
-            )
-            self.catalog._run_ddl(f"ALTER TABLE {_q(name)} ADD IF NOT EXISTS {specs}")
+            self.catalog.add_partitions(name, {day: location(day) for day in intent["add"]})
         if intent["set"]:
             self.catalog.set_partition_locations(
                 name, {day: location(day) for day in intent["set"]}
@@ -671,7 +668,7 @@ class Writer:
             self._apply(intent)
         os.remove(path)
         if exists:
-            self.spark.catalog.refreshTable(intent["table"])
+            self.catalog.invalidate(intent["table"])
 
     def recover(self) -> list[str]:
         """Roll every intent record in the warehouse forward, then
@@ -739,21 +736,28 @@ def _require_partitioned(meta: TableMeta) -> None:
         raise ValueError(f"{meta.fqn} is not partitioned")
 
 
-def _days(frame: DataFrame) -> list[date]:
-    """The distinct non-NULL ``dt`` values of a one-column frame."""
-    return sorted(r[0] for r in frame.distinct().collect() if r[0] is not None)
+def _days(frame: DataFrame) -> set[str]:
+    """The distinct ``dt`` values of ``frame``, named as in ``dt=``
+    directories (``_NULL_DAY`` for NULL)."""
+    rows = frame.select(PARTITION_COL).distinct().collect()
+    return {_NULL_DAY if r[0] is None else r[0].isoformat() for r in rows}
+
+
+def _in_days(df: DataFrame, days: set[str]) -> DataFrame:
+    """Rows of ``days`` (named as by ``_days``) only — a literal IN on
+    the partition column, so the scan is pruned to those partitions."""
+    scope = F.col(PARTITION_COL).isin(
+        sorted(date.fromisoformat(d) for d in days if d != _NULL_DAY)
+    )
+    if _NULL_DAY in days:
+        scope = scope | F.col(PARTITION_COL).isNull()
+    return df.filter(scope)
 
 
 def _version_days(version: str) -> set[str]:
     """The days a version holds, from its ``dt=`` directories."""
     prefix = f"{PARTITION_COL}="
     return {d[len(prefix):] for d in os.listdir(version) if d.startswith(prefix)}
-
-
-def _in_days(df: DataFrame, days: list[date]) -> DataFrame:
-    """Rows of ``days`` only — a literal IN on the partition column, so
-    the scan is pruned to those partitions."""
-    return df.filter(F.col(PARTITION_COL).isin(days))
 
 
 def _write_json(path: str, value) -> None:
@@ -768,11 +772,6 @@ def _norm_type(ddl: str) -> str:
     return re.sub(r"\s+", "", ddl).lower()
 
 
-def _spec(day: str) -> str:
-    value = "NULL" if day == _NULL_DAY else f"'{day}'"
-    return f"{PARTITION_COL} = {value}"
-
-
 def _db_of(table_dir: str) -> str:
     """``<warehouse>/<db>.db/_versions/<table>`` → ``<db>``."""
     return os.path.basename(os.path.dirname(os.path.dirname(table_dir)))[: -len(".db")]
@@ -780,11 +779,3 @@ def _db_of(table_dir: str) -> str:
 
 def _overlaps(a: str, b: str) -> bool:
     return a == b or a.startswith(b + "/") or b.startswith(a + "/")
-
-
-def _lit(text: str) -> str:
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _q(name: str) -> str:
-    return ".".join(f"`{part}`" for part in name.split("."))
