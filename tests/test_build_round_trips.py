@@ -74,13 +74,15 @@ def test_merge_plan_build_stays_within_its_round_trip_budget(spark, monkeypatch)
     materialization included, as one SQL text: MERGE_BUDGET calls, a
     third of what the plan cost when it was built from DataFrame calls
     (MERGE_BEFORE)."""
-    from transformers_spark.dml import build_merge_plan
+    from transformers_spark.dml import build_merge_plan, materialize_source
     from transformers_spark.expansion4 import _cdc_merge_setup
 
+    def build():
+        source = cache.track(materialize_source(spark, stmt))
+        return build_merge_plan(spark, cat, stmt, fqn, source)
+
     cat, _, stmt, fqn = _cdc_merge_setup(spark, SF)
-    build_merge_plan(spark, cat, stmt, fqn)  # warm: the fixture's own calls
+    build()  # warm: the fixture's own calls
     cache.release()
-    calls = _round_trips(
-        monkeypatch, lambda: build_merge_plan(spark, cat, stmt, fqn)
-    )
+    calls = _round_trips(monkeypatch, build)
     assert 0 < calls <= MERGE_BUDGET, f"build_merge_plan took {calls} py4j calls"

@@ -796,6 +796,39 @@ def test_merge_into_ingestion_time_table(spark, engine):
     assert rows[2][1] == datetime.date.today()  # insert stamped load day
 
 
+def test_merge_into_not_null_columns(spark, engine):
+    """MERGE into a day-partitioned table whose columns, the partition
+    field among them, are NOT NULL: an updated row, an inserted row and
+    a row that passes through all land under their own column names,
+    and a NULL written to a NOT NULL column still fails the MERGE."""
+    dest = "g-project.playground.merge_not_null_dest"
+    engine.catalog.create_table(
+        dest,
+        [("d", "date NOT NULL"), ("k", "bigint NOT NULL"), ("v", "string NOT NULL")],
+        PartitionSpec(kind=PartitionKind.COLUMN_DAY, field="d"),
+    )
+    engine.writer.append(dest, spark.createDataFrame(
+        [(date(2024, 1, 1), 1, "a"), (date(2024, 1, 2), 2, "b")], "d date, k bigint, v string"
+    ))
+    merge = """
+MERGE `g-project.playground.merge_not_null_dest` T
+USING (SELECT * FROM VALUES (1, 'updated', 'x'), ({k}, 'inserted', {w}) AS s(k, v, w)) S
+ON T.k = S.k
+WHEN MATCHED THEN UPDATE SET v = S.v
+WHEN NOT MATCHED THEN INSERT (d, k, v) VALUES (DATE'2024-01-03', S.k, S.w)
+"""
+    engine.run_script(merge.format(k=3, w="'y'"))
+    rows = sorted(tuple(r) for r in engine.catalog.read(dest).select("dt", "d", "k", "v").collect())
+    assert rows == [
+        (date(2024, 1, 1), date(2024, 1, 1), 1, "updated"),
+        (date(2024, 1, 2), date(2024, 1, 2), 2, "b"),
+        (date(2024, 1, 3), date(2024, 1, 3), 3, "y"),
+    ]
+    with pytest.raises(Exception, match="NOT NULL column v"):
+        engine.run_script(merge.format(k=4, w="CAST(NULL AS STRING)"))
+    assert engine.catalog.read(dest).count() == 3
+
+
 def test_merge_case_insensitive_set_and_unknown_column(spark, engine):
     """SET/INSERT column names resolve case-insensitively (BigQuery
     identifier semantics); unknown columns raise instead of silently

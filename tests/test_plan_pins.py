@@ -367,11 +367,11 @@ def test_merge_plan_properties(spark):
     Exchange sits over a target scan: only matched pairs and source
     rows are shuffled, and the target is never broadcast."""
     from transformers_spark import cache
-    from transformers_spark.dml import build_merge_plan
+    from transformers_spark.dml import build_merge_plan, materialize_source
     from transformers_spark.expansion4 import _cdc_merge_setup
 
     cat, _, stmt, fqn = _cdc_merge_setup(spark, SF)
-    df = build_merge_plan(spark, cat, stmt, fqn)
+    df = build_merge_plan(spark, cat, stmt, fqn, cache.track(materialize_source(spark, stmt)))
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")

@@ -380,14 +380,16 @@ def main() -> None:
     # source, in-plan duplicate-match guard, no cartesian, no shuffle or
     # broadcast of the target. Documented here; the live assertions run
     # in tests/test_plan_pins.py::test_merge_plan_properties.
-    from transformers_spark.dml import build_merge_plan
+    from transformers_spark.dml import build_merge_plan, materialize_source
     from transformers_spark.expansion4 import _cdc_merge_setup
 
     cat, _, stmt, fqn = _cdc_merge_setup(spark, sf)
-    df = build_merge_plan(spark, cat, stmt, fqn)
+    source = materialize_source(spark, stmt)
+    df = build_merge_plan(spark, cat, stmt, fqn, source)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
+    source.unpersist()
     lines = skeleton(buf.getvalue())
     out.append("## dedup_cdc_merge__merge_plan\n")
     out.append(

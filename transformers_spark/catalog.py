@@ -310,9 +310,10 @@ class Catalog:
         the old data."""
         j, t = self._jvm, self._table(spark_name)
         table = self._retry(lambda: j.external.getTable(t.db, t.table))
-        inputs, outputs, serde, compressed, properties = t.formats
+        storage = table.storage()
         moved = table.withNewStorage(
-            j.some(j.uri("file:" + path)), inputs, outputs, compressed, serde, properties
+            j.some(j.uri("file:" + path)), storage.inputFormat(), storage.outputFormat(),
+            storage.compressed(), storage.serde(), storage.properties(),
         )
         self._retry(lambda: j.external.alterTable(moved))
         if table.stats().isDefined():

@@ -33,10 +33,9 @@ from dataclasses import dataclass, field
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-from . import cache
 from .catalog import Catalog, _q
 from .dialect import _split_top_level_args
-from .loaders import _NOT_NULL_RE, Writer, _norm_type
+from .loaders import Writer, column_sql, quote_ident, quote_string
 
 __all__ = ["MergeStatement", "parse_merge", "parse_delete", "parse_update", "execute_merge", "execute_delete", "execute_update"]
 
@@ -283,15 +282,6 @@ def _frag(sql: str) -> str:
     return f"({sql}\n)"
 
 
-def _ident(name: str) -> str:
-    return f"`{name}`"
-
-
-def _lit(text: str) -> str:
-    """A SQL string literal."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _first_applicable(clauses: list[MergeClause]) -> str:
     """SQL: index of the first clause whose AND-pred passes (NULL if
     none) — standard MERGE clause-ordering semantics."""
@@ -302,21 +292,6 @@ def _first_applicable(clauses: list[MergeClause]) -> str:
         for i, c in enumerate(clauses)
     )
     return f"CASE {whens} END"
-
-
-def _cast(expr: str, ddl_type: str, column: str, fqn: str) -> str:
-    """SQL: ``expr`` cast to a destination column's type. A cast that
-    turns a non-NULL value into NULL fails the job, as the writer's own
-    alignment does (``loaders.Writer._align``)."""
-    e = _frag(expr)
-    cast = f"CAST({e} AS {ddl_type})"
-    head = _lit(" value '")
-    tail = _lit(f"' to {ddl_type} column {column} of {fqn}: the cast yields NULL")
-    error = f"concat('cannot write ', typeof({e}), {head}, CAST({e} AS STRING), {tail})"
-    return (
-        f"CASE WHEN {e} IS NOT NULL AND {cast} IS NULL "
-        f"THEN CAST(raise_error({error}) AS {ddl_type}) ELSE {cast} END"
-    )
 
 
 def materialize_source(spark: SparkSession, stmt: MergeStatement) -> DataFrame:
@@ -340,12 +315,11 @@ def build_merge_plan(
     catalog: Catalog,
     stmt: MergeStatement,
     fqn: str,
-    source: DataFrame | None = None,
+    source: DataFrame,
 ) -> DataFrame:
     """Build (without executing) the merged-table plan for ``stmt``, as
-    one SQL text over the target and the materialized ``source``
-    (``materialize_source``; without one, the source is materialized
-    here and registered with ``cache.track``).
+    one SQL text over the target and ``source``, the statement's USING
+    source as ``materialize_source`` returns it.
 
     Split from ``execute_merge`` so the plan is inspectable — the
     plan-pin tests assert its shape (tests/test_plan_pins.py).
@@ -406,37 +380,31 @@ def build_merge_plan(
     insert_clauses = [c for c in stmt.clauses if c.kind == "not_matched_insert"]
     by_source_clauses = [c for c in stmt.clauses if c.kind == "by_source_delete"]
 
-    if source is None:
-        source = cache.track(materialize_source(spark, stmt))
     view = f"__ts_merge_source_{uuid.uuid4().hex}"
-    t, s = _ident(stmt.target_alias), _ident(stmt.source_alias)
-    types = {name: _NOT_NULL_RE.sub("", ddl) for name, ddl in meta.columns}
-    required = {name for name, ddl in meta.columns if _NOT_NULL_RE.search(ddl)}
+    t, s = quote_ident(stmt.target_alias), quote_ident(stmt.source_alias)
     # Ingestion-time tables: kept/updated rows RETAIN their original
     # partition (BigQuery never moves _PARTITIONTIME on UPDATE) and
     # inserted rows stamp the load day, so dt rides through the plan.
     ingestion = meta.partition.kind == PartitionKind.INGESTION_DAY
     out = cols + ([PARTITION_COL] if ingestion else [])
+    types = dict(meta.columns) | {PARTITION_COL: "date"}
     slot = {c: f"`__ts_merge_o{i}`" for i, c in enumerate(out)}
 
-    def checked(name: str, sql: str) -> str:
-        """A NOT NULL destination column fails the job on a NULL."""
-        if name not in required:
-            return sql
-        message = _lit(
-            f"NULL written to NOT NULL column {name} of {meta.fqn}; "
-            "set ALLOW_FIELD_ADDITION to relax"
-        )
-        return f"coalesce({sql}, CAST(raise_error({message}) AS {types[name]}))"
+    def stored(c: str, sql: str) -> str:
+        """The value ``sql``, of column ``c``'s type, as written (a NULL
+        in a NOT NULL column fails the job; loaders.column_sql)."""
+        return column_sql(sql, c, types[c], meta.fqn, source_type=types[c])
 
     source_types = {name.lower(): dtype for name, dtype in source.dtypes}
     target_types = {c.lower(): types[c] for c in cols}
     aliases = {stmt.source_alias.lower(): source_types, stmt.target_alias.lower(): target_types}
 
     def value(expr: str, c: str) -> str:
-        """``expr`` cast to column ``c``; an expression that only names a
-        column of that type needs no guard (``SET c = S.c``)."""
+        """``expr`` cast to column ``c``; the type of an expression that
+        only names a column (``SET c = S.c``) is known, so a cast to the
+        same type needs no guard."""
         ref = _COLUMN_REF.fullmatch(expr.strip())
+        source_type = None
         if ref:
             qualifier, name = (ref.group(1) or "").lower(), ref.group(2).lower()
             if qualifier:
@@ -444,12 +412,11 @@ def build_merge_plan(
             else:
                 sides = [side for side in (source_types, target_types) if name in side]
                 side = sides[0] if len(sides) == 1 else {}
-            if _norm_type(side.get(name, "")) == _norm_type(types[c]):
-                return f"CAST({_frag(expr)} AS {types[c]})"
-        return _cast(expr, types[c], c, meta.fqn)
+            source_type = side.get(name)
+        return column_sql(expr, c, types[c], meta.fqn, source_type=source_type, alias=False)
 
     def matched_value(c: str) -> str:
-        target_value = f"{t}.{_ident(c)}"
+        target_value = f"{t}.{quote_ident(c)}"
         whens = [
             f"WHEN {i} THEN {value(clause.assignments[c.lower()], c)}"
             for i, clause in enumerate(matched_clauses)
@@ -468,10 +435,10 @@ def build_merge_plan(
             if c.lower() in clause.insert_cols
         ]
         if not whens:
-            return f"CAST(NULL AS {types[c]})"
+            return "NULL"
         return f"CASE {_first_applicable(insert_clauses)} {' '.join(whens)} END"
 
-    target = ", ".join(_ident(c) for c in out)
+    target = ", ".join(quote_ident(c) for c in out)
     pairs = (
         f"SELECT {t}.{_ROWID}, {s}.{_SID}, {_first_applicable(matched_clauses)} AS {_CLAUSE}, "
         + ", ".join(f"{matched_value(c)} AS {slot[c]}" for c in out)
@@ -501,7 +468,7 @@ def build_merge_plan(
     written = f"{_CLAUSE} IS NOT NULL" + (
         f" AND {_CLAUSE} NOT IN ({', '.join(deletes)})" if deletes else ""
     )
-    guard = _lit(
+    guard = quote_string(
         f"MERGE error: a target row in {meta.fqn} matched more than one "
         "source row for UPDATE/DELETE"
     )
@@ -516,7 +483,7 @@ def build_merge_plan(
             f"AND {_first_applicable(insert_clauses)} IS NOT NULL"
         )
         values = [
-            checked(c, f"CASE WHEN {_KIND} = 0 THEN {slot[c]} ELSE {inserted_value(c)} END")
+            stored(c, f"CASE WHEN {_KIND} = 0 THEN {slot[c]} ELSE {inserted_value(c)} END")
             for c in out
         ]
         resolved = (
@@ -524,21 +491,20 @@ def build_merge_plan(
             f"{_SRC}.* FROM ({resolved}) AS r"
         )
     else:
-        values = [checked(c, slot[c]) for c in out]
+        values = [stored(c, slot[c]) for c in out]
     keep += " ELSE false END"
-    unmatched = f"SELECT {', '.join(checked(c, f'{t}.{_ident(c)}') for c in out)} " + (
+    unmatched = f"SELECT {', '.join(stored(c, f'{t}.{quote_ident(c)}') for c in out)} " + (
         f"FROM {_q(meta.spark_name)} AS {t} LEFT ANTI JOIN {view} AS {s} ON {_frag(stmt.on)}"
     )
     if by_source_clauses:
         unmatched += f" WHERE {_first_applicable(by_source_clauses)} IS NULL"
     merged = (
-        f"{unmatched} UNION ALL SELECT "
-        + ", ".join(f"{v} AS {_ident(c)}" for v, c in zip(values, out))
+        f"{unmatched} UNION ALL SELECT {', '.join(values)}"
         + f" FROM ({resolved}) AS {s} WHERE {keep}"
     )
     if meta.partition.kind == PartitionKind.COLUMN_DAY:
         merged = (
-            f"SELECT *, to_date({_ident(meta.partition.field)}) AS {PARTITION_COL} "
+            f"SELECT *, to_date({quote_ident(meta.partition.field)}) AS {PARTITION_COL} "
             f"FROM ({merged}) AS m"
         )
     source.createOrReplaceTempView(view)

@@ -155,23 +155,11 @@ class Writer:
     # -- schema alignment ----------------------------------------------
 
     def _align(
-        self,
-        df: DataFrame,
-        meta: TableMeta,
-        allow_field_addition: bool,
-        keep_partition_col: bool = False,
+        self, df: DataFrame, meta: TableMeta, allow_field_addition: bool
     ) -> DataFrame:
         """Project df onto the destination's user columns (by name,
-        casting types); optionally evolve the destination schema first.
-        ``keep_partition_col`` carries an already-present ``dt`` column
-        through (appended last, matching table column order) — used by
-        DML emulation on ingestion-time tables, where kept/updated rows
-        must retain their ORIGINAL partition.
-
-        A cast that turns a non-NULL value into NULL (``'abc'`` into a
-        ``bigint`` column: with ANSI off, ``Column.cast`` yields NULL)
-        fails the job: a schema mismatch never writes NULLs in place of
-        data.
+        casting types, one ``column_sql`` each); optionally evolve the
+        destination schema first.
 
         ``allow_field_addition`` enables BOTH schema-update options the
         reference sets together (bigquery_service.py:111-115): new
@@ -180,8 +168,8 @@ class Writer:
         (ALLOW_FIELD_RELAXATION). Without it, a NOT NULL column is
         ENFORCED at write time: a missing source column fails the plan
         (it would write all NULLs), and a present-but-null value fails
-        the job via a per-row raise_error guard — Spark itself doesn't
-        enforce declared constraints on v1 parquet tables.
+        the job — Spark itself doesn't enforce declared constraints on
+        v1 parquet tables.
         """
         df_cols = {c.lower(): c for c in df.columns}
         df_types = {
@@ -189,12 +177,7 @@ class Writer:
             for c, f in zip(df.columns, df.schema.fields)
         }
         dest_names = {n.lower() for n, _ in meta.columns}
-        extra = [
-            c
-            for c in df.columns
-            if c.lower() not in dest_names
-            and not (keep_partition_col and c == PARTITION_COL)
-        ]
+        extra = [c for c in df.columns if c.lower() not in dest_names]
         if extra:
             if not allow_field_addition:
                 raise ValueError(
@@ -212,48 +195,14 @@ class Writer:
             # reference couples addition+relaxation in one option set
             self.catalog.relax_columns(meta.fqn, required)
         # without relaxation: a missing required column already failed the
-        # generic missing-columns check above; present columns get a
-        # per-row NULL guard below
-        required_set = {n.lower() for n in required} if not allow_field_addition else set()
-        select = []
-        for name, ddl_type in meta.columns:
-            base_type = _NOT_NULL_RE.sub("", ddl_type)
-            if name.lower() in df_cols:
-                src = F.col(f"`{df_cols[name.lower()]}`")
-                col = src.cast(base_type)
-                src_type = df_types[name.lower()]
-                if _norm_type(src_type) != _norm_type(base_type):
-                    col = F.when(
-                        src.isNotNull() & col.isNull(),
-                        F.raise_error(
-                            F.concat(
-                                F.lit(
-                                    f"cannot write {src_type} value '"
-                                ),
-                                src.cast("string"),
-                                F.lit(
-                                    f"' to {base_type} column {name} of "
-                                    f"{meta.fqn}: the cast yields NULL"
-                                ),
-                            )
-                        ).cast(base_type),
-                    ).otherwise(col)
-                if name.lower() in required_set:
-                    col = F.coalesce(
-                        col,
-                        F.raise_error(
-                            F.lit(
-                                f"NULL written to NOT NULL column {name} of "
-                                f"{meta.fqn}; set ALLOW_FIELD_ADDITION to relax"
-                            )
-                        ).cast(base_type),
-                    )
-                select.append(col.alias(name))
-            else:
-                select.append(F.lit(None).cast(base_type).alias(name))
-        if keep_partition_col and PARTITION_COL in df.columns:
-            select.append(F.col(PARTITION_COL).cast("date").alias(PARTITION_COL))
-        return df.select(*select)
+        # generic missing-columns check above
+        return df.selectExpr(*[
+            column_sql(quote_ident(df_cols[name.lower()]), name, ddl, meta.fqn,
+                       source_type=df_types[name.lower()])
+            if name.lower() in df_cols
+            else column_sql("NULL", name, ddl, meta.fqn, source_type=ddl)
+            for name, ddl in meta.columns
+        ])
 
     def _with_dt(
         self, df: DataFrame, meta: TableMeta, partition_date: date | datetime | None
@@ -766,6 +715,53 @@ def _write_json(path: str, value) -> None:
     with open(tmp, "w") as fh:
         json.dump(value, fh)
     os.replace(tmp, path)
+
+
+def column_sql(
+    expr: str,
+    column: str,
+    ddl_type: str,
+    fqn: str,
+    source_type: str | None = None,
+    alias: bool = True,
+) -> str:
+    """SQL: the value ``expr`` written into destination column ``column``
+    of ``fqn``, whose catalog type is ``ddl_type`` (``bigint NOT NULL``
+    for a required column) — the one rule for every write's values
+    (``Writer._align``, the MERGE plan in dml.py).
+
+    The value is cast to the column's type, and aliased to its name
+    unless ``alias`` is false. A cast that turns a non-NULL value into
+    NULL (``'abc'`` into a ``bigint`` column: with ANSI off, CAST yields
+    NULL) fails the job, so a schema mismatch never writes NULLs in
+    place of data; ``source_type``, the value's type when it is known,
+    names it in that error, and when it is the column's own type the
+    cast needs no guard. A NULL in a NOT NULL column fails the job."""
+    base = _NOT_NULL_RE.sub("", ddl_type)
+    e = f"({expr}\n)"  # closed on a new line: a trailing -- comment ends inside
+    sql = f"CAST({e} AS {base})"
+    source = None if source_type is None else _NOT_NULL_RE.sub("", source_type)
+    if source is None or _norm_type(source) != _norm_type(base):
+        shown = quote_string(source) if source else f"typeof({e})"
+        tail = quote_string(f"' to {base} column {column} of {fqn}: the cast yields NULL")
+        error = f"concat('cannot write ', {shown}, ' value \\'', CAST({e} AS STRING), {tail})"
+        sql = f"CASE WHEN {e} IS NOT NULL AND {sql} IS NULL THEN CAST(raise_error({error}) AS {base}) ELSE {sql} END"
+    if _NOT_NULL_RE.search(ddl_type):
+        message = quote_string(
+            f"NULL written to NOT NULL column {column} of {fqn}; set ALLOW_FIELD_ADDITION to relax"
+        )
+        sql = f"coalesce({sql}, CAST(raise_error({message}) AS {base}))"
+    return f"{sql} AS {quote_ident(column)}" if alias else sql
+
+
+def quote_ident(name: str) -> str:
+    """A SQL identifier: ``name`` in backticks."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def quote_string(text: str) -> str:
+    """A SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _norm_type(ddl: str) -> str:
