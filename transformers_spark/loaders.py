@@ -143,7 +143,7 @@ class Writer:
         from pyspark.sql import Observation
 
         obs = Observation()
-        return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+        return df.observe(obs, F.expr("count(1) AS rows")), obs
 
     def _record(self, obs) -> None:
         try:
@@ -492,7 +492,9 @@ class Writer:
         A failed write deletes the version: nothing references it yet."""
         partitioned = meta.partition.is_partitioned
         cols = meta.column_names + ([PARTITION_COL] if partitioned else [])
-        out, obs = self._observed(df.select(*[F.col(f"`{c}`") for c in cols]))
+        if df.columns != cols:
+            df = df.selectExpr(*map(quote_ident, cols))
+        out, obs = self._observed(df)
         writer = out.write.format("parquet")
         if append:
             writer = writer.mode("append")
