@@ -1,102 +1,5 @@
-"""Raw-corpus ingestion readers (sources/corpus.py)."""
-
-import gzip
-import hashlib
-import os
-
-from transformers_spark.sources.corpus import (
-    corrupt_rate_by_file,
-    ingest_csv,
-    ingest_jsonl,
-    read_csv_documents,
-    read_jsonl_documents,
-    synthesize_doc_id,
-)
-
-GOOD = '{"id": "a1", "text": "hello world", "lang": "en", "source": "web"}'
-NO_ID = '{"text": "no id here", "lang": "en", "source": "web"}'
-BROKEN = '{"id": "a3", "text": "unterminated'
-
-
-def _write(path, lines):
-    with open(path, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-
-
-def test_ingest_jsonl_splits_corrupt_and_keeps_clean(spark, tmp_path):
-    p = str(tmp_path / "corpus.jsonl")
-    _write(p, [GOOD, BROKEN, NO_ID])
-    clean, corrupt = ingest_jsonl(spark, p)
-    rows = {r["text"]: r for r in clean.collect()}
-    assert set(rows) == {"hello world", "no id here"}
-    assert rows["hello world"]["id"] == "a1"
-    assert "_corrupt_record" not in clean.columns
-    bad = corrupt.collect()
-    assert len(bad) == 1 and bad[0]["raw_record"] == BROKEN
-    assert bad[0]["source_file"].endswith("corpus.jsonl")
-
-
-def test_ingest_jsonl_reads_gzip_transparently(spark, tmp_path):
-    p = str(tmp_path / "corpus.jsonl.gz")
-    with gzip.open(p, "wt") as fh:
-        fh.write(GOOD + "\n" + BROKEN + "\n")
-    clean, corrupt = ingest_jsonl(spark, p)
-    assert clean.count() == 1 and corrupt.count() == 1
-
-
-def test_read_jsonl_drops_malformed(spark, tmp_path):
-    p = str(tmp_path / "corpus.jsonl")
-    _write(p, [GOOD, BROKEN, NO_ID])
-    assert read_jsonl_documents(spark, p).count() == 2
-
-
-def test_corrupt_rate_by_file(spark, tmp_path):
-    a, b = str(tmp_path / "a.jsonl"), str(tmp_path / "b.jsonl")
-    _write(a, [GOOD, BROKEN])
-    _write(b, [GOOD])
-    rates = {
-        os.path.basename(r["source_file"].replace("file://", "")): r
-        for r in corrupt_rate_by_file(spark, str(tmp_path)).collect()
-    }
-    assert rates["a.jsonl"]["n_corrupt"] == 1
-    assert rates["a.jsonl"]["corrupt_rate"] == 0.5
-    assert rates["b.jsonl"]["n_corrupt"] == 0
-
-
-def test_synthesize_doc_id_content_hash(spark, tmp_path):
-    p = str(tmp_path / "corpus.jsonl")
-    _write(p, [GOOD, NO_ID])
-    clean, _ = ingest_jsonl(spark, p)
-    out = {r["text"]: r["doc_id"] for r in synthesize_doc_id(clean).collect()}
-    assert out["hello world"] == "a1"  # existing id wins
-    assert out["no id here"] == hashlib.md5(b"no id here").hexdigest()
-    # determinism across re-reads
-    clean2, _ = ingest_jsonl(spark, p)
-    out2 = {r["text"]: r["doc_id"] for r in synthesize_doc_id(clean2).collect()}
-    assert out == out2
-
-
-def test_ingest_csv_headerless_shards(spark, tmp_path):
-    p = str(tmp_path / "shard-000.csv")
-    with open(p, "w") as fh:
-        fh.write('c1,"comma, inside",en,web\n')
-        fh.write('c2,plain,en,web\n')
-        fh.write('only-two-fields,x\n')
-    clean, corrupt = ingest_csv(spark, p)
-    rows = {r["id"]: r["text"] for r in clean.collect()}
-    assert rows == {"c1": "comma, inside", "c2": "plain"}
-    # a row with missing trailing fields is quarantined, not padded
-    bad = corrupt.collect()
-    assert len(bad) == 1 and bad[0]["raw_record"] == "only-two-fields,x"
-
-
-def test_read_csv_documents_with_header(spark, tmp_path):
-    p = str(tmp_path / "corpus.csv")
-    with open(p, "w") as fh:
-        fh.write('id,text,lang,source\n')
-        fh.write('c1,"comma, inside",en,web\n')
-    rows = read_csv_documents(spark, p).collect()
-    assert len(rows) == 1 and rows[0]["text"] == "comma, inside"
+"""EXPORT DATA writers (exports.py) and file-backed external tables
+(Catalog.register_external_table)."""
 
 
 def test_export_data_roundtrip(spark, tmp_path):
@@ -195,41 +98,9 @@ def test_export_avro_clear_error_without_module(spark, tmp_path):
         assert back.count() == 1
 
 
-def test_synthesize_doc_id_salted_null_text_stays_null(spark):
-    """With salt_with_file=True a null-text row must still get a NULL
-    id (concat_ws would otherwise hand every null-text row in a file
-    the same md5(filename))."""
-    from transformers_spark.sources.corpus import synthesize_doc_id
-
-    df = spark.createDataFrame([("a",), (None,), (None,)], ["text"])
-    out = synthesize_doc_id(df, salt_with_file=True).collect()
-    ids = [r["doc_id"] for r in out]
-    assert sum(1 for i in ids if i is None) == 2
-
-
-def test_corrupt_rate_respects_sep(spark, tmp_path):
-    """A TSV corpus that ingests cleanly must not be reported corrupt
-    by the health check (same sep plumbed through)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from transformers_spark.sources.corpus import corrupt_rate_by_file, ingest_csv
-
-    p = str(tmp_path / "shard.tsv")
-    with open(p, "w") as fh:
-        fh.write("1\thello\n2\tworld\n")
-    schema = StructType(
-        [StructField("id", LongType()), StructField("text", StringType())]
-    )
-    clean, corrupt = ingest_csv(spark, p, schema=schema, sep="\t")
-    assert clean.count() == 2 and corrupt.count() == 0
-    report = corrupt_rate_by_file(spark, p, schema=schema, fmt="csv", sep="\t").collect()
-    assert report[0]["n_corrupt"] == 0
-
-
 def test_external_table_quoted_path_and_options(spark, tmp_path):
     """Paths/options containing apostrophes must not break the DDL."""
     from transformers_spark.catalog import Catalog
-    from transformers_spark.sources.external import register_external_table
 
     d = tmp_path / "o'brien"
     d.mkdir()
@@ -237,7 +108,5 @@ def test_external_table_quoted_path_and_options(spark, tmp_path):
         str(d / "data")
     )
     cat = Catalog(spark)
-    df = register_external_table(
-        cat, "extp.ds.quoted", str(d / "data"), fmt="parquet"
-    )
+    df = cat.register_external_table("extp.ds.quoted", str(d / "data"), fmt="parquet")
     assert df.count() == 1

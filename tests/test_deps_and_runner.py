@@ -561,22 +561,3 @@ def test_epoch_nanos_integer_exact():
     ) // timedelta(microseconds=1)
     assert _epoch_nanos(dt) == expected_us * 1000
     assert _epoch_nanos(dt) % 1000 == 0
-
-
-def test_exchange_count_sees_roundrobin_and_single(spark):
-    """repartition(n) (RoundRobinPartitioning) and global sorts/limits
-    (SinglePartition) are real shuffles and must be counted (round-4
-    review: the case-sensitive regex missed both)."""
-    from transformers_spark.sources.bucketed import exchange_count
-
-    df = spark.range(100)
-    assert exchange_count(df.repartition(7)) >= 1
-
-
-def test_topn_tokens_negative_n_yields_nothing(spark):
-    from transformers_spark.functions.udtfs import TopNTokens
-
-    # TopNTokens is an @udtf wrapper; .func is the underlying class
-    rows = list(TopNTokens.func().eval("a a b c", -1))
-    assert rows == []
-    assert len(list(TopNTokens.func().eval("a a b c", 2))) == 2

@@ -1,10 +1,12 @@
-"""External-table registration + property-based window-kernel tests."""
+"""External-table registration, the UDTF registry, and property-based
+window-kernel tests."""
 
 import csv
 from datetime import datetime, timedelta
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql.functions import udtf
 
 from transformers_spark.macros import render_macros
 from transformers_spark.windowing import CustomWindow, parse_duration, window_for
@@ -15,7 +17,6 @@ from transformers_spark.windowing import CustomWindow, parse_duration, window_fo
 
 def test_register_csv_external_table(spark, tmp_path):
     from transformers_spark.catalog import Catalog
-    from transformers_spark.sources.external import register_external_table
 
     path = tmp_path / "sheet.csv"
     with open(path, "w", newline="") as fh:
@@ -23,7 +24,7 @@ def test_register_csv_external_table(spark, tmp_path):
         w.writerow(["method", "accuracy"])
         w.writerows([["GET", "0.9"], ["POST", "0.7"], ["GET", "0.9"]])
     cat = Catalog(spark)
-    df = register_external_table(cat, "ext-proj.sheets.log", str(path), fmt="csv")
+    df = cat.register_external_table("ext-proj.sheets.log", str(path), fmt="csv")
     assert df.count() == 3
     # queryable through SQL under the mapped name, DISTINCT works
     assert spark.sql("SELECT DISTINCT method FROM ext_proj_sheets.log").count() == 2
@@ -97,13 +98,63 @@ def test_window_days_cover_exactly(start, days):
     assert all((b - a) == timedelta(days=1) for a, b in zip(day_list, day_list[1:]))
 
 
+# --- UDTF registry -------------------------------------------------------
+#
+# BigQuery ``CREATE TEMP TABLE FUNCTION`` bodies are not portable: the
+# engine maps the function NAME to a Python UDTF class passed as
+# Engine(udtf_registry=...). These two sample classes exercise that
+# registry.
+
+
+@udtf(returnType="word string, pos int")
+class SplitToWords:
+    """Explode a string into (word, position) rows."""
+
+    def eval(self, text: str | None, delim: str = " "):
+        if text is None:
+            return
+        pos = 0
+        for token in text.split(delim):
+            if token:
+                yield token, pos
+                pos += 1
+
+
+@udtf(returnType="token string, n_occurrences int")
+class TopNTokens:
+    """Most frequent whitespace tokens of a string, ties broken
+    alphabetically."""
+
+    def eval(self, text: str | None, n: int = 3):
+        if text is None:
+            return
+        counts: dict[str, int] = {}
+        for token in text.split():
+            counts[token] = counts.get(token, 0) + 1
+        ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        # clamp at 0: a negative n would slice from the END
+        # (ranked[:-2] = everything but the two rarest) instead of
+        # yielding nothing
+        for token, count in ranked[: max(0, n or 0)]:
+            yield token, count
+
+
+UDTF_REGISTRY = {"splitToWords": SplitToWords, "topNTokens": TopNTokens}
+
+
+def test_topn_tokens_negative_n_yields_nothing():
+    # TopNTokens is an @udtf wrapper; .func is the underlying class
+    rows = list(TopNTokens.func().eval("a a b c", -1))
+    assert rows == []
+    assert len(list(TopNTokens.func().eval("a a b c", 2))) == 2
+
+
 def test_udtf_registry_script(spark):
     """CREATE TEMP TABLE FUNCTION maps to a registered pyspark UDTF,
     callable in the FROM clause of the script body."""
     from transformers_spark.engine import Engine
-    from transformers_spark.functions.udtfs import DEFAULT_UDTF_REGISTRY
 
-    eng = Engine(spark, udtf_registry=DEFAULT_UDTF_REGISTRY)
+    eng = Engine(spark, udtf_registry=UDTF_REGISTRY)
     script = """
 CREATE TEMP TABLE FUNCTION splitToWords(t STRING, d STRING)
 RETURNS TABLE<word STRING, pos INT64> AS (SELECT 1);
@@ -129,9 +180,8 @@ def test_udtf_unregistered_name_raises(spark):
 def test_udtf_lateral_join(spark):
     """UDTF over a column via LATERAL — the per-row explode shape."""
     from transformers_spark.engine import Engine
-    from transformers_spark.functions.udtfs import DEFAULT_UDTF_REGISTRY
 
-    eng = Engine(spark, udtf_registry=DEFAULT_UDTF_REGISTRY)
+    eng = Engine(spark, udtf_registry=UDTF_REGISTRY)
     eng.run_script(
         "CREATE TEMP TABLE FUNCTION topNTokens(t STRING, n INT64) AS (SELECT 1);\nSELECT 1;"
     )

@@ -1,10 +1,12 @@
-"""The gate layer in tools/: the compare loop every oracle gate shares
-(``gatelib.compare_queries``) and the mutation-wave runner
-(``run_gates.py``) must keep importing and keep telling green from red."""
+"""The gate layer in tools/: the compare loop every oracle wave shares
+(``gatelib.compare_queries``) and the one gate runner (``run_gates.py``)
+must keep importing and keep telling green from red."""
 
 import importlib.util
 import os
 import sys
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = os.path.join(REPO, "tools")
@@ -47,10 +49,27 @@ def _run_gates(monkeypatch):
 
 def test_run_gates_imports_and_lists_its_waves(monkeypatch):
     run_gates = _run_gates(monkeypatch)
-    assert [w["label"] for w in run_gates.mutation_waves()] == [
-        "null-w1", "null-w2", "null-w3", "null-all", "degentext",
+    waves = run_gates.waves("/data/sf")
+    assert [w["label"] for w in waves] == [
+        "canon", "null-w1", "null-w2", "null-w3", "null-all", "degentext",
         "badjson", "unicode", "extreme", "duprows", "dupnulls", "skew",
     ]
+    # the canon wave checks the base data as it is: nothing to build
+    assert waves[0]["dst"] == "/data/sf" and waves[0]["build"] is None
+
+
+def test_query_filter_narrows_before_first_slices(monkeypatch):
+    """--queries narrows BEFORE --first slices: a named query outside
+    the first N must still run, never pass the name check and then be
+    silently dropped; an unknown name exits non-zero."""
+    run_gates = _run_gates(monkeypatch)
+    catalog = ["q1", "q2", "q3", "q4", "q5"]
+    assert run_gates.select_queries(catalog, "q5,q2", 1) == ["q2"]
+    assert run_gates.select_queries(catalog, "q5", 2) == ["q5"]
+    assert run_gates.select_queries(catalog, None, 3) == ["q1", "q2", "q3"]
+    assert run_gates.select_queries(catalog, None, None) == catalog
+    with pytest.raises(SystemExit, match="unknown queries"):
+        run_gates.select_queries(catalog, "q1,nosuch", None)
 
 
 def test_skew_wave_reds_a_guarded_query_over_its_bound(monkeypatch):

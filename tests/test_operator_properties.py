@@ -1,14 +1,28 @@
 """Property-based tests (hypothesis) for the newer operator kernels —
-driver-side rate math and the Morton-code layout, plus a bounded
-Spark-backed property for span dedup against a brute-force Python
-twin."""
+the temperature-sampling rate math against its Python reference, plus
+bounded Spark-backed properties for span dedup, the bigram LM and
+chunking against brute-force Python twins."""
 
 import math
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from transformers_spark.operators.curation import temperature_rates_bp
+
+def temperature_rates_bp(counts: dict, alpha: float, floor_bp: int = 1) -> dict:
+    """Python reference for ``curation.temperature_sample``'s in-plan
+    keep-rates, in basis points: ``floor(10000 * (min_count/count)^(1-alpha))``,
+    floored at ``floor_bp``. alpha=0.5 routes through ``math.sqrt``
+    (correctly rounded, so every engine computes the identical rate);
+    other alphas use ``pow``, which may differ in the last ulp."""
+    min_c = min(counts.values())
+    out = {}
+    for v, c in counts.items():
+        x = min_c / c
+        scaled = math.sqrt(x) if alpha == 0.5 else math.pow(x, 1.0 - alpha)
+        out[v] = max(int(floor_bp), int(math.floor(10000.0 * scaled)))
+    return out
+
 
 count_maps = st.dictionaries(
     st.text(alphabet="abcdefg", min_size=1, max_size=3),
@@ -54,31 +68,35 @@ def test_temperature_alpha_half_matches_sqrt_oracle(counts):
         assert rates[k] == max(1, int(math.floor(10000.0 * math.sqrt(mn / c))))
 
 
-def _interleave(q, bits, ncols, i):
-    return sum(((q >> b) & 1) << (b * ncols + i) for b in range(bits))
-
-
-def test_morton_code_is_bijective_on_the_grid(spark):
-    """Exhaustive on a small grid: the z-value must be a bijection of
-    (x, y) — any collision would merge distinct hyper-rectangles."""
-    from transformers_spark.sources.layout import zorder_value
-
-    import pyspark.sql.functions as F
-
-    bits = 4
-    df = spark.range(0, 256).select(
-        (F.col("id") % 16).alias("x"), (F.col("id") / 16).cast("long").alias("y")
+def test_temperature_sample_keeps_what_the_reference_rates_keep(spark):
+    """temperature_sample computes its rates in the plan; the kept set
+    must equal the rows whose salted bucket is below the Python
+    reference's rate for their stratum."""
+    from transformers_spark.operators.curation import (
+        _salted_bucket,
+        temperature_sample,
     )
-    zdf, zcol = zorder_value(df, ["x", "y"], bits=bits)
-    rows = zdf.collect()
-    zvals = [r[zcol] for r in rows]
-    assert len(set(zvals)) == 256
-    assert all(0 <= z < 256 for z in zvals)
-    # matches the reference interleave bit-for-bit
-    for r in rows:
-        assert r[zcol] == _interleave(r["x"], bits, 2, 0) | _interleave(
-            r["y"], bits, 2, 1
+
+    rows = (
+        [(i, "en") for i in range(300)]
+        + [(1000 + i, "de") for i in range(70)]
+        + [(2000 + i, "fr") for i in range(11)]
+    )
+    df = spark.createDataFrame(rows, "doc_id bigint, lang string")
+    counts = {"en": 300, "de": 70, "fr": 11}
+    bucket = {
+        r["doc_id"]: r["b"]
+        for r in df.select(
+            "doc_id", _salted_bucket("temp:", "doc_id").alias("b")
+        ).collect()
+    }
+    for alpha in (0.0, 0.5, 0.7):
+        rate = temperature_rates_bp(counts, alpha)
+        want = sorted(d for d, s in rows if bucket[d] < rate[s])
+        got = sorted(
+            r["doc_id"] for r in temperature_sample(df, "lang", alpha).collect()
         )
+        assert got == want, alpha
 
 
 @given(

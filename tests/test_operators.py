@@ -9,7 +9,6 @@ from transformers_spark.operators.dedup import exact_dedup_groups, minhash_signa
 from transformers_spark.operators.hashing import MERSENNE_P, h32, lcg_constants
 from transformers_spark.operators.multimodal import (
     DecoderUnavailable,
-    attach_media_metadata,
     decode_image_features,
     fake_image_decoder,
     frame_sample_plan,
@@ -84,17 +83,6 @@ def test_multimodal_real_decoder_stubbed(spark):
     with pytest.raises(Exception) as err:
         decode_image_features(df).collect()
     assert "DecoderUnavailable" in str(err.value) or "codecs" in str(err.value)
-
-
-def test_attach_media_metadata_jvm_side(spark):
-    df = spark.createDataFrame(
-        [("m1", bytearray(b"abc"))], "media_id string, payload binary"
-    )
-    row = attach_media_metadata(df).collect()[0]
-    assert row["n_bytes"] == 3
-    assert row["content_hash"] == hashlib.md5(b"abc").hexdigest()
-    # no python stage in the plan
-    assert "pythonUDF" not in attach_media_metadata(df)._jdf.queryExecution().toString().lower()
 
 
 def test_frame_sample_plan(spark):
@@ -569,9 +557,8 @@ def test_simhash_64bit_matches_python_reference(spark):
     driver-side md5 reference, incl. the two's-complement sign bit."""
     import hashlib as _hl
 
-    from transformers_spark.operators.dedup import SIMHASH_BITS, simhash_fingerprints
+    from transformers_spark.operators.dedup import simhash_fingerprints
 
-    assert SIMHASH_BITS == 64
     docs = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon"),
@@ -747,9 +734,20 @@ def test_bm25_excludes_self_and_ranks_shared_terms(spark):
     assert 4 not in ranked  # zero shared terms never scored
 
 
-def test_incremental_lsh_finds_known_duplicate(spark):
-    from transformers_spark.operators.dedup import incremental_lsh_matches
+def _incremental_matches(corpus, new):
+    """New-vs-corpus LSH matches at 16 permutations in 4 bands."""
+    from transformers_spark.operators.dedup import (
+        incremental_matches_from_buckets,
+        minhash_band_buckets,
+    )
 
+    return incremental_matches_from_buckets(
+        minhash_band_buckets(corpus, num_perm=16, bands=4),
+        minhash_band_buckets(new, num_perm=16, bands=4),
+    )
+
+
+def test_incremental_lsh_finds_known_duplicate(spark):
     corpus = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
          (2, "completely different content about spark plans")],
@@ -760,7 +758,7 @@ def test_incremental_lsh_finds_known_duplicate(spark):
          (101, "nothing like anything in the index whatsoever zzz")],
         ["doc_id", "text"],
     )
-    out = {r["new_doc"]: r for r in incremental_lsh_matches(corpus, new, num_perm=16, bands=4).collect()}
+    out = {r["new_doc"]: r for r in _incremental_matches(corpus, new).collect()}
     assert out[100]["corpus_doc"] == 1 and out[100]["matching_bands"] == 4
     assert 101 not in out  # no spurious match
 
@@ -906,13 +904,12 @@ def test_bm25_ignores_termless_docs_in_idf(spark):
     assert len(out) == 1 and out[0]["doc_id"] == 2
 
 
-def test_token_budget_rejects_fractional_weights():
-    import pytest
+def test_token_budget_rejects_fractional_weights(spark):
+    from transformers_spark.operators.curation import token_budget_sample
 
-    from transformers_spark.operators.curation import token_budget_rates_bp
-
-    with pytest.raises(ValueError):
-        token_budget_rates_bp({"a": 100}, {"a": 0.6}, 50)
+    df = spark.createDataFrame([(1, "a", 100)], ["doc_id", "src", "n_tokens"])
+    with pytest.raises(ValueError, match="positive integer"):
+        token_budget_sample(df, "src", {"a": 0.6}, 50)
 
 
 def test_bigram_lm_scores_typical_vs_rare(spark):
@@ -1110,15 +1107,14 @@ def test_token_budget_rates_exact_beyond_int64(spark):
     assert got == want
 
 
-def test_token_budget_rejects_nonpositive_weights():
-    import pytest as _pytest
+def test_token_budget_rejects_nonpositive_weights(spark):
+    from transformers_spark.operators.curation import token_budget_sample
 
-    from transformers_spark.operators.curation import token_budget_rates_bp
-
-    with _pytest.raises(ValueError, match="positive integer"):
-        token_budget_rates_bp({"a": 100}, {"a": 3, "b": -3}, 1000)
-    with _pytest.raises(ValueError, match="positive integer"):
-        token_budget_rates_bp({"a": 100}, {"a": 0}, 1000)
+    df = spark.createDataFrame([(1, "a", 100)], ["doc_id", "src", "n_tokens"])
+    with pytest.raises(ValueError, match="positive integer"):
+        token_budget_sample(df, "src", {"a": 3, "b": -3}, 1000)
+    with pytest.raises(ValueError, match="positive integer"):
+        token_budget_sample(df, "src", {"a": 0}, 1000)
 
 
 def test_pack_sequences_rejects_nonpositive_seq_len(spark):
@@ -1531,19 +1527,15 @@ def test_ngram_jaccard_duplicate_rows_dont_inflate(spark):
 def test_incremental_matches_duplicate_rows_dont_inflate(spark):
     """countDistinct(band) keeps matching_bands stable under duplicate
     rows on either index side (ORACLES.md #15)."""
-    from transformers_spark.operators.dedup import incremental_lsh_matches
-
     corpus_rows = [(1, "alpha beta gamma delta epsilon")]
     new_rows = [(10, "alpha beta gamma delta epsilon")]
-    clean = incremental_lsh_matches(
+    clean = _incremental_matches(
         spark.createDataFrame(corpus_rows, ["doc_id", "text"]),
         spark.createDataFrame(new_rows, ["doc_id", "text"]),
-        num_perm=16, bands=4,
     ).collect()
-    dirty = incremental_lsh_matches(
+    dirty = _incremental_matches(
         spark.createDataFrame(corpus_rows * 2, ["doc_id", "text"]),
         spark.createDataFrame(new_rows * 2, ["doc_id", "text"]),
-        num_perm=16, bands=4,
     ).collect()
     assert {(r["new_doc"], r["corpus_doc"], r["matching_bands"]) for r in clean} \
         == {(r["new_doc"], r["corpus_doc"], r["matching_bands"]) for r in dirty}

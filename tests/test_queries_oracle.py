@@ -2,17 +2,31 @@
 query in Spark AND its DuckDB oracle on the same parquet tables, then
 compare row count, column names, and order-insensitive values."""
 
+import re
+
 import pytest
 
 from transformers_spark.canon import (
-    HAZARD_DUCK_TYPE_RE as _HAZARD_DUCK_TYPE_RE,
-    SPARK_HAZARD_TYPE_NAMES,
     duckdb_connect_views as _duckdb_con,
     normalize_rows as _normalize,
     pandas_canon as _pandas_canon,
 )
 from transformers_spark.queries import QUERIES
 from transformers_spark.queries import oracle_for as _oracle_for
+
+# DuckDB output types whose pandas conversion diverges from Spark's
+# (HUGEINT -> float64 vs bigint; arrays/structs -> unhashable cells;
+# unsigned/decimal -> lossy or object) — every oracle must cast these
+# away or the driver's pandas canon will mismatch/crash.
+_HAZARD_DUCK_TYPE_RE = re.compile(
+    r"HUGEINT|UHUGEINT|UTINYINT|USMALLINT|UINTEGER|UBIGINT"
+    r"|\[\d*\]|STRUCT|MAP\(|UNION\(|DECIMAL",
+    re.IGNORECASE,
+)
+
+# Spark-side output types the driver canon crashes on (arrays) or
+# coerces lossily (decimal -> object vs DuckDB's float64).
+SPARK_HAZARD_TYPE_NAMES = ("array", "struct", "map", "decimal")
 
 
 @pytest.mark.parametrize("name", [n for n, s in QUERIES.items() if s.oracle])

@@ -1,11 +1,11 @@
 """Shared dual-engine compare loop for the oracle gates.
 
-Every gate runs the same check: run each catalog query on BOTH engines
-over one dataset and demand equality. ``local_gate.py`` runs it over
-the driver's scale factor; ``run_gates.py`` builds mutated copies of
-sf0.001 (null waves, degenerate text, malformed JSON, unicode, extreme
-values, empty-input, duplicate-row, adversarial-skew) and runs it over
-each. This module holds the one loop they all share so a fix lands
+Every wave runs the same check: run each catalog query on BOTH engines
+over one dataset and demand equality. ``run_gates.py`` runs it over the
+base data (the ``canon`` wave) and over mutated copies of
+sf0.001 it builds (null waves, degenerate text, malformed JSON,
+unicode, extreme values, empty-input, duplicate-row, adversarial-skew).
+This module holds the one loop they all share so a fix lands
 everywhere at once.
 
 A loud ERROR can be a contract (operators like ntiles_wide reject

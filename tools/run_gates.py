@@ -1,37 +1,36 @@
 #!/usr/bin/env python
-"""ONE gate runner, ONE denominator (round-6 verdict ask 3).
+"""The one oracle-gate runner: every wave, one denominator.
 
-Round 6 left robustness coverage split across per-wave artifacts with
-different denominators (the duplicate-row and skew waves at 163
-queries, the 5 late additions covered only by a separate replay) —
-one catalog append away from a silent hole. This runner kills that drift
-class structurally:
+Each wave runs every catalog query on Spark and its DuckDB oracle over
+one dataset through ``gatelib.compare_queries``:
 
-* it reads the CURRENT catalog from ``__spark_entry__.queries()``
-  every run — a catalog append is automatically in-denominator;
-* it REBUILDS every wave dataset from the builders (so a builder fix,
-  e.g. the round-7 vertical-tab probe in the degenerate-text wave, is
-  always in the data);
-* it emits ONE ``--json`` artifact where every mutation-wave row has
-  ``n_checked == n_catalog``, and the per-table empty scenarios list
-  their skips EXPLICITLY (``n_checked + n_skipped == n_catalog``,
-  skipped = query's oracle never reads the emptied table, so its
-  result is definitionally identical to the base-data gate).
+* ``canon`` — the base-data dual-canon pass over ``--sf-dir`` (default
+  sf0.01, the correctness scale), in ``__spark_entry__`` cohort
+  order. Its row lists every query's checks, its row counts,
+  ``in_driver_sample`` (one of the first 50 ``queries()`` entries, the
+  sample the correctness run checks) and ``err`` (the traceback), so it
+  diffs against ``CORRECTNESS_r{N}.json``;
+* mutated copies of sf0.001 rebuilt from the builders in ``null_gate``,
+  ``skew_gate`` and ``empty_gate`` on every run (null waves, degenerate
+  text, malformed JSON, unicode, extreme values, duplicate rows,
+  adversarial skew), so a builder fix is always in the data;
+* empty-input scenarios: all tables empty, then one table at a time
+  over the queries whose oracle reads it, with the skips listed
+  (``n_checked + n_skipped == n_catalog``).
 
-    python tools/run_gates.py --json /tmp/gates.json
+The catalog comes from ``__spark_entry__.queries()`` on every run, so a
+catalog append is in the denominator automatically.
+
+    python tools/run_gates.py --json /tmp/gates.json                 # every wave
+    python tools/run_gates.py --waves canon --first 50 --json /tmp/c.json
     python tools/run_gates.py --waves duprows,skew --json /tmp/g.json
     python tools/run_gates.py --queries q1,q2 --json /tmp/newq.json
 
-The ``--queries`` restriction is the newq-replay mode (mid-round
-catalog append coverage without 168 x 12 compares); the artifact then
-records ``restricted: true`` so it can never be mistaken for the
-full-denominator round artifact.
-
-The wave datasets come from the builders in ``null_gate``,
-``skew_gate`` and ``empty_gate``; every wave runs through
-``gatelib.compare_queries``. The skew wave also records the seconds of
-the two queries its injections target and reds either one slower than
-``SKEW_BOUND_S`` (60 s).
+``--queries`` narrows the catalog before ``--first`` slices it; either
+marks the artifact ``restricted: true`` so it can never be mistaken for
+the full-denominator artifact. The skew wave also records the seconds
+of the two queries its injections target and reds either one slower
+than ``SKEW_BOUND_S`` (60 s).
 """
 
 from __future__ import annotations
@@ -52,6 +51,10 @@ import null_gate
 import skew_gate
 
 TABLES = empty_gate.TABLES
+# the correctness scale, beside the sf0.001 the waves mutate
+DEFAULT_SF_DIR = os.path.join(os.path.dirname(empty_gate.SRC), "sf0.01")
+# the correctness run checks the first N queries() entries
+CORRECTNESS_SAMPLE = 50
 
 # The skew wave must keep the two queries its injections target bounded,
 # not only green: a guarded query slower than this on the skewed data
@@ -72,7 +75,27 @@ def _w(label, dst, builder):
     return {"label": label, "dst": dst, "build": builder}
 
 
-def mutation_waves() -> list[dict]:
+def select_queries(catalog: list[str], queries: str | None,
+                   first: int | None) -> list[str]:
+    """The queries a run checks, in catalog (cohort) order. ``queries``
+    (comma-separated) narrows BEFORE ``first`` slices: otherwise a query
+    named in ``queries`` but outside the first N would pass the
+    unknown-name check yet be silently dropped. An unknown name exits
+    non-zero."""
+    names = catalog
+    if queries:
+        keep = set(queries.split(","))
+        unknown = sorted(keep - set(catalog))
+        if unknown:
+            sys.exit(f"unknown queries: {unknown}")
+        names = [n for n in catalog if n in keep]
+    return names[:first] if first else names
+
+
+def waves(sf_dir: str) -> list[dict]:
+    """Every dataset wave in run order: the base-data canon pass, then
+    the mutated copies of sf0.001 (the empty-input scenarios follow in
+    ``main``)."""
     ng = null_gate
     w1 = ng.INJECT
     w2 = _null_inject(ng.INJECT, ng.INJECT_WAVE2)
@@ -80,6 +103,7 @@ def mutation_waves() -> list[dict]:
     wall = _null_inject(ng.INJECT, ng.INJECT_WAVE2, ng.INJECT_WAVE3)
     nulldir = scratch.scratch_path("nulldata_sf0.001")
     return [
+        _w("canon", sf_dir, None),
         _w("null-w1", nulldir,
            lambda d: ng.build_nulldata(w1, d)),
         _w("null-w2", nulldir + "-w2",
@@ -127,29 +151,29 @@ def main() -> None:
     ap.add_argument("--json", required=True)
     ap.add_argument("--waves", default=None,
                     help="comma-separated wave labels to restrict to "
-                         "(mutation labels, 'all-empty', 'empty:<table>')")
+                         "('canon', mutation labels, 'all-empty', "
+                         "'empty:<table>')")
     ap.add_argument("--queries", default=None,
-                    help="comma-separated query names (newq-replay mode; "
-                         "artifact is marked restricted)")
+                    help="comma-separated query names to check "
+                         "(artifact is marked restricted)")
+    ap.add_argument("--first", type=int, default=None,
+                    help="check only the first N cohort entries, after "
+                         "--queries narrows (the correctness sample: 50)")
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR,
+                    help="base data of the canon wave")
     ap.add_argument("--skip-build", action="store_true",
                     help="reuse existing scratch wave datasets")
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
-    from gatelib import compare_queries, summarize
+    from gatelib import CHECKS, compare_queries, summarize
 
     from transformers_spark.session import get_spark
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     catalog = list(qs)
-    names = catalog
-    if args.queries:
-        keep = args.queries.split(",")
-        missing = [q for q in keep if q not in qs]
-        if missing:
-            sys.exit(f"unknown queries: {missing}")
-        names = keep
+    names = select_queries(catalog, args.queries, args.first)
     reads = {n: empty_gate.oracle_tables(oracles.get(n, ""))
              for n in catalog}
 
@@ -169,16 +193,28 @@ def main() -> None:
         print(f"  {label}: {row['n_green']}/{row['n_checked']}"
               + (f"  RED: {bad}" if bad else ""), file=sys.stderr)
 
-    for wave in mutation_waves():
+    sample = set(catalog[:CORRECTNESS_SAMPLE])
+    for wave in waves(args.sf_dir):
         label, dst = wave["label"], wave["dst"]
         if want and label not in want:
             continue
-        if not args.skip_build or not os.path.isdir(dst):
+        if wave["build"] and (not args.skip_build or not os.path.isdir(dst)):
             wave["build"](dst)
         print(f"=== wave {label} ({len(names)} queries) ===",
               file=sys.stderr)
         results = compare_queries(spark, qs, names, dst)
         row = {"data": dst, **summarize(results)}
+        if label == "canon":
+            row["queries"] = {
+                name: {
+                    **{k: r[k] for k in CHECKS},
+                    "spark_rows": r["rows"],
+                    "oracle_rows": r["oracle_rows"],
+                    "in_driver_sample": name in sample,
+                    "err": r.get("traceback"),
+                }
+                for name, r in results.items()
+            }
         if label == "skew":
             row.update(skew_times(results))
             for n, t in row["guarded_secs"].items():
@@ -232,7 +268,7 @@ def main() -> None:
     summary = {
         "n_catalog": len(catalog),
         "n_queries_run": len(names),
-        "restricted": bool(args.queries),
+        "restricted": bool(args.queries or args.first),
         "waves": artifact,
         "all_green_full_denominator": ok,
     }

@@ -12,36 +12,20 @@ disagree (round-3 lesson):
   int-vs-float dtype drift fail here exactly as they fail the driver's
   value hash.
 
-Shared by ``tests/test_queries_oracle.py`` and ``tools/local_gate.py``
-so the local artifact and the test gate can never diverge again.
+Shared by ``tests/test_queries_oracle.py`` and the gate runner's
+compare loop (``tools/gatelib.py``, run by ``tools/run_gates.py``) so
+the local artifact and the test gate can never diverge again.
 """
 
 from __future__ import annotations
 
 import math
-import re
 
 __all__ = [
     "normalize_rows",
     "pandas_canon",
-    "HAZARD_DUCK_TYPE_RE",
-    "SPARK_HAZARD_TYPE_NAMES",
     "duckdb_connect_views",
 ]
-
-# DuckDB output types whose pandas conversion diverges from Spark's
-# (HUGEINT -> float64 vs bigint; arrays/structs -> unhashable cells;
-# unsigned/decimal -> lossy or object) — every oracle must cast these
-# away or the driver's pandas canon will mismatch/crash.
-HAZARD_DUCK_TYPE_RE = re.compile(
-    r"HUGEINT|UHUGEINT|UTINYINT|USMALLINT|UINTEGER|UBIGINT"
-    r"|\[\d*\]|STRUCT|MAP\(|UNION\(|DECIMAL",
-    re.IGNORECASE,
-)
-
-# Spark-side output types the driver canon crashes on (arrays) or
-# coerces lossily (decimal -> object vs DuckDB's float64).
-SPARK_HAZARD_TYPE_NAMES = ("array", "struct", "map", "decimal")
 
 
 def normalize_rows(rows, columns):

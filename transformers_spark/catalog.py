@@ -76,6 +76,12 @@ def _q(name: str) -> str:
     return ".".join(f"`{part}`" for part in name.split("."))
 
 
+def _sq(value: str) -> str:
+    """Single-quote a DDL option/location value, escaping embedded
+    quotes (a path like /data/o'brien must not break the statement)."""
+    return "'" + str(value).replace("'", "\\'") + "'"
+
+
 # Transient-failure signatures for catalog/DDL calls: metastore and
 # object-store hiccups that a bounded retry heals. Analysis errors
 # (missing table, bad SQL) never match — they must fail immediately.
@@ -347,6 +353,52 @@ class Catalog:
 
     def drop_view(self, fqn: str) -> None:
         self._run_ddl(f"DROP VIEW IF EXISTS {_q(self.spark_name(fqn))}")
+
+    def register_external_table(
+        self,
+        fqn: str,
+        path: str,
+        fmt: str = "csv",
+        schema_ddl: str | None = None,
+        options: dict[str, str] | None = None,
+    ) -> DataFrame:
+        """File-backed external table at ``project.dataset.table`` — the
+        analogue of the reference's Google-Sheet-backed federated tables
+        (reference: samples/tasks/select/federated_table/). Queries
+        address it like a managed table. ``CREATE TABLE ... USING <fmt>
+        LOCATION`` makes an unmanaged entry: DROP removes metadata only,
+        never the files."""
+        if fmt not in ("csv", "json", "parquet"):
+            raise ValueError(f"unsupported external format {fmt!r}")
+        name = self.spark_name(fqn)
+        self._run_ddl(f"CREATE DATABASE IF NOT EXISTS `{name.split('.')[0]}`")
+        opts = dict(options or {})
+        if fmt == "csv":
+            opts.setdefault("header", "true")
+        if schema_ddl is None and fmt in ("csv", "json"):
+            # infer once driver-side, then pin the schema in the DDL so
+            # the table definition is stable across sessions; backticked
+            # names survive spaces, colons and hyphens
+            schema = (
+                self.spark.read.format(fmt)
+                .options(**opts, inferSchema=True)
+                .load(path)
+                .schema
+            )
+            schema_ddl = ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+            )
+        cols = f" ({schema_ddl})" if schema_ddl else ""
+        opts_ddl = (
+            " OPTIONS (" + ", ".join(f"{_sq(k)} = {_sq(v)}" for k, v in opts.items()) + ")"
+            if opts
+            else ""
+        )
+        self._run_ddl(
+            f"CREATE TABLE IF NOT EXISTS {_q(name)}{cols} USING {fmt}{opts_ddl} "
+            f"LOCATION {_sq(path)}"
+        )
+        return self.spark.table(name)
 
     def table_exists(self, fqn: str) -> bool:
         return self.spark.catalog.tableExists(self.spark_name(fqn))

@@ -87,9 +87,6 @@ def _find_balanced(text: str, start: int) -> int:
     raise ValueError("unbalanced parentheses in MERGE statement")
 
 
-_WHEN_SPLIT_RE = re.compile(r"\bWHEN\b", re.IGNORECASE)
-
-
 def _top_level_when_positions(text: str) -> list[int]:
     """Clause-boundary WHENs only: skip WHENs inside parens AND inside
     CASE...END expressions (a top-level ``SET x = CASE WHEN ...`` must

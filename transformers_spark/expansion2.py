@@ -68,9 +68,6 @@ HASH_SPACE = 1 << 32
 # 50M pairs would land on a single task). Enforced identically in the
 # oracle; TPC-H baskets max out at 7, so real data is never excluded.
 BASKET_CAP = 256
-# First-N path mining keeps only this many events per (user, day)
-# before any collect — WindowGroupLimit bounds the shuffle.
-PATH_STEPS = 3
 
 
 # ---------------------------------------------------------------------------

@@ -552,14 +552,6 @@ FROM classes c LEFT JOIN agg a ON c.cls = a.cls
 # 6. curation_yield_report
 # ---------------------------------------------------------------------------
 
-YIELD_STAGES = (
-    (1, "raw"),
-    (2, "after_exact_dedup"),
-    (3, "after_quality_filter"),
-    (4, "after_source_cap"),
-)
-
-
 def q_curation_yield_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset-yield funnel: docs and tokens surviving each curation
     stage — raw, exact-dedup keep-first (MIN doc_id per fingerprint),

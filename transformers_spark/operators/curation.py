@@ -28,8 +28,6 @@ none present in the reference (its surface is delegated SQL —
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -62,12 +60,10 @@ def _rate_expr(strata_col: str, rates_bp: dict, default_rate_bp: int = 0) -> Col
 
 __all__ = [
     "gram_hash60",
-    "temperature_rates_bp",
     "contamination_report",
     "cap_per_group",
     "stratified_sample",
     "temperature_sample",
-    "token_budget_rates_bp",
     "token_budget_sample",
     "pack_sequences",
     "dsir_weights",
@@ -322,25 +318,6 @@ def stratified_sample(
     return df.withColumn(kept_col, bucket).filter(F.col(kept_col) < rate)
 
 
-def temperature_rates_bp(
-    counts: dict, alpha: float, floor_bp: int = 1
-) -> dict:
-    """Per-stratum keep-rates in basis points for temperature
-    sampling: ``floor(10000 * (min_count/count)^(1-alpha))``, floored
-    at ``floor_bp``. alpha=0.5 routes through ``math.sqrt`` (correctly
-    rounded by IEEE-754, so ANY engine computes the identical rate);
-    other alphas use ``pow``, which may differ in the last ulp across
-    libm implementations — at worst a 1-bp rate step at the floor
-    boundary."""
-    min_c = min(counts.values())
-    out = {}
-    for v, c in counts.items():
-        x = min_c / c
-        scaled = math.sqrt(x) if alpha == 0.5 else math.pow(x, 1.0 - alpha)
-        out[v] = max(int(floor_bp), int(math.floor(10000.0 * scaled)))
-    return out
-
-
 def temperature_sample(
     df: DataFrame,
     strata_col: str = "source",
@@ -375,11 +352,8 @@ def temperature_sample(
     # broadcast join) rather than driver-collected into a when-chain:
     # the collect was a whole extra Spark action per call — a full
     # count pass barrier at any scale (r13, VERDICT r12 ask 1). The
-    # arithmetic is the same as temperature_rates_bp term for term —
-    # int/int true division == double division, java/libm sqrt and
-    # pow are the same correctly-rounded (sqrt) / last-ulp (pow)
-    # story as the Python originals, and the DuckDB oracle already
-    # computes these rates in SQL.
+    # DuckDB oracle computes the same rates in SQL; java sqrt is
+    # correctly rounded, pow may differ in the last ulp.
     counts = (
         df.filter(F.col(strata_col).isNotNull())
         .groupBy(strata_col)
@@ -405,40 +379,6 @@ def temperature_sample(
     )
 
 
-def token_budget_rates_bp(
-    token_counts: dict, weights: dict, total_budget: int
-) -> dict:
-    """Per-stratum keep-rates (basis points) to hit a TOKEN budget with
-    target mix ``weights``: stratum s receives budget
-    ``total_budget * w_s / sum(w)`` tokens and keeps
-    ``min(10000, (10000 * budget_s) // tokens_s)`` — ALL integer
-    arithmetic, so any engine computes identical rates (no float
-    drift at the floor boundary). A stratum with fewer tokens than its
-    budget keeps everything; the shortfall is reported by
-    :func:`token_budget_sample`'s summary columns rather than silently
-    re-allocated (re-allocation policy is a caller decision)."""
-    for s, w in weights.items():
-        if not isinstance(w, int) or isinstance(w, bool) or w <= 0:
-            # int(0.6) would silently become 0 and zero the stratum;
-            # a negative weight would corrupt sum_w (zeroing or
-            # sign-flipping every OTHER stratum's rate); integer
-            # ratios are also what keeps the rate arithmetic
-            # engine-exact (express 0.6/0.4 as 3/2)
-            raise ValueError(
-                f"mix weight for {s!r} must be a positive integer ratio, "
-                f"got {w!r} — express fractional mixes as integer ratios"
-            )
-    sum_w = sum(weights.values())
-    out = {}
-    for s, tok in token_counts.items():
-        w = weights.get(s, 0)
-        if tok <= 0 or w <= 0:
-            out[s] = 0
-            continue
-        out[s] = min(10000, (10000 * int(total_budget) * w) // (sum_w * int(tok)))
-    return out
-
-
 def token_budget_sample(
     df: DataFrame,
     strata_col: str,
@@ -457,13 +397,15 @@ def token_budget_sample(
     Expected kept tokens per stratum ≈ its budget; exactness is
     statistical (documents are atomic — a pipeline needing exact token
     counts packs/truncates downstream)."""
-    # validate weights exactly like token_budget_rates_bp (the rates
-    # themselves are computed IN-PLAN below — the per-stratum SUM used
+    # the rates are computed IN-PLAN below — the per-stratum SUM used
     # to be driver-collected, one extra action/barrier per call; the
-    # integer arithmetic is identical and the DuckDB oracle already
-    # expresses it in SQL)
+    # DuckDB oracle expresses the same integer arithmetic in SQL
     for s, w in weights.items():
         if not isinstance(w, int) or isinstance(w, bool) or w <= 0:
+            # int(0.6) would silently become 0 and zero the stratum;
+            # a negative weight would corrupt sum_w (zeroing or
+            # sign-flipping every OTHER stratum's rate); integer
+            # ratios keep the rate arithmetic engine-exact
             raise ValueError(
                 f"mix weight for {s!r} must be a positive integer ratio, "
                 f"got {w!r} — express fractional mixes as integer ratios"

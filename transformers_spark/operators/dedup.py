@@ -38,7 +38,6 @@ __all__ = [
     "minhash_signatures",
     "minhash_lsh_pairs",
     "lsh_pairs_from_buckets",
-    "incremental_lsh_matches",
     "minhash_band_buckets",
     "incremental_matches_from_buckets",
     "write_lsh_index",
@@ -83,12 +82,6 @@ PRODUCTION_NUM_PERM = 128
 PRODUCTION_BANDS = 16
 DEFAULT_NUM_PERM = PRODUCTION_NUM_PERM
 DEFAULT_BANDS = PRODUCTION_BANDS
-
-# 64-bit simhash is the corpus-scale standard: 32-bit fingerprints
-# saturate Hamming buckets past ~10^5 docs (random collisions at
-# distance ≤3 swamp true near-dups), 64-bit keeps the expected random
-# collision rate negligible at 10^9+ docs.
-SIMHASH_BITS = 64
 
 
 def exact_dedup_groups(
@@ -174,7 +167,7 @@ def _band_buckets(
 ) -> DataFrame:
     """(doc, band, bucket) rows from a signature frame — the shared
     banding step of the self-join (:func:`minhash_lsh_pairs`) and
-    incremental (:func:`incremental_lsh_matches`) LSH paths."""
+    incremental (:func:`incremental_matches_from_buckets`) LSH paths."""
 
     def bucket(band: int) -> str:
         members = ", ".join(
@@ -477,45 +470,6 @@ def simhash_fingerprints(
     )
 
 
-def incremental_lsh_matches(
-    corpus: DataFrame,
-    new: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 2,
-    min_bands: int = 1,
-    hasher: str = "portable",
-) -> DataFrame:
-    """Incremental near-dup check: (new_doc, corpus_doc,
-    matching_bands) for every new document that shares at least
-    ``min_bands`` LSH bands with an already-indexed corpus document —
-    the production dedup shape, where each crawl increment is checked
-    against the standing index instead of re-pairing the whole corpus.
-
-    Plan shape: both sides get map-only signatures + band buckets; the
-    join is corpus-buckets ⋈ broadcast(new-buckets) ON (band, bucket).
-    The NEW side is broadcast — an increment is orders of magnitude
-    smaller than the index, so the 100 TB corpus bucket table streams
-    through map tasks with no shuffle at all. The hint is HARD (AQE
-    does not demote explicit broadcasts): for a probe batch comparable
-    to the corpus, call :func:`incremental_matches_from_buckets` with
-    ``broadcast_new=False`` instead. One aggregate
-    counts agreeing bands per (new, corpus) pair. In a real deployment
-    the corpus band table is computed once and persisted (it is pure
-    column math, so appending an increment to the index is the same
-    map-only signature pass).
-    """
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
-    return incremental_matches_from_buckets(
-        minhash_band_buckets(corpus, text_col, id_col, num_perm, bands, shingle_n, hasher),
-        minhash_band_buckets(new, text_col, id_col, num_perm, bands, shingle_n, hasher),
-        min_bands,
-    )
-
-
 def minhash_band_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -545,9 +499,13 @@ def incremental_matches_from_buckets(
     min_bands: int = 1,
     broadcast_new: bool = True,
 ) -> DataFrame:
-    """Bucket-level half of :func:`incremental_lsh_matches`, for when
-    the band-bucket tables already exist (one shared computation or a
-    persisted index). ``broadcast_new`` is a HARD hint (AQE never
+    """Incremental near-dup check: (new_doc, corpus_doc,
+    matching_bands) for every new document that shares at least
+    ``min_bands`` LSH bands with an indexed corpus document, from the
+    two sides' band-bucket tables (:func:`minhash_band_buckets`, one
+    shared computation or a persisted index). The NEW side is
+    broadcast, so the corpus bucket table streams through map tasks
+    with no shuffle. ``broadcast_new`` is a HARD hint (AQE never
     demotes an explicit broadcast): right for the common case of an
     increment orders of magnitude smaller than the corpus, but a
     probe batch comparable to the index would fail the broadcast
@@ -583,10 +541,11 @@ def write_lsh_index(
     mode: str = "overwrite",
 ) -> None:
     """Persist the corpus's band-bucket table as the STANDING LSH
-    index — the deployment shape :func:`incremental_lsh_matches`
-    documents: build once over the 100 TB corpus, then every new-batch
-    probe reads it in place (the probe is a broadcast join, so no sort
-    or clustering of the index buys anything). The width parameters
+    index — the deployment shape of
+    :func:`incremental_matches_from_buckets`: build once over the 100 TB
+    corpus, then every new-batch probe reads it in place (the probe is
+    a broadcast join, so no sort or clustering of the index buys
+    anything). The width parameters
     are recorded as table properties so :func:`probe_lsh_index` can
     reject a mismatched probe instead of silently joining
     incompatible bucket hashes. ``mode="append"`` validates the new

@@ -32,12 +32,10 @@ from pyspark.sql.types import (
 )
 
 __all__ = [
-    "MEDIA_SCHEMA",
     "IMAGE_FEATURES_SCHEMA",
     "AUDIO_FEATURES_SCHEMA",
     "RESIZED_SCHEMA",
     "DecoderUnavailable",
-    "attach_media_metadata",
     "decode_image_features",
     "decode_audio_features",
     "resize_images",
@@ -52,15 +50,6 @@ class DecoderUnavailable(NotImplementedError):
     """Raised when a real media codec is required but not installed."""
 
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("modality", StringType(), False),  # image | audio | video
-        StructField("mime_type", StringType(), True),
-        StructField("payload", BinaryType(), True),
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = StructType(
     [
         StructField("media_id", StringType(), False),
@@ -70,14 +59,6 @@ IMAGE_FEATURES_SCHEMA = StructType(
         StructField("content_hash", StringType(), True),
     ]
 )
-
-
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """JVM-side metadata that needs no decode: byte size + content hash
-    (cheap pre-dedup of identical blobs before any Python runs)."""
-    return df.withColumn("n_bytes", F.length(F.col(payload_col))).withColumn(
-        "content_hash", F.md5(F.col(payload_col))
-    )
 
 
 def fake_image_decoder(payload: bytes) -> tuple[int, int]:
@@ -121,8 +102,8 @@ def decode_image_features(
         for batch in batches:
             # NULL payloads never reach the decoder (a production PIL
             # decoder would crash on None) — same shield as the audio
-            # path; NULL hashes to None, matching attach_media_metadata's
-            # JVM md5(NULL) = NULL so dedup-by-hash groups agree
+            # path; NULL hashes to None, matching the JVM's md5(NULL)
+            # = NULL so dedup-by-hash groups agree
             dims = batch[payload_col].map(
                 lambda b: (0, 0) if b is None else decode(bytes(b))
             )

@@ -31,7 +31,7 @@ from .dedup import (
     ngram_jaccard_pairs,
     simhash_fingerprints,
 )
-from .hashing import MERSENNE_P, duck_h32, lcg_constants, perm_hash_sql
+from .hashing import duck_h32, lcg_constants, perm_hash_sql
 from .multimodal import (
     decode_audio_features,
     decode_image_features,
@@ -933,8 +933,7 @@ def _multimodal_oracle(kind: str, docs_path: str = _MULTIMODAL_ORACLE_DOCS) -> "
         n_bytes = 0 if payload is None else len(payload)
         if kind == "image":
             w, h = fake_image_decoder(payload)
-            # NULL payload hashes to NULL on both engines (decode path
-            # and attach_media_metadata's JVM md5(NULL) agree)
+            # NULL payload hashes to NULL, as on the decode path
             chash = None if payload is None else hashlib.md5(payload).hexdigest()
             rows.append((media_id, w, h, n_bytes, chash))
         elif kind == "audio":

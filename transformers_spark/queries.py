@@ -585,8 +585,8 @@ _SF_DEPENDENT_ORACLE_KINDS = {
 
 def oracle_for(name: str, sf_dir: str) -> "str | None":
     """The oracle SQL for ``name``, regenerated for ``sf_dir`` when the
-    catalog literal is sf-bound (shared by the test gate and
-    ``tools/local_gate.py`` so neither can drift)."""
+    catalog literal is sf-bound (shared by the test gate and the
+    gate runner, ``tools/run_gates.py``, so neither can drift)."""
     kind = _SF_DEPENDENT_ORACLE_KINDS.get(name)
     if kind is not None:
         from .operators.specs import _multimodal_oracle
